@@ -149,10 +149,12 @@ class ExactlyOnceSink(spark: SparkSession, root: String) extends Serializable {
   private[helium] def writeBatch(df: DataFrame, table: String,
       key: Long): Unit = {
     val zkeys = if (zorderOn) ZorderKeys.get(table) else None
-    // The layout's min/max agg and the parquet write each consume the
-    // batch plan — for a live Pipeline that plan is the whole upstream
-    // chain including executor-side HTTP block fetches, so without a
-    // persist every commit tick would fetch its blocks twice.
+    // The layout's min/max agg, its range sample and the parquet write
+    // each consume the batch plan; this persist makes them share one
+    // evaluation of THIS table's plan. It is per table, so it never
+    // covered work two tables share: the follower's payload fetch feeds
+    // both rewards and transactions, and Follower.start persists those
+    // payloads once per batch for that reason.
     zkeys.foreach(_ => df.persist())
     try {
       val laid = zkeys match {

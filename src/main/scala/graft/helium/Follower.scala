@@ -39,11 +39,19 @@ object Follower {
   def parseBlocks(raw: DataFrame): DataFrame =
     raw.select(from_json(col("json"), blockSchema).as("b")).select("b.*")
 
-  /** Collect the distinct rewards_v2 stub hashes of a batch and fetch their
-    * payloads through the node — the S3 enrichment executed once per batch
-    * instead of once per row (the reference's N+1,
-    * src/block_processor.rs:58). Distributed: fetches happen per-partition
-    * on executors. */
+  /** Collect the distinct stub hashes of a batch (only rewards_v2 outside
+    * Full mode) and fetch their payloads through the node — the S3
+    * enrichment as one keyed fetch per batch instead of one RPC per row
+    * (the reference's N+1, src/block_processor.rs:58).
+    *
+    * The result is lazy: every action over it re-runs the node calls, so a
+    * caller with more than one consumer (the rewards and transactions
+    * writes of a Full-mode commit) must persist it once, as
+    * [[start]] does. Width: the hashes are hash-partitioned over the
+    * session's `defaultParallelism` before the per-partition fetch loop,
+    * so a batch's calls run on every core at once. An explicit partition
+    * count is not coalesced by AQE, which would otherwise fold the small
+    * `distinct` shuffle into one partition and serialize every call. */
   def fetchPayloads(spark: SparkSession, node: NodeClient,
       blocks: DataFrame, mode: EtlMode): DataFrame = {
     import org.apache.spark.sql.Row
@@ -51,7 +59,9 @@ object Follower {
     val hashes = (mode match {
       case EtlMode.Full => wanted
       case _ => Transforms.dispatchRewards(wanted)
-    }).select("hash").distinct()
+    }).select("hash")
+      .repartition(spark.sparkContext.defaultParallelism, col("hash"))
+      .distinct()
     val fetched = hashes.rdd.mapPartitions { it =>
       it.flatMap { r =>
         val h = r.getString(0)
@@ -91,17 +101,27 @@ object Follower {
         checkpoint.getOrElse(s"$root/_checkpoint"))
       .trigger(trigger)
       .foreachBatch { (raw: DataFrame, _: Long) =>
-        if (!raw.isEmpty) {
-          val blocks = parseBlocks(raw).cache()
-          try {
-            val payloads = fetchPayloads(spark, node, blocks, mode)
-            val out = Pipeline.run(mode, blocks, payloads, lists)
-            // partition key = batch content (max height), not the epoch id:
-            // stays idempotent across checkpoint resets (ExactlyOnceSink)
-            val maxH = blocks.agg(max(col("height"))).head().getLong(0)
-            sink.commit(out, maxH, st.first_block)
-          } finally blocks.unpersist()
-        }
+        val blocks = parseBlocks(raw).cache()
+        try {
+          // One pass over the cached blocks, with no shuffle, builds the
+          // cache and yields both emptiness and the partition key (batch
+          // content, not the epoch id: stays idempotent across checkpoint
+          // resets, ExactlyOnceSink). A SQL aggregate here would cost two
+          // more jobs: its exchange puts it under AQE, which materializes
+          // the cache in a job of its own.
+          val (n, maxH) = blocks.select(col("height")).rdd
+            .map(r => (1L, if (r.isNullAt(0)) Long.MinValue else r.getLong(0)))
+            .fold((0L, Long.MinValue))((a, b) => (a._1 + b._1, math.max(a._2, b._2)))
+          if (n > 0) {
+            require(maxH != Long.MinValue, s"batch of $n blocks carries no height")
+            // both sink writes read the payloads: fetch them once
+            val payloads = fetchPayloads(spark, node, blocks, mode).cache()
+            try {
+              val out = Pipeline.run(mode, blocks, payloads, lists)
+              sink.commit(out, maxH, st.first_block)
+            } finally payloads.unpersist()
+          }
+        } finally blocks.unpersist()
       }
       .start()
   }

@@ -16,10 +16,11 @@ import graft.helium.SparkSuite
   *     remain. Locally-checkpointed RDDs are exempt: checkpoint storage
   *     lives at the RDD layer and the ContextCleaner reclaims it on GC
   *     (Iterate.truncate and p01's lineage cut use it by design).
-  *  2. STATIC: every raw `.persist()` in the query/multimodal modules
+  *  2. STATIC: every raw `.persist()` or `.cache()` in the main sources
   *     must route through `Pinned.pin`, so a future query cannot
   *     reintroduce an untracked pin. Sites with their own try/finally
-  *     loan release (ExactlyOnceSink.writeBatch) are allowlisted.
+  *     loan release (ExactlyOnceSink.writeBatch, the follower's
+  *     per-batch blocks and payloads) are allowlisted.
   */
 class CacheLeakSpec extends SparkSuite {
 
@@ -49,7 +50,8 @@ class CacheLeakSpec extends SparkSuite {
     "or an allowlisted loan site") {
     val allowed = Set(
       "src/main/scala/graft/Pinned.scala",          // the registry itself
-      "src/main/scala/graft/helium/ExactlyOnceSink.scala" // try/finally loan
+      "src/main/scala/graft/helium/ExactlyOnceSink.scala", // try/finally loan
+      "src/main/scala/graft/helium/Follower.scala"         // try/finally loan
     )
     val root = Paths.get("src/main/scala")
     val offenders = Files.walk(root).iterator().asScala
@@ -57,7 +59,8 @@ class CacheLeakSpec extends SparkSuite {
       .filterNot(p => allowed(p.toString))
       .flatMap { p =>
         Files.readAllLines(p).asScala.zipWithIndex.collect {
-          case (line, i) if line.contains(".persist()") &&
+          case (line, i) if (line.contains(".persist()") ||
+              line.contains(".cache()")) &&
             !line.trim.startsWith("*") && !line.trim.startsWith("//") =>
             s"$p:${i + 1}: $line"
         }

@@ -2,9 +2,27 @@ package graft.helium
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryException
 
 import Model._
+
+/** A fixture node that records which Spark task made each payload call. */
+class TaskRecordingNode(dir: String) extends FixtureNode(dir) {
+  override def getTxnJson(hash: String): Option[String] = {
+    Option(TaskContext.get()).foreach(t =>
+      TaskRecordingNode.tasks.add(t.taskAttemptId()))
+    super.getTxnJson(hash)
+  }
+}
+
+object TaskRecordingNode {
+  val tasks: java.util.Set[java.lang.Long] =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[java.lang.Long]()
+}
 
 /** Streaming semantics (SURVEY §5.5): resume-from-cursor after restart,
   * strict height coverage, exactly-once via idempotent batch partitions. */
@@ -626,6 +644,48 @@ class FollowerStreamSpec extends SparkSuite {
       f"pipeline too slow: $blocksPerSec%.2f blocks/s")
     assert(wireBlocksPerSec > 0.5,
       f"pipeline too slow over http: $wireBlocksPerSec%.2f blocks/s")
+  }
+
+  test("the payload fetch of a multi-hash batch runs in more than one task") {
+    val fixDir = tmpDir("fixtwide")
+    copyFixture(fixDir)
+    import spark.implicits._
+    val blocks = Follower.parseBlocks(
+      (100L to 105L).flatMap(new FixtureNode(fixDir).getBlockJson).toDF("json"))
+    TaskRecordingNode.tasks.clear()
+    val fetched = Follower.fetchPayloads(spark, new TaskRecordingNode(fixDir),
+      blocks, EtlMode.Full).collect()
+    assert(fetched.length == 7)
+    // AQE would coalesce the tiny distinct shuffle into one partition and
+    // serialize every node call in one task
+    assert(TaskRecordingNode.tasks.size > 1,
+      s"payload calls ran in tasks ${TaskRecordingNode.tasks}")
+  }
+
+  test("a failed Full-mode batch releases its cached blocks and payloads") {
+    val fixDir = tmpDir("fixtbad")
+    val root = tmpDir("rootbad")
+    copyFixture(fixDir)
+    // a malformed rewards_v2 body trips strictRewardsPayload mid-commit,
+    // after both the blocks and the payloads have been cached
+    val txns = Paths.get(fixDir, "txns.jsonl")
+    val lines = Files.readAllLines(txns).asScala.map { l =>
+      if (l.contains("\"r102\""))
+        """{"hash": "r102", "type": "rewards_v2", "fields": "not json"}"""
+      else l
+    }
+    Files.write(txns, lines.asJava)
+    new StateStore(spark, root).advance(IngestState(99, 100))
+    graft.Pinned.releaseAll(spark)
+    spark.catalog.clearCache()
+
+    val q = Follower.start(spark, fixDir, root, EtlMode.Full)
+    val e = try intercept[StreamingQueryException] { q.processAllAvailable() }
+      finally q.stop()
+    assert(e.getMessage.contains("Error getting rewards txn: 'r102'"))
+    val left = spark.sparkContext.getPersistentRDDs.values.map(_.toString)
+    assert(left.isEmpty, s"the failed batch left cached RDDs: $left")
+    assert(new StateStore(spark, root).load().get.height == 99)
   }
 
   test("cursor is monotonic — backwards advance is refused") {

@@ -271,6 +271,24 @@ class HttpNodeSpec extends SparkSuite {
     }
   }
 
+  test("a Full-mode follower over http:// fetches each block and each " +
+    "stub payload exactly once") {
+    val root = tmpDir("roothttpfull")
+    val srv = new MockNodeHttpServer(new FixtureNode(copiedFixture()))
+    try {
+      new StateStore(spark, root).advance(IngestState(99, 100))
+      val q = Follower.start(spark, srv.endpoint, root, Model.EtlMode.Full)
+      try q.processAllAvailable() finally q.stop()
+      def served(method: String) = srv.served.getOrDefault(method, 0).intValue()
+      // blocks 100..105 carry 7 distinct stub hashes; the rewards and the
+      // transactions write share one payload fetch
+      assert(served("block_get") == 6)
+      assert(served("transaction_get") == 7)
+      assert(spark.read.parquet(s"$root/transactions").count() == 7)
+      assert(spark.read.parquet(s"$root/rewards").count() == 5)
+    } finally srv.stop()
+  }
+
   test("backfill epoch-skip scan works over http:// (block_get + transaction_get)") {
     // the BackfillSpec epoch chain, served over the wire: rewards blocks
     // every 31 heights whose start_epoch jumps the scan down in one hop
