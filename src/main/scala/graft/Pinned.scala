@@ -38,8 +38,7 @@ object Pinned {
     * recomputation on a given meter (the r16 s-family audit found most
     * 2–3-reference pins lose at test scale). */
   def pin(df: DataFrame): DataFrame = {
-    if (df.sparkSession.conf.getOption("spark.graft.pin")
-        .exists(_.equalsIgnoreCase("false"))) return df
+    if (!Conf.flag(df.sparkSession, "spark.graft.pin", true)) return df
     df.persist()
     reg.computeIfAbsent(df.sparkSession,
       _ => new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]())

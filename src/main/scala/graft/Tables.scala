@@ -71,12 +71,11 @@ object Tables {
     * runs over hash/AQE-coalesced partitionings at varying core counts;
     * money aggregates go through [[dec]]. Round-robin repartition keeps
     * task retries deterministic (sort-before-repartition, SPARK-23207).
-    * Opt out with `spark.graft.scan.fanout=false` (unparseable values
-    * read as the default true). */
+    * Opt out with `spark.graft.scan.fanout=false` (any value other than
+    * true/false fails, [[Conf.flag]]). */
   private[graft] def fanOut(df: DataFrame): DataFrame = {
     val s = df.sparkSession
-    val on = s.conf.getOption("spark.graft.scan.fanout")
-      .forall(v => !v.equalsIgnoreCase("false"))
+    val on = Conf.flag(s, "spark.graft.scan.fanout", true)
     val target = s.sparkContext.defaultParallelism
     if (on && df.rdd.getNumPartitions < target) df.repartition(target) else df
   }

@@ -139,8 +139,8 @@ class ExactlyOnceSink(spark: SparkSession, root: String) extends Serializable {
     * `spark.graft.sink.zorder=false` for latency-critical micro-batches
     * (the layout costs one 2-number agg + one range exchange per
     * commit). Pruning asserted on real sink output in ZorderSinkSpec. */
-  private def zorderOn: Boolean = spark.conf
-    .getOption("spark.graft.sink.zorder").forall(_.toBoolean)
+  private def zorderOn: Boolean =
+    graft.Conf.flag(spark, "spark.graft.sink.zorder", true)
 
   private val ZorderKeys = Map(
     "rewards" -> (("block", "gateway")),

@@ -16,8 +16,6 @@ import Model._
   */
 object Main {
 
-  def nodeFor(nodeAddr: String): NodeClient = NodeClient.forAddr(nodeAddr)
-
   def runMigrate(spark: SparkSession, s: Settings.HeliumSettings): Unit =
     Migrate.run(spark, s.dataRoot)
 
@@ -36,7 +34,7 @@ object Main {
         else Allowlists(Set.empty, Set.empty)
       case _ => Allowlists(Set.empty, Set.empty)
     }
-    nodeFor(s.nodeAddr) // validate scheme
+    NodeClient.forAddr(s.nodeAddr) // validate scheme
     Follower.start(spark, s.nodeAddr, s.dataRoot, s.mode, lists,
       backfill = s.backfill, trigger = trigger)
   }

@@ -26,17 +26,15 @@ object Pipeline {
     * @param payloads full txn payloads keyed by hash (Model.txnSchema) —
     *                 the "node" side of the S3 enrichment join
     * @param lists    allowlists, only consulted in Filters mode
-    * @param broadcastPayloads hint the payload side as broadcastable —
-    *                 true for live tip-following (a micro-batch's payloads
-    *                 are tiny); false for backfill-scale batches where the
-    *                 join should shuffle on `hash`
+    *
+    * The payload side is hinted broadcastable: a micro-batch's payloads
+    * are tiny next to its blocks.
     */
   def run(mode: EtlMode, blocks: DataFrame, payloads: DataFrame,
-      lists: Allowlists = Allowlists(Set.empty, Set.empty),
-      broadcastPayloads: Boolean = true): Output = {
+      lists: Allowlists = Allowlists(Set.empty, Set.empty)): Output = {
 
     val stubs = explodeStubs(blocks)
-    val paySide = if (broadcastPayloads) broadcast(payloads) else payloads
+    val paySide = broadcast(payloads)
 
     val flat = flattenRewards(strictRewardsPayload(
       enrichStubs(dispatchRewards(stubs), paySide)))

@@ -42,13 +42,6 @@ class StateStore(spark: SparkSession, root: String) extends Serializable {
     if (states.isEmpty) None else Some(states.maxBy(_.height))
   }
 
-  /** src/follower.rs:115-121 — initial insert: height = first_block. */
-  def create(firstBlock: Long): IngestState = {
-    val st = IngestState(firstBlock, firstBlock)
-    advance(st)
-    st
-  }
-
   /** K3 — cursor advance (src/block_processor.rs:149-154). Monotonic:
     * refuses to move backwards (the reference's single-writer loop makes
     * this implicit; we make it explicit). */

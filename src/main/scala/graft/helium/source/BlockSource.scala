@@ -13,7 +13,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.helium.{FixtureNode, NodeClient}
+import graft.helium.NodeClient
 
 /** Custom DataSourceV2 streaming source for the Helium block stream — the
   * Spark-native form of the reference's poll loop (S1/S2: height poll at
@@ -32,7 +32,7 @@ import graft.helium.{FixtureNode, NodeClient}
   * Usage:
   * {{{
   *   spark.readStream.format(classOf[BlockSourceProvider].getName)
-  *     .option("fixtures", "/path/to/fixturedir")   // FixtureNode backend
+  *     .option("node", "fixture:///path/to/fixturedir") // or http(s)://host:port
   *     .option("startHeight", "0")
   *     .option("partitions", "4")
   *     .load()
@@ -53,10 +53,9 @@ object BlockSource {
 
   def nodeFor(options: Map[String, String]): NodeClient =
     options.get("node").map(NodeClient.forAddr)
-      .orElse(options.get("fixtures").map(new FixtureNode(_)))
       .getOrElse(throw new IllegalArgumentException(
-        "heliumblocks source requires a 'node' (any NodeClient.forAddr " +
-          "scheme) or 'fixtures' (fixture dir) option"))
+        "heliumblocks source requires a 'node' option (any " +
+          "NodeClient.forAddr address, e.g. a fixture dir)"))
 }
 
 class BlockTable(options: Map[String, String]) extends Table with SupportsRead {

@@ -292,8 +292,7 @@ object Media {
     * production row-group counts the `<` guard makes this a no-op. */
   private def fanOut(media: Dataset[MediaRecord]): Dataset[MediaRecord] = {
     val s = media.sparkSession
-    val on = s.conf.getOption("spark.graft.scan.fanout")
-      .forall(v => !v.equalsIgnoreCase("false"))
+    val on = graft.Conf.flag(s, "spark.graft.scan.fanout", true)
     val target = s.sparkContext.defaultParallelism
     // streaming inputs pass through untouched: .rdd is illegal on them,
     // and micro-batch parallelism is the source's concern, not ours

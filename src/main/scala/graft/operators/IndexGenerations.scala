@@ -63,7 +63,7 @@ object IndexGenerations {
   /** Record names ending in this suffix are HIGH-WATER-MARK ledgers:
     * each value is `key:number` (split at the LAST ':'), the consumer's
     * replay skip is "number ≤ max recorded for key" (the monotonic
-    * batch-id discipline of [[graft.streaming.StoreDedup.foldBatch]]),
+    * batch-id discipline of [[graft.streaming.StoreBridge.foldBatch]]),
     * so a carry keeps only the max number per key instead of the full
     * value history. Without this an always-on stream fold's ledger
     * grows one line per micro-batch FOREVER — compact and rewrite
@@ -495,8 +495,8 @@ object IndexGenerations {
       s.conf.getOption("spark.graft.index.maxDeltaChain").map(_.toInt) match {
         case Some(max) if activeSet(s, root).size - 1 > max =>
           val c = compact(s, root)
-          if (s.conf.getOption("spark.graft.index.autoPrune")
-              .exists(_.toBoolean)) prune(s, root)
+          if (graft.Conf.flag(s, "spark.graft.index.autoPrune", false))
+            prune(s, root)
           c
         case _ => g
       }

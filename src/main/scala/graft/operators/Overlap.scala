@@ -37,7 +37,7 @@ object Overlap {
     * (a then b) for A/B measurement and contention triage. */
   def both[A, B](s: org.apache.spark.sql.SparkSession, a: => A, b: => B)
       : (A, B) = {
-    if (s.conf.getOption("spark.graft.overlap").forall(_.toBoolean)) {
+    if (graft.Conf.flag(s, "spark.graft.overlap", true)) {
       val fa = Future(a)(pool)
       val rb =
         try b

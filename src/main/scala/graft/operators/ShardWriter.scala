@@ -58,9 +58,8 @@ object ShardWriter {
   def writeDocs(docs: DataFrame, nShards: Int, path: String,
       onePassPerShard: Boolean = false,
       idCol: String = "doc_id"): DataFrame = {
-    val onePass = onePassPerShard || docs.sparkSession.conf
-      .getOption("spark.graft.shards.onePassPerShard")
-      .exists(_.toBoolean)
+    val onePass = onePassPerShard || graft.Conf.flag(docs.sparkSession,
+      "spark.graft.shards.onePassPerShard", false)
     val sharded0 = docs.withColumn("shard", shardCol(col(idCol), nShards))
     val sharded =
       if (onePass) sharded0.repartition(col("shard")) else sharded0

@@ -521,7 +521,7 @@ object MultimodalOps {
     // artifact without decoding the base partition at all (d24's
     // nightly contract — IndexReuseSpec pins it); generation store so
     // the nightly loop can ADVANCE it ([[m12Advance]])
-    if (s.conf.getOption("spark.graft.m12.buildIndex").forall(_.toBoolean))
+    if (graft.Conf.flag(s, "spark.graft.m12.buildIndex", true))
       graft.operators.IndexGenerations.reset(s, indexDir,
         m12Fingerprints(media.toDF().filter(!isDelta).as[Media.MediaRecord]))
     // serve face honors the reproducible-audit pin (readGen → readAt);

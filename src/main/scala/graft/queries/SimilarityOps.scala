@@ -90,8 +90,8 @@ object SimilarityOps {
     * coarse centroids are independent knobs (IVFADC). The oracle SQL for
     * s05/s17 is generated from the same conf. */
   private def ivfCentroids(emb: DataFrame): DataFrame =
-    if (emb.sparkSession.conf.getOption("spark.graft.ann.refinedCentroids")
-        .exists(_.toBoolean))
+    if (graft.Conf.flag(emb.sparkSession,
+        "spark.graft.ann.refinedCentroids", false))
       lloydChain(emb.select(col("vec_id"), col("qv"), col("n2")),
         LLOYD_ROUNDS)._2
     else seedCentroids(emb)
@@ -157,8 +157,7 @@ object SimilarityOps {
   private def embQ(s: SparkSession, d: String, pin: Boolean = true): DataFrame = {
     val base = withQ(embeddings(s, d))
       .select(col("vec_id"), col("label"), col("qv"), col("n2"))
-    val on = s.conf.getOption("spark.graft.sim.embPin").map(_.toBoolean)
-      .getOrElse(pin)
+    val on = graft.Conf.flag(s, "spark.graft.sim.embPin", pin)
     // fan out BEFORE pinning: the cached partitioning IS the parallelism
     // of every downstream crossJoin/band scan over the base (a
     // one-row-group scan would pin one partition and serialize the
@@ -1257,7 +1256,7 @@ object SimilarityOps {
     val emb = s24Sig(embeddings(s, d))
     val isDelta = pmod(graft.functions.Portable.hash60(
       col("vec_id").cast("string"), S24Seed), lit(5L)) === 0L
-    if (s.conf.getOption("spark.graft.s24.buildIndex").forall(_.toBoolean))
+    if (graft.Conf.flag(s, "spark.graft.s24.buildIndex", true))
       graft.operators.IndexGenerations.reset(s, indexDir,
         emb.filter(!isDelta))
     val index = graft.operators.IndexGenerations.readByConf(s, indexDir)
@@ -1425,9 +1424,8 @@ object SimilarityOps {
     * read, generated from the ACTIVE session's refinedCentroids conf so
     * a flagged correctness run verifies the refined index. */
   private def centsCteSql: String =
-    if (SparkSession.getActiveSession
-        .flatMap(_.conf.getOption("spark.graft.ann.refinedCentroids"))
-        .exists(_.toBoolean))
+    if (SparkSession.getActiveSession.exists(
+        graft.Conf.flag(_, "spark.graft.ann.refinedCentroids", false)))
       s"""$lloydCtesSql,
          |cents AS (
          |  SELECT c_id, cqv AS c_qv, cn2 AS c_n2 FROM cents_$LLOYD_ROUNDS)""".stripMargin

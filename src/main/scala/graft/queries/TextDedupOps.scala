@@ -335,7 +335,7 @@ object TextDedupOps {
     * IMPLEMENTATION.md. Default off: below the crossover the extra
     * aggregation costs more than the join it saves. */
   private def dfPrefilterOn(s: SparkSession): Boolean =
-    s.conf.getOption("spark.graft.dedup.dfPrefilter").exists(_.toBoolean)
+    graft.Conf.flag(s, "spark.graft.dedup.dfPrefilter", false)
 
   /** Keep only keys appearing in ≥2 docs (left-semi against the df>1 key
     * set — degrades to a shuffle semi-join when the key set outgrows
@@ -688,8 +688,8 @@ object TextDedupOps {
         explode(col("hs")).as("shingle"))
     val corpusAll = hs.filter(col("doc_id") >= 10)
       .select(explode(col("hs")).as("shingle"))
-    val corpus = (if (s.conf.getOption("spark.graft.dedup.contamPrefilter")
-        .exists(_.toBoolean)) {
+    val corpus = (if (graft.Conf.flag(s,
+        "spark.graft.dedup.contamPrefilter", false)) {
       // the bloom aggregates the BENCHMARK side — config-sized by
       // definition (the allowlist discipline: a driver-held sketch of
       // the small side, like Transforms' broadcast filter lists) — and
@@ -792,8 +792,8 @@ object TextDedupOps {
   /** The d16/d18/d19 pair source over an arbitrary docs frame — same
     * `leakage.exactPairs` switch, input-parameterized for p01. */
   private[graft] def leakagePairsOf(s: SparkSession, docs: DataFrame): DataFrame =
-    if (s.conf.getOption("spark.graft.dedup.leakage.exactPairs")
-        .exists(_.toBoolean)) d05Pairs(s, docs)
+    if (graft.Conf.flag(s, "spark.graft.dedup.leakage.exactPairs", false))
+      d05Pairs(s, docs)
     else d03Pairs(s, docs)
 
   /** Train-split decontamination — the ACTION d16's audit calls for:
@@ -1780,7 +1780,7 @@ object TextDedupOps {
     // and the plan then contains exactly ONE documents scan — the
     // delta's; IndexReuseSpec pins both facts). The artifact is a
     // generation store so the nightly loop can ADVANCE it ([[d24Advance]]).
-    if (s.conf.getOption("spark.graft.d24.buildIndex").forall(_.toBoolean))
+    if (graft.Conf.flag(s, "spark.graft.d24.buildIndex", true))
       graft.operators.IndexGenerations.reset(s, indexDir,
         d24Sig(docs.filter(!isDelta)))
     // serve face honors the reproducible-audit pin
@@ -2584,22 +2584,26 @@ object TextDedupOps {
   /** x01 — the streaming family's bench surface: batch d21's span-dedup
     * rule AT INGEST ([[graft.streaming.IncrementalDedup.chunkSpans]] →
     * `detectSpanDups`), draining the corpus through a memory-source
-    * stream in 8 doc_id-ordered micro-batches and reporting the
+    * stream in 4 doc_id-ordered micro-batches and reporting the
     * per-doc (n_chunks, n_kept) accounting. For an in-order stream the
     * verdicts equal batch d21's min-packed-key winners exactly
     * (IncrementalDedupSpec pins the agreement), so the oracle is d21's
-    * SQL minus the clean-text digest. What the timing measures: 8
+    * SQL minus the clean-text digest. What the timing measures: 4
     * rounds of chunk-keyed state shuffle + flatMapGroupsWithState fold
     * — the real per-batch cost of the always-on ingest path, which no
     * batch query exercises. The driver-side collect is the memory
     * SOURCE standing in for the ingest bus (a production stream reads
     * its broker, never the driver); it feeds batches, it is not part
-    * of any result computation. */
+    * of any result computation. Each run's memory sink is a temp view
+    * the returned frame reads; the next run drops it, so a session
+    * holds at most one x01 sink however often x01 runs. */
   private def x01(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.streaming.OutputMode
     implicit val sqlCtx = s.sqlContext
     import s.implicits._
+    s.catalog.listTables().collect().map(_.name)
+      .filter(_.startsWith("x01_span_out_")).foreach(s.catalog.dropTempView)
     val input = MemoryStream[graft.streaming.IncrementalDedup.Doc]
     val name = s"x01_span_out_${streamOutSeq.incrementAndGet()}"
     val q = graft.streaming.IncrementalDedup
@@ -2755,7 +2759,7 @@ object TextDedupOps {
     // materializes while the index write's commit tail drains, instead
     // of serializing two signature chains. No-ops in audit mode (no
     // pin to force) and when serving a pre-built index.
-    if (s.conf.getOption("spark.graft.p04.buildIndex").forall(_.toBoolean))
+    if (graft.Conf.flag(s, "spark.graft.p04.buildIndex", true))
       graft.operators.Overlap.both(s,
         graft.operators.IndexGenerations.reset(s, indexDir,
           d24Sig(docs.filter(!isDelta))),
@@ -2826,7 +2830,7 @@ object TextDedupOps {
     * one `admitted` frame feeds both — which is the property running
     * p04 and d24Advance separately would have to re-derive.
     *
-    * Exactly-once per `nightId` (the [[graft.streaming.StoreDedup]]
+    * Exactly-once per `nightId` (the [[graft.streaming.StoreBridge]]
     * fold discipline): the shard write runs FIRST, then the advance
     * commits with `nightId` recorded inside the new generation before
     * its marker — so a crash anywhere before the marker leaves the
@@ -3145,8 +3149,9 @@ object TextDedupOps {
 
   /** SQL twin of [[leakagePairsOf]] over an arbitrary relation. */
   private def leakagePairsSqlFrom(rel: String): String =
-    if (activeConf("spark.graft.dedup.leakage.exactPairs")
-        .exists(_.toBoolean)) d05SqlFrom(rel)
+    if (SparkSession.getActiveSession.exists(
+        graft.Conf.flag(_, "spark.graft.dedup.leakage.exactPairs", false)))
+      d05SqlFrom(rel)
     else d03SqlFrom(rel)
 
   /** Conf value as seen by the ACTIVE session (Verify dumps the oracle

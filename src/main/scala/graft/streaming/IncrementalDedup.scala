@@ -1,10 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.functions.{MinHashAgg, TextFns}
+import BucketState.noTs
 
 /** Streaming incremental near-duplicate detection — the stateful-streaming
   * face of the dedup suite (SURVEY §2.8 last row:
@@ -16,20 +16,23 @@ import graft.functions.{MinHashAgg, TextFns}
   * State is keyed by band bucket (not by document), so lookups touch only
   * the colliding bucket's signatures — the streaming analogue of d03's
   * band join. State per key is the admitted signatures in that bucket.
-  * [[detect]] keeps state forever (exact within the stream's lifetime);
-  * [[detectWithTtl]] bounds memory with an event-time TTL — a bucket idle
-  * longer than the TTL (relative to the watermark) drops its signatures,
-  * so state is bounded by the docs admitted within one TTL horizon, the
-  * same contract as `dropDuplicatesWithinWatermark`.
+  * Every detector here runs through [[BucketState.run]] and takes
+  * `ttlMs`: `None` keeps state forever (exact within the stream's
+  * lifetime); `Some(t)` bounds memory with an event-time TTL — a bucket
+  * idle longer than the TTL (relative to the watermark) drops its
+  * signatures, so state is bounded by the docs admitted within one TTL
+  * horizon, the same contract as `dropDuplicatesWithinWatermark`. A TTL
+  * needs event-time rows: each axis's `*Timed` banding face carries the
+  * timestamp and arms the watermark; the untimed faces carry a null
+  * `ts` in the same row shape.
   */
 object IncrementalDedup {
 
   case class Doc(doc_id: Long, text: String)
-  case class Banded(bucket: String, doc_id: Long, sig: Seq[Long])
+  case class Banded(bucket: String, doc_id: Long, sig: Seq[Long],
+      ts: java.sql.Timestamp)
   case class Verdict(doc_id: Long, bucket: String, duplicateOf: Long)
   case class TimedDoc(doc_id: Long, text: String, ts: java.sql.Timestamp)
-  case class TimedBanded(bucket: String, doc_id: Long, sig: Seq[Long],
-      ts: java.sql.Timestamp)
 
   val K = 3
   val MINHASH_K = 12
@@ -38,33 +41,19 @@ object IncrementalDedup {
 
   /** Per-batch signature+banding plan (same math as d03, so batch and
     * streaming dedup agree). */
-  def band(docs: Dataset[Doc]): Dataset[Banded] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    graft.functions.HashSketch.register(spark)
-    docs.toDF()
-      .withColumn("th", TextFns.tokenHashSeq(col("text")))
-      .withColumn("hs", array_distinct(
-        graft.functions.HashSketch.shingleSeq(col("th"), K)))
-      .filter(size(col("hs")) > 0)
-      .withColumn("sig",
-        graft.functions.HashSketch.minhashSig(col("hs"), MINHASH_K))
-      .select(col("doc_id"), col("sig"),
-        explode(array((0 until BANDS).map(b =>
-          TextFns.bandKey(col("sig"), b, ROWS)): _*)).as("bucket"))
-      .select(col("bucket"), col("doc_id"), col("sig"))
-      .as[Banded]
-  }
+  def band(docs: Dataset[Doc]): Dataset[Banded] = bandText(noTs(docs.toDF()))
 
   /** Event-time banding: same signature math as [[band]] plus the event
-    * timestamp and a watermark, feeding [[detectWithTtl]]. */
+    * timestamp and a watermark, feeding [[detect]] with a TTL. */
   def bandTimed(docs: Dataset[TimedDoc],
-      watermarkDelay: String = "0 seconds"): Dataset[TimedBanded] = {
+      watermarkDelay: String = "0 seconds"): Dataset[Banded] =
+    bandText(docs.toDF().withWatermark("ts", watermarkDelay))
+
+  private def bandText(docs: DataFrame): Dataset[Banded] = {
     val spark = docs.sparkSession
     import spark.implicits._
     graft.functions.HashSketch.register(spark)
-    docs.toDF()
-      .withWatermark("ts", watermarkDelay)
+    docs
       .withColumn("th", TextFns.tokenHashSeq(col("text")))
       .withColumn("hs", array_distinct(
         graft.functions.HashSketch.shingleSeq(col("th"), K)))
@@ -75,83 +64,79 @@ object IncrementalDedup {
         explode(array((0 until BANDS).map(b =>
           TextFns.bandKey(col("sig"), b, ROWS)): _*)).as("bucket"))
       .select(col("bucket"), col("doc_id"), col("sig"), col("ts"))
-      .as[TimedBanded]
+      .as[Banded]
   }
 
-  /** [[detect]] with bounded state: each batch re-arms the bucket's
-    * event-time timeout to (max event time seen) + `ttl`; once the
-    * watermark passes that, the bucket's admitted signatures are dropped.
-    * Documents re-arriving after the horizon are admitted as fresh — the
-    * deliberate trade that keeps state finite on an unbounded stream. */
-  def detectWithTtl(banded: Dataset[TimedBanded],
-      ttlMs: Long, threshPm: Long = 500): Dataset[Verdict] = {
-    val spark = banded.sparkSession
-    import spark.implicits._
-    banded
-      .groupByKey(_.bucket)
-      .flatMapGroupsWithState[List[(Long, Seq[Long])], Verdict](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (bucket: String, rows: Iterator[TimedBanded],
-         state: GroupState[List[(Long, Seq[Long])]]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            var admitted = state.getOption.getOrElse(Nil)
-            val out = scala.collection.mutable.ListBuffer.empty[Verdict]
-            var maxTs = Long.MinValue
-            rows.toSeq.sortBy(_.doc_id).foreach { r =>
-              maxTs = math.max(maxTs, r.ts.getTime)
-              admitted.find { case (_, sig) =>
-                MinHashAgg.estimateJaccardPm(sig, r.sig) >= threshPm
-              } match {
-                case Some((origId, _)) =>
-                  out += Verdict(r.doc_id, bucket, origId)
-                case None =>
-                  admitted = (r.doc_id, r.sig) :: admitted
-              }
-            }
-            state.update(admitted)
-            // must arm strictly past the current watermark or Spark throws
-            state.setTimeoutTimestamp(
-              math.max(maxTs + ttlMs, state.getCurrentWatermarkMs() + 1))
-            out.iterator
-          }
+  /** Flag documents whose signature estimates ≥ `threshPm` Jaccard against
+    * any previously-admitted signature in the same bucket. Emits one
+    * Verdict per detected duplicate (first sighting is admitted silently).
+    * With `ttlMs`, each batch re-arms the bucket's event-time timeout to
+    * (max event time seen) + `ttlMs`; once the watermark passes that, the
+    * bucket's admitted signatures are dropped and documents re-arriving
+    * after the horizon are admitted as fresh. */
+  def detect(banded: Dataset[Banded], threshPm: Long = 500,
+      ttlMs: Option[Long] = None): Dataset[Verdict] = {
+    import banded.sparkSession.implicits._
+    BucketState.run(banded)(_.bucket, ttlMs, _.ts)(textStep(threshPm))
+  }
+
+  /** One micro-batch of signature admissions against a bucket's state —
+    * [[detect]]'s decision body. */
+  private def textStep(threshPm: Long)(bucket: String, rows: Seq[Banded],
+      state: Option[List[(Long, Seq[Long])]])
+      : (List[(Long, Seq[Long])], Seq[Verdict]) = {
+    var admitted = state.getOrElse(Nil)
+    val out = scala.collection.mutable.ListBuffer.empty[Verdict]
+    rows.sortBy(_.doc_id).foreach { r =>
+      admitted.find { case (_, sig) =>
+        MinHashAgg.estimateJaccardPm(sig, r.sig) >= threshPm
+      } match {
+        case Some((origId, _)) =>
+          out += Verdict(r.doc_id, bucket, origId)
+        case None =>
+          admitted = (r.doc_id, r.sig) :: admitted
       }
+    }
+    (admitted, out.toList)
   }
 
   case class VecDoc(vec_id: Long, embedding: Seq[Float])
-  case class VecBanded(bucket: Long, vec_id: Long, qv: Seq[Long])
+  case class VecBanded(bucket: Long, vec_id: Long, qv: Seq[Long],
+      ts: java.sql.Timestamp)
   case class VecVerdict(bucket: Long, vec_id: Long, duplicateOf: Long,
       cosMilli: Long)
+  case class TimedVecDoc(vec_id: Long, embedding: Seq[Float],
+      ts: java.sql.Timestamp)
 
   /** Embedding-side banding: quantize, compute the four 4-bit hyperplane
     * table signatures (same fused [[graft.functions.HashSketch.lshSig]]
     * as batch s02), one bucket row per table. Streaming semantic dedup =
     * s07's pair detection in incremental form. */
-  def bandVectors(docs: Dataset[VecDoc]): Dataset[VecBanded] = {
+  def bandVectors(docs: Dataset[VecDoc]): Dataset[VecBanded] =
+    bandVecRows(noTs(docs.toDF()))
+
+  /** [[bandVectors]] with event time + watermark, feeding
+    * [[detectVecDups]] with a TTL. */
+  def bandVectorsTimed(docs: Dataset[TimedVecDoc],
+      watermarkDelay: String = "0 seconds"): Dataset[VecBanded] =
+    bandVecRows(docs.toDF().withWatermark("ts", watermarkDelay))
+
+  private def bandVecRows(docs: DataFrame): Dataset[VecBanded] = {
     val spark = docs.sparkSession
     import spark.implicits._
     graft.functions.HashSketch.register(spark)
-    docs.toDF()
+    docs
       .withColumn("qv", graft.functions.VectorFns.qvec(col("embedding")))
-      .select(col("vec_id"), col("qv"),
+      .select(col("vec_id"), col("qv"), col("ts"),
         explode(array((0 until BANDS).map(t =>
           (lit(t.toLong * 16) +
             graft.functions.HashSketch.lshSig(col("qv"), 4, t * 4))
             .as("bucket")): _*)).as("bucket"))
-      .select(col("bucket"), col("vec_id"), col("qv"))
+      .select(col("bucket"), col("vec_id"), col("qv"), col("ts"))
       .as[VecBanded]
   }
 
-  /** Admit a vector iff no previously-admitted vector in any shared LSH
-    * bucket has cosine ≥ `cosMilliThresh`/1000 with it (exact cosine on
-    * the quantized grid verifies every bucket collision — LSH only
-    * prunes). Verdicts are PER BUCKET (the [[Verdict]] contract): a
-    * vector colliding in several band tables emits one row per table,
-    * possibly naming different admitted predecessors — consumers
-    * counting duplicates dedupe on vec_id
-    * (`dropDuplicates("vec_id")`). */
+  /** Exact cosine (in thousandths) on the quantized grid. */
   private def cosMilli(a: Seq[Long], b: Seq[Long]): Long = {
     var dot = 0.0; var na = 0.0; var nb = 0.0
     var i = 0
@@ -162,13 +147,28 @@ object IncrementalDedup {
     else math.round(1000.0 * dot / (math.sqrt(na) * math.sqrt(nb)))
   }
 
-  /** One micro-batch of vector admissions against a bucket's state — the
-    * ONE decision body both [[detectVecDups]] and [[detectVecDupsWithTtl]]
-    * run, so the timed and untimed variants cannot drift. */
-  private def vecStep(bucket: Long, rows: Seq[VecBanded],
-      admitted0: List[(Long, Seq[Long])], cosMilliThresh: Long)
-      : (List[(Long, Seq[Long])], List[VecVerdict]) = {
-    var admitted = admitted0
+  /** Admit a vector iff no previously-admitted vector in any shared LSH
+    * bucket has cosine ≥ `cosMilliThresh`/1000 with it (exact cosine on
+    * the quantized grid verifies every bucket collision — LSH only
+    * prunes). Verdicts are PER BUCKET (the [[Verdict]] contract): a
+    * vector colliding in several band tables emits one row per table,
+    * possibly naming different admitted predecessors — consumers
+    * counting duplicates dedupe on vec_id
+    * (`dropDuplicates("vec_id")`). With `ttlMs` ([[detect]]'s
+    * bounded-state contract) a bucket idle past the horizon drops its
+    * admitted vectors; re-arrivals after it are admitted fresh. */
+  def detectVecDups(banded: Dataset[VecBanded], cosMilliThresh: Long = 950,
+      ttlMs: Option[Long] = None): Dataset[VecVerdict] = {
+    import banded.sparkSession.implicits._
+    BucketState.run(banded)(_.bucket, ttlMs, _.ts)(vecStep(cosMilliThresh))
+  }
+
+  /** One micro-batch of vector admissions against a bucket's state —
+    * [[detectVecDups]]' decision body. */
+  private def vecStep(cosMilliThresh: Long)(bucket: Long,
+      rows: Seq[VecBanded], state: Option[List[(Long, Seq[Long])]])
+      : (List[(Long, Seq[Long])], Seq[VecVerdict]) = {
+    var admitted = state.getOrElse(Nil)
     val out = scala.collection.mutable.ListBuffer.empty[VecVerdict]
     rows.sortBy(_.vec_id).foreach { r =>
       admitted.iterator
@@ -183,80 +183,16 @@ object IncrementalDedup {
     (admitted, out.toList)
   }
 
-  def detectVecDups(banded: Dataset[VecBanded], cosMilliThresh: Long = 950)
-      : Dataset[VecVerdict] = {
-    val spark = banded.sparkSession
-    import spark.implicits._
-    banded
-      .groupByKey(_.bucket)
-      .flatMapGroupsWithState[List[(Long, Seq[Long])], VecVerdict](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (bucket: Long, rows: Iterator[VecBanded],
-         state: GroupState[List[(Long, Seq[Long])]]) =>
-          val (admitted, out) = vecStep(bucket, rows.toSeq,
-            state.getOption.getOrElse(Nil), cosMilliThresh)
-          state.update(admitted)
-          out.iterator
-      }
-  }
-
-  case class TimedVecDoc(vec_id: Long, embedding: Seq[Float],
+  case class FpBanded(bucket: Long, media_id: Long, phash: Long,
       ts: java.sql.Timestamp)
-  case class TimedVecBanded(bucket: Long, vec_id: Long, qv: Seq[Long],
-      ts: java.sql.Timestamp)
-
-  /** [[bandVectors]] with event time + watermark, feeding
-    * [[detectVecDupsWithTtl]]. */
-  def bandVectorsTimed(docs: Dataset[TimedVecDoc],
-      watermarkDelay: String = "0 seconds"): Dataset[TimedVecBanded] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    graft.functions.HashSketch.register(spark)
-    docs.toDF()
-      .withWatermark("ts", watermarkDelay)
-      .withColumn("qv", graft.functions.VectorFns.qvec(col("embedding")))
-      .select(col("vec_id"), col("qv"), col("ts"),
-        explode(array((0 until BANDS).map(t =>
-          (lit(t.toLong * 16) +
-            graft.functions.HashSketch.lshSig(col("qv"), 4, t * 4))
-            .as("bucket")): _*)).as("bucket"))
-      .select(col("bucket"), col("vec_id"), col("qv"), col("ts"))
-      .as[TimedVecBanded]
-  }
-
-  /** [[detectVecDups]] with [[detectWithTtl]]'s bounded-state contract:
-    * a bucket idle past `ttlMs` of event time drops its admitted
-    * vectors; re-arrivals after the horizon are admitted fresh. */
-  def detectVecDupsWithTtl(banded: Dataset[TimedVecBanded], ttlMs: Long,
-      cosMilliThresh: Long = 950): Dataset[VecVerdict] = {
-    val spark = banded.sparkSession
-    import spark.implicits._
-    banded
-      .groupByKey(_.bucket)
-      .flatMapGroupsWithState[List[(Long, Seq[Long])], VecVerdict](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (bucket: Long, rows: Iterator[TimedVecBanded],
-         state: GroupState[List[(Long, Seq[Long])]]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val rs = rows.toSeq
-            val maxTs = rs.iterator.map(_.ts.getTime).max
-            val (admitted, out) = vecStep(bucket,
-              rs.map(r => VecBanded(r.bucket, r.vec_id, r.qv)),
-              state.getOption.getOrElse(Nil), cosMilliThresh)
-            state.update(admitted)
-            state.setTimeoutTimestamp(
-              math.max(maxTs + ttlMs, state.getCurrentWatermarkMs() + 1))
-            out.iterator
-          }
-      }
-  }
-
-  case class FpBanded(bucket: Long, media_id: Long, phash: Long)
   case class FpVerdict(bucket: Long, media_id: Long, duplicateOf: Long,
       hamming: Long)
+
+  /** A crawl record with its ingest event time — the timed face of
+    * [[graft.multimodal.Media.MediaRecord]], shared by the detector
+    * faces here and [[StoreMediaDedup.ingestTimed]]. */
+  case class TimedMediaRecord(media_id: Long, kind: String,
+      payload: Array[Byte], source: String, ts: java.sql.Timestamp)
 
   /** Perceptual-fingerprint banding — m07's pigeonhole banding in
     * incremental form, the shape a live media crawl wants (near-dup
@@ -269,12 +205,9 @@ object IncrementalDedup {
     * 60-bit hash. Only (bucket, id, 8-byte hash) rows leave the decode —
     * payloads and pixels never reach the shuffle or the state store. */
   def bandFingerprints(media: Dataset[graft.multimodal.Media.MediaRecord])
-      : Dataset[FpBanded] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    bandHashes60(graft.multimodal.Media.perceptualHashes(media).toDF()
-      .select(col("media_id"), col("phash")))
-  }
+      : Dataset[FpBanded] =
+    bandHashes60(noTs(graft.multimodal.Media.perceptualHashes(media).toDF()
+      .select(col("media_id"), col("phash"))))
 
   /** [[bandFingerprints]]' audio sibling: the SAME real decode +
     * envHash60 path as batch m08, banded into the shared
@@ -283,27 +216,61 @@ object IncrementalDedup {
     * it is stored, where m06-style byte checksums cannot see it). */
   def bandAudioFingerprints(
       media: Dataset[graft.multimodal.Media.MediaRecord])
-      : Dataset[FpBanded] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    bandHashes60(graft.multimodal.Media.audioHashes(
+      : Dataset[FpBanded] =
+    bandHashes60(noTs(graft.multimodal.Media.audioHashes(
         media.filter(col("kind") === "audio")).toDF()
-      .select(col("media_id"), col("phash")))
+      .select(col("media_id"), col("phash"))))
+
+  /** [[bandFingerprints]] for a timed crawl: the SAME real decode +
+    * aHash60 as batch m07 ([[graft.multimodal.Media.imagePHashOf]] —
+    * one definition, no batch/stream drift), with the event time
+    * carried through the decode so [[detectFpDups]] can evict on the
+    * watermark. Payloads never leave the decode. */
+  def bandFingerprintsTimed(media: Dataset[TimedMediaRecord],
+      watermarkDelay: String = "0 seconds"): Dataset[FpBanded] = {
+    import media.sparkSession.implicits._
+    bandHashes60Timed(
+      media.mapPartitions(it => it.map(r =>
+        (r.media_id, graft.multimodal.Media.imagePHashOf(r.payload), r.ts)))
+        .toDF("media_id", "phash", "ts"),
+      watermarkDelay)
   }
 
+  /** [[bandAudioFingerprints]]' timed sibling — real WAV parse +
+    * envHash60 ([[graft.multimodal.Media.audioEnvHashOf]]) with the
+    * event time carried through. */
+  def bandAudioFingerprintsTimed(media: Dataset[TimedMediaRecord],
+      watermarkDelay: String = "0 seconds"): Dataset[FpBanded] = {
+    import media.sparkSession.implicits._
+    bandHashes60Timed(
+      media.filter(_.kind == "audio")
+        .mapPartitions(it => it.map(r =>
+          (r.media_id, graft.multimodal.Media.audioEnvHashOf(r.payload), r.ts)))
+        .toDF("media_id", "phash", "ts"),
+      watermarkDelay)
+  }
+
+  /** The [[bandHashes60]] banding over a timed (media_id, phash, ts)
+    * frame — the image (aHash60) and audio (envHash60) ingest paths
+    * attach the crawl timestamp to their decoded fingerprints and feed
+    * the TTL-bounded detector through here. */
+  def bandHashes60Timed(ph: DataFrame,
+      watermarkDelay: String = "0 seconds"): Dataset[FpBanded] =
+    bandHashes60(ph.withWatermark("ts", watermarkDelay))
+
   /** The 5×12 pigeonhole banding over ANY 60-bit fingerprint column
-    * (`media_id`, `phash`) — bucket = band·4096 + 12-bit nib, exact for
-    * hamming ≤ 4 — shared by the image (aHash60) and audio (envHash60)
-    * ingest paths: [[detectFpDups]] is hash-agnostic, so any modality
-    * that fingerprints to 60 bits dedups through the same state shape. */
+    * (`media_id`, `phash`, `ts`) — bucket = band·4096 + 12-bit nib,
+    * exact for hamming ≤ 4 — shared by the image (aHash60) and audio
+    * (envHash60) ingest paths: [[detectFpDups]] is hash-agnostic, so any
+    * modality that fingerprints to 60 bits dedups through the same state
+    * shape. */
   private def bandHashes60(ph: DataFrame): Dataset[FpBanded] = {
-    val spark = ph.sparkSession
-    import spark.implicits._
-    ph.select(col("media_id"), col("phash"),
+    import ph.sparkSession.implicits._
+    ph.select(col("media_id"), col("phash"), col("ts"),
         explode(array((0 until 5).map(b =>
           (lit(b.toLong * 4096L) + shiftright(col("phash"), b * 12)
             .bitwiseAND(lit(0xFFFL))).as("bucket")): _*)).as("bucket"))
-      .select(col("bucket"), col("media_id"), col("phash"))
+      .select(col("bucket"), col("media_id"), col("phash"), col("ts"))
       .as[FpBanded]
   }
 
@@ -314,20 +281,25 @@ object IncrementalDedup {
     * duplicate is flagged iff batch m07 would pair it with an admitted
     * predecessor (spec-asserted agreement on the same fixture stream).
     * State per bucket is the admitted (id, 8-byte hash) list — hashes,
-    * never payloads — and bounds like [[detect]]'s signature state; an
-    * event-time TTL composes exactly as [[detectWithTtl]] does for text
-    * if the crawl needs a finite horizon. Verdicts are PER BUCKET (the
-    * [[Verdict]] contract — an exact re-encode at hamming 0 collides in
-    * all 5 bands and emits up to 5 rows, possibly naming different
-    * admitted predecessors); consumers counting duplicates dedupe on
-    * media_id (`dropDuplicates("media_id")`). */
-  /** One micro-batch of fingerprint admissions — shared by
-    * [[detectFpDups]] and [[detectFpDupsWithTtl]] (the [[vecStep]]
-    * pattern: one decision body, two state-lifetime contracts). */
-  private def fpStep(bucket: Long, rows: Seq[FpBanded],
-      admitted0: List[(Long, Long)], maxHamming: Long)
-      : (List[(Long, Long)], List[FpVerdict]) = {
-    var admitted = admitted0
+    * never payloads — and bounds like [[detect]]'s signature state;
+    * `ttlMs` gives the crawl a finite horizon exactly as for text (a
+    * re-encode arriving after it is admitted fresh). Verdicts are PER
+    * BUCKET (the [[Verdict]] contract — an exact re-encode at hamming 0
+    * collides in all 5 bands and emits up to 5 rows, possibly naming
+    * different admitted predecessors); consumers counting duplicates
+    * dedupe on media_id (`dropDuplicates("media_id")`). */
+  def detectFpDups(banded: Dataset[FpBanded], maxHamming: Long = 4,
+      ttlMs: Option[Long] = None): Dataset[FpVerdict] = {
+    import banded.sparkSession.implicits._
+    BucketState.run(banded)(_.bucket, ttlMs, _.ts)(fpStep(maxHamming))
+  }
+
+  /** One micro-batch of fingerprint admissions — [[detectFpDups]]'
+    * decision body. */
+  private def fpStep(maxHamming: Long)(bucket: Long, rows: Seq[FpBanded],
+      state: Option[List[(Long, Long)]])
+      : (List[(Long, Long)], Seq[FpVerdict]) = {
+    var admitted = state.getOrElse(Nil)
     val out = scala.collection.mutable.ListBuffer.empty[FpVerdict]
     rows.sortBy(_.media_id).foreach { r =>
       admitted.iterator
@@ -343,111 +315,8 @@ object IncrementalDedup {
     (admitted, out.toList)
   }
 
-  def detectFpDups(banded: Dataset[FpBanded], maxHamming: Long = 4)
-      : Dataset[FpVerdict] = {
-    val spark = banded.sparkSession
-    import spark.implicits._
-    banded
-      .groupByKey(_.bucket)
-      .flatMapGroupsWithState[List[(Long, Long)], FpVerdict](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (bucket: Long, rows: Iterator[FpBanded],
-         state: GroupState[List[(Long, Long)]]) =>
-          val (admitted, out) = fpStep(bucket, rows.toSeq,
-            state.getOption.getOrElse(Nil), maxHamming)
-          state.update(admitted)
-          out.iterator
-      }
-  }
-
-  case class TimedFpBanded(bucket: Long, media_id: Long, phash: Long,
+  case class SpanChunk(chunk: String, doc_id: Long, idx: Int,
       ts: java.sql.Timestamp)
-
-  /** A crawl record with its ingest event time — the timed face of
-    * [[graft.multimodal.Media.MediaRecord]]. */
-  case class TimedMediaRecord(media_id: Long, kind: String,
-      payload: Array[Byte], source: String, ts: java.sql.Timestamp)
-
-  /** [[bandFingerprints]] for a timed crawl: the SAME real decode +
-    * aHash60 as batch m07 ([[graft.multimodal.Media.imagePHashOf]] —
-    * one definition, no batch/stream drift), with the event time
-    * carried through the decode so [[detectFpDupsWithTtl]] can evict on
-    * the watermark. Payloads never leave the decode. */
-  def bandFingerprintsTimed(media: Dataset[TimedMediaRecord],
-      watermarkDelay: String = "0 seconds"): Dataset[TimedFpBanded] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    bandHashes60Timed(
-      media.mapPartitions(it => it.map(r =>
-        (r.media_id, graft.multimodal.Media.imagePHashOf(r.payload), r.ts)))
-        .toDF("media_id", "phash", "ts"),
-      watermarkDelay)
-  }
-
-  /** [[bandAudioFingerprints]]' timed sibling — real WAV parse +
-    * envHash60 ([[graft.multimodal.Media.audioEnvHashOf]]) with the
-    * event time carried through. */
-  def bandAudioFingerprintsTimed(media: Dataset[TimedMediaRecord],
-      watermarkDelay: String = "0 seconds"): Dataset[TimedFpBanded] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    bandHashes60Timed(
-      media.filter(_.kind == "audio")
-        .mapPartitions(it => it.map(r =>
-          (r.media_id, graft.multimodal.Media.audioEnvHashOf(r.payload), r.ts)))
-        .toDF("media_id", "phash", "ts"),
-      watermarkDelay)
-  }
-
-  /** The [[bandHashes60]] banding over a timed (media_id, phash, ts)
-    * frame — the image (aHash60) and audio (envHash60) ingest paths
-    * attach the crawl timestamp to their decoded fingerprints and feed
-    * the TTL-bounded detector through here. */
-  def bandHashes60Timed(ph: DataFrame,
-      watermarkDelay: String = "0 seconds"): Dataset[TimedFpBanded] = {
-    val spark = ph.sparkSession
-    import spark.implicits._
-    ph.withWatermark("ts", watermarkDelay)
-      .select(col("media_id"), col("phash"), col("ts"),
-        explode(array((0 until 5).map(b =>
-          (lit(b.toLong * 4096L) + shiftright(col("phash"), b * 12)
-            .bitwiseAND(lit(0xFFFL))).as("bucket")): _*)).as("bucket"))
-      .select(col("bucket"), col("media_id"), col("phash"), col("ts"))
-      .as[TimedFpBanded]
-  }
-
-  /** [[detectFpDups]] with [[detectWithTtl]]'s bounded-state contract:
-    * a fingerprint bucket idle past `ttlMs` of event time is dropped,
-    * so a re-encode arriving after the horizon is admitted fresh —
-    * state is bounded by one TTL horizon of distinct fingerprints. */
-  def detectFpDupsWithTtl(banded: Dataset[TimedFpBanded], ttlMs: Long,
-      maxHamming: Long = 4): Dataset[FpVerdict] = {
-    val spark = banded.sparkSession
-    import spark.implicits._
-    banded
-      .groupByKey(_.bucket)
-      .flatMapGroupsWithState[List[(Long, Long)], FpVerdict](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (bucket: Long, rows: Iterator[TimedFpBanded],
-         state: GroupState[List[(Long, Long)]]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val rs = rows.toSeq
-            val maxTs = rs.iterator.map(_.ts.getTime).max
-            val (admitted, out) = fpStep(bucket,
-              rs.map(r => FpBanded(r.bucket, r.media_id, r.phash)),
-              state.getOption.getOrElse(Nil), maxHamming)
-            state.update(admitted)
-            state.setTimeoutTimestamp(
-              math.max(maxTs + ttlMs, state.getCurrentWatermarkMs() + 1))
-            out.iterator
-          }
-      }
-  }
-
-  case class SpanChunk(chunk: String, doc_id: Long, idx: Int)
   case class SpanVerdict(doc_id: Long, idx: Int, keep: Boolean,
       firstDoc: Long)
 
@@ -455,19 +324,57 @@ object IncrementalDedup {
     * d21 (one formula, so batch and stream decisions agree): documents
     * split into consecutive `width`-token chunks, one row per chunk with
     * its in-doc position. */
-  def chunkSpans(docs: Dataset[Doc], width: Int = 8): Dataset[SpanChunk] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.toDF()
+  def chunkSpans(docs: Dataset[Doc], width: Int = 8): Dataset[SpanChunk] =
+    chunkRows(noTs(docs.toDF()), width)
+
+  /** [[chunkSpans]] with event time + watermark, feeding
+    * [[detectSpanDups]] with a TTL. */
+  def chunkSpansTimed(docs: Dataset[TimedDoc], width: Int = 8,
+      watermarkDelay: String = "0 seconds"): Dataset[SpanChunk] =
+    chunkRows(docs.toDF().withWatermark("ts", watermarkDelay), width)
+
+  private def chunkRows(docs: DataFrame, width: Int): Dataset[SpanChunk] =
+    spanRows(docs, 1, s"(size(toks) - 1) DIV $width", s"i * $width + 1", width)
+
+  /** Batch d23's k-gram anchors AT INGEST: one [[SpanChunk]] per token
+    * position (idx = the 0-based offset), the chunk being the k-token
+    * run starting there — every offset, not d21's aligned chunks.
+    * Feeding these into the UNCHANGED span registry ([[detectSpanDups]])
+    * reproduces the batch operator's decision exactly on an in-order
+    * stream: a cut verdict at (doc, i) is precisely a d23 dup anchor
+    * (the gram was admitted earlier — any doc, any batch), a kept
+    * verdict a first-ever gram. Interval merging stays a consumer-side
+    * per-doc fold over its own verdicts; the registry only owns the
+    * global first-occurrence decision. State: one entry per distinct
+    * gram in the horizon — ~k× denser than spans, so the TTL'd registry
+    * is the production path on an unbounded crawl. */
+  def gramSpans(docs: Dataset[Doc], k: Int = 8): Dataset[SpanChunk] =
+    gramRows(noTs(docs.toDF()), k)
+
+  /** [[gramSpans]] with event time + watermark, feeding
+    * [[detectSpanDups]] with a TTL. */
+  def gramSpansTimed(docs: Dataset[TimedDoc], k: Int = 8,
+      watermarkDelay: String = "0 seconds"): Dataset[SpanChunk] =
+    gramRows(docs.toDF().withWatermark("ts", watermarkDelay), k)
+
+  private def gramRows(docs: DataFrame, k: Int): Dataset[SpanChunk] =
+    spanRows(docs, k, s"size(toks) - $k", "i + 1", k)
+
+  /** The span extraction both tilings share: docs with ≥ `minToks`
+    * tokens explode into one row per start `i` in `0..last`, the chunk
+    * being the `len` tokens from 1-based position `start`. */
+  private def spanRows(docs: DataFrame, minToks: Int, last: String,
+      start: String, len: Int): Dataset[SpanChunk] = {
+    import docs.sparkSession.implicits._
+    docs
       .withColumn("toks", TextFns.tokens(col("text")))
-      .filter(size(col("toks")) > 0)
-      .select(col("doc_id"),
-        posexplode(expr(
-          s"""transform(sequence(0, (size(toks) - 1) DIV $width),
-             |  i -> array_join(slice(toks, i * $width + 1, $width), ' '))"""
-            .stripMargin.replaceAll("\n", " ")))
+      .filter(size(col("toks")) >= minToks)
+      .select(col("doc_id"), col("ts"),
+        posexplode(expr(s"transform(sequence(0, $last), " +
+          s"i -> array_join(slice(toks, $start, $len), ' '))"))
           .as(Seq("idx", "chunk")))
-      .select(col("chunk"), col("doc_id"), col("idx").cast("int").as("idx"))
+      .select(col("chunk"), col("doc_id"),
+        col("idx").cast("int").as("idx"), col("ts"))
       .as[SpanChunk]
   }
 
@@ -482,146 +389,29 @@ object IncrementalDedup {
     * min-packed-key winner exactly (spec-asserted agreement). A
     * mega-repeated boilerplate span costs one state entry and O(batch
     * copies) work per batch — the skew lives in the per-batch group,
-    * never accumulates. An event-time TTL composes as [[detectWithTtl]]
-    * if the registry needs a finite horizon. */
-  /** One micro-batch of span admissions — shared by [[detectSpanDups]]
-    * and [[detectSpanDupsWithTtl]] (the [[vecStep]] pattern). */
-  private def spanStep(rows: Seq[SpanChunk], first0: Option[(Long, Int)])
-      : (Option[(Long, Int)], List[SpanVerdict]) = {
-    val out = scala.collection.mutable.ListBuffer.empty[SpanVerdict]
-    var first = first0
-    rows.sortBy(r => (r.doc_id, r.idx)).foreach { r =>
-      first match {
-        case None =>
-          first = Some((r.doc_id, r.idx))
-          out += SpanVerdict(r.doc_id, r.idx, keep = true, r.doc_id)
-        case Some((fd, _)) =>
-          out += SpanVerdict(r.doc_id, r.idx, keep = false, fd)
-      }
-    }
-    (first, out.toList)
-  }
-
-  def detectSpanDups(chunks: Dataset[SpanChunk]): Dataset[SpanVerdict] = {
-    val spark = chunks.sparkSession
-    import spark.implicits._
-    chunks
-      .groupByKey(_.chunk)
-      .flatMapGroupsWithState[(Long, Int), SpanVerdict](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (_: String, rows: Iterator[SpanChunk],
-         state: GroupState[(Long, Int)]) =>
-          val (first, out) = spanStep(rows.toSeq, state.getOption)
-          first.foreach(state.update)
-          out.iterator
-      }
-  }
-
-  /** Batch d23's k-gram anchors AT INGEST: one [[SpanChunk]] per token
-    * position (idx = the 0-based offset), the chunk being the k-token
-    * run starting there — every offset, not d21's aligned chunks.
-    * Feeding these into the UNCHANGED span registry
-    * ([[detectSpanDups]] / [[detectSpanDupsWithTtl]]) reproduces the
-    * batch operator's decision exactly on an in-order stream: a cut
-    * verdict at (doc, i) is precisely a d23 dup anchor (the gram was
-    * admitted earlier — any doc, any batch), a kept verdict a
-    * first-ever gram. Interval merging stays a consumer-side per-doc
-    * fold over its own verdicts; the registry only owns the global
-    * first-occurrence decision. State: one entry per distinct gram in
-    * the horizon — ~k× denser than spans, so the TTL variant is the
-    * production path on an unbounded crawl. */
-  def gramSpans(docs: Dataset[Doc], k: Int = 8): Dataset[SpanChunk] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.toDF()
-      .withColumn("toks", TextFns.tokens(col("text")))
-      .filter(size(col("toks")) >= k)
-      .select(col("doc_id"),
-        posexplode(expr(
-          s"""transform(sequence(0, size(toks) - $k),
-             |  i -> array_join(slice(toks, i + 1, $k), ' '))"""
-            .stripMargin.replaceAll("\n", " ")))
-          .as(Seq("idx", "chunk")))
-      .select(col("chunk"), col("doc_id"), col("idx").cast("int").as("idx"))
-      .as[SpanChunk]
-  }
-
-  /** [[gramSpans]] with event time + watermark, feeding
-    * [[detectSpanDupsWithTtl]]. */
-  def gramSpansTimed(docs: Dataset[TimedDoc], k: Int = 8,
-      watermarkDelay: String = "0 seconds"): Dataset[TimedSpanChunk] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.toDF()
-      .withWatermark("ts", watermarkDelay)
-      .withColumn("toks", TextFns.tokens(col("text")))
-      .filter(size(col("toks")) >= k)
-      .select(col("doc_id"), col("ts"),
-        posexplode(expr(
-          s"""transform(sequence(0, size(toks) - $k),
-             |  i -> array_join(slice(toks, i + 1, $k), ' '))"""
-            .stripMargin.replaceAll("\n", " ")))
-          .as(Seq("idx", "chunk")))
-      .select(col("chunk"), col("doc_id"),
-        col("idx").cast("int").as("idx"), col("ts"))
-      .as[TimedSpanChunk]
-  }
-
-  case class TimedSpanChunk(chunk: String, doc_id: Long, idx: Int,
-      ts: java.sql.Timestamp)
-
-  /** [[chunkSpans]] with event time + watermark, feeding
-    * [[detectSpanDupsWithTtl]]. */
-  def chunkSpansTimed(docs: Dataset[TimedDoc], width: Int = 8,
-      watermarkDelay: String = "0 seconds"): Dataset[TimedSpanChunk] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.toDF()
-      .withWatermark("ts", watermarkDelay)
-      .withColumn("toks", TextFns.tokens(col("text")))
-      .filter(size(col("toks")) > 0)
-      .select(col("doc_id"), col("ts"),
-        posexplode(expr(
-          s"""transform(sequence(0, (size(toks) - 1) DIV $width),
-             |  i -> array_join(slice(toks, i * $width + 1, $width), ' '))"""
-            .stripMargin.replaceAll("\n", " ")))
-          .as(Seq("idx", "chunk")))
-      .select(col("chunk"), col("doc_id"),
-        col("idx").cast("int").as("idx"), col("ts"))
-      .as[TimedSpanChunk]
-  }
-
-  /** [[detectSpanDups]] with [[detectWithTtl]]'s bounded-state
-    * contract: a span unseen for `ttlMs` of event time leaves the
+    * never accumulates.
+    *
+    * With `ttlMs` a span unseen for that much event time leaves the
     * registry, so the same content re-arriving after the horizon is
-    * admitted (kept) again as a fresh first owner. The deliberate C4
+    * admitted (kept) again as a fresh first owner — the deliberate C4
     * relaxation that keeps the registry finite on an unbounded crawl:
     * state is one entry per DISTINCT span seen within the horizon. */
-  def detectSpanDupsWithTtl(chunks: Dataset[TimedSpanChunk], ttlMs: Long)
-      : Dataset[SpanVerdict] = {
-    val spark = chunks.sparkSession
-    import spark.implicits._
-    chunks
-      .groupByKey(_.chunk)
-      .flatMapGroupsWithState[(Long, Int), SpanVerdict](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (_: String, rows: Iterator[TimedSpanChunk],
-         state: GroupState[(Long, Int)]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val rs = rows.toSeq
-            val maxTs = rs.iterator.map(_.ts.getTime).max
-            val (first, out) = spanStep(
-              rs.map(r => SpanChunk(r.chunk, r.doc_id, r.idx)),
-              state.getOption)
-            first.foreach(state.update)
-            state.setTimeoutTimestamp(
-              math.max(maxTs + ttlMs, state.getCurrentWatermarkMs() + 1))
-            out.iterator
-          }
-      }
+  def detectSpanDups(chunks: Dataset[SpanChunk],
+      ttlMs: Option[Long] = None): Dataset[SpanVerdict] = {
+    import chunks.sparkSession.implicits._
+    BucketState.run(chunks)(_.chunk, ttlMs, _.ts)(spanStep)
+  }
+
+  /** One micro-batch of span admissions — [[detectSpanDups]]' decision
+    * body: the first row ever seen owns the span, every other row is
+    * cut in its favour. */
+  private def spanStep(chunk: String, rows: Seq[SpanChunk],
+      state: Option[(Long, Int)]): ((Long, Int), Seq[SpanVerdict]) = {
+    val sorted = rows.sortBy(r => (r.doc_id, r.idx))
+    val first = state.getOrElse((sorted.head.doc_id, sorted.head.idx))
+    (first, sorted.zipWithIndex.map { case (r, i) =>
+      SpanVerdict(r.doc_id, r.idx, keep = state.isEmpty && i == 0, first._1)
+    })
   }
 
   /** m09's frame hashes banded into POSITION-QUALIFIED buckets for the
@@ -650,14 +440,13 @@ object IncrementalDedup {
   /** The shared position-qualified banding over a (media_id, frame_idx,
     * fhash) table — one rule for every video codec arm. */
   private def bandFrameHashes(fh: DataFrame): Dataset[FpBanded] = {
-    val spark = fh.sparkSession
-    import spark.implicits._
-    fh.select(col("media_id"), col("fhash").as("phash"),
+    import fh.sparkSession.implicits._
+    noTs(fh).select(col("media_id"), col("fhash").as("phash"), col("ts"),
         explode(array((0 until 5).map(b =>
           (col("frame_idx").cast("long") * 20480L + lit(b.toLong * 4096L)
             + shiftright(col("fhash"), b * 12).bitwiseAND(lit(0xFFFL)))
             .as("bucket")): _*)).as("bucket"))
-      .select(col("bucket"), col("media_id"), col("phash"))
+      .select(col("bucket"), col("media_id"), col("phash"), col("ts"))
       .as[FpBanded]
   }
 
@@ -671,14 +460,25 @@ object IncrementalDedup {
     * candidate set a crawl quarantines for offline m09 verification.
     * Unlike [[detectFpDups]], every clip's frames ALWAYS enter state
     * (m09 pairs all clips, not just survivors); per-bucket verdicts as
-    * ever — dedupe on media_id. */
-  /** One micro-batch of frame-candidate flagging — shared by
-    * [[detectFrameDupCandidates]] and its TTL variant (the [[vecStep]]
-    * pattern). Unlike [[fpStep]], every frame always enters state. */
-  private def frameStep(bucket: Long, rows: Seq[FpBanded],
-      admitted0: List[(Long, Long)], maxHamming: Long)
-      : (List[(Long, Long)], List[FpVerdict]) = {
-    var admitted = admitted0
+    * ever — dedupe on media_id. With `ttlMs`, frame buckets idle past
+    * the horizon drop their hashes, so the candidate registry holds one
+    * TTL horizon of frames: a transcode of a clip older than the
+    * horizon is NOT flagged (its original has aged out) — the crawl's
+    * retention window, chosen per deployment. */
+  def detectFrameDupCandidates(banded: Dataset[FpBanded],
+      maxHamming: Long = 4, ttlMs: Option[Long] = None)
+      : Dataset[FpVerdict] = {
+    import banded.sparkSession.implicits._
+    BucketState.run(banded)(_.bucket, ttlMs, _.ts)(frameStep(maxHamming))
+  }
+
+  /** One micro-batch of frame-candidate flagging —
+    * [[detectFrameDupCandidates]]' decision body. Unlike [[fpStep]],
+    * every frame always enters state. */
+  private def frameStep(maxHamming: Long)(bucket: Long,
+      rows: Seq[FpBanded], state: Option[List[(Long, Long)]])
+      : (List[(Long, Long)], Seq[FpVerdict]) = {
+    var admitted = state.getOrElse(Nil)
     val out = scala.collection.mutable.ListBuffer.empty[FpVerdict]
     rows.sortBy(_.media_id).foreach { r =>
       admitted.iterator
@@ -692,85 +492,5 @@ object IncrementalDedup {
       admitted = (r.media_id, r.phash) :: admitted
     }
     (admitted, out.toList)
-  }
-
-  def detectFrameDupCandidates(banded: Dataset[FpBanded],
-      maxHamming: Long = 4): Dataset[FpVerdict] = {
-    val spark = banded.sparkSession
-    import spark.implicits._
-    banded
-      .groupByKey(_.bucket)
-      .flatMapGroupsWithState[List[(Long, Long)], FpVerdict](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (bucket: Long, rows: Iterator[FpBanded],
-         state: GroupState[List[(Long, Long)]]) =>
-          val (admitted, out) = frameStep(bucket, rows.toSeq,
-            state.getOption.getOrElse(Nil), maxHamming)
-          state.update(admitted)
-          out.iterator
-      }
-  }
-
-  /** [[detectFrameDupCandidates]] with [[detectWithTtl]]'s
-    * bounded-state contract — frame buckets idle past `ttlMs` of event
-    * time drop their hashes, so the candidate registry holds one TTL
-    * horizon of frames. A transcode of a clip older than the horizon is
-    * NOT flagged (its original has aged out) — the crawl's retention
-    * window, chosen per deployment via `ttlMs`. */
-  def detectFrameDupCandidatesWithTtl(banded: Dataset[TimedFpBanded],
-      ttlMs: Long, maxHamming: Long = 4): Dataset[FpVerdict] = {
-    val spark = banded.sparkSession
-    import spark.implicits._
-    banded
-      .groupByKey(_.bucket)
-      .flatMapGroupsWithState[List[(Long, Long)], FpVerdict](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (bucket: Long, rows: Iterator[TimedFpBanded],
-         state: GroupState[List[(Long, Long)]]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val rs = rows.toSeq
-            val maxTs = rs.iterator.map(_.ts.getTime).max
-            val (admitted, out) = frameStep(bucket,
-              rs.map(r => FpBanded(r.bucket, r.media_id, r.phash)),
-              state.getOption.getOrElse(Nil), maxHamming)
-            state.update(admitted)
-            state.setTimeoutTimestamp(
-              math.max(maxTs + ttlMs, state.getCurrentWatermarkMs() + 1))
-            out.iterator
-          }
-      }
-  }
-
-  /** Flag documents whose signature estimates ≥ `threshPm` Jaccard against
-    * any previously-admitted signature in the same bucket. Emits one
-    * Verdict per detected duplicate (first sighting is admitted silently). */
-  def detect(banded: Dataset[Banded], threshPm: Long = 500)
-      : Dataset[Verdict] = {
-    val spark = banded.sparkSession
-    import spark.implicits._
-    banded
-      .groupByKey(_.bucket)
-      .flatMapGroupsWithState[List[(Long, Seq[Long])], Verdict](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (bucket: String, rows: Iterator[Banded],
-         state: GroupState[List[(Long, Seq[Long])]]) =>
-          var admitted = state.getOption.getOrElse(Nil)
-          val out = scala.collection.mutable.ListBuffer.empty[Verdict]
-          rows.toSeq.sortBy(_.doc_id).foreach { r =>
-            admitted.find { case (_, sig) =>
-              MinHashAgg.estimateJaccardPm(sig, r.sig) >= threshPm
-            } match {
-              case Some((origId, _)) =>
-                out += Verdict(r.doc_id, bucket, origId)
-              case None =>
-                admitted = (r.doc_id, r.sig) :: admitted
-            }
-          }
-          state.update(admitted)
-          out.iterator
-      }
   }
 }

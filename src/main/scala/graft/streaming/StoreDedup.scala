@@ -1,148 +1,87 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, KeyValueGroupedDataset, SparkSession}
+import scala.reflect.runtime.universe.{TypeTag, typeTag}
+
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.functions.{MinHashAgg, TextFns}
-import graft.operators.IndexGenerations
 import graft.queries.TextDedupOps
 
-/** Store-backed streaming dedup — the junction between the always-on
-  * ingest stream ([[IncrementalDedup]]) and the nightly batch loop
-  * (`TextDedupOps.d24Advance` over the
-  * [[graft.operators.IndexGenerations]] generation store). Without it
-  * the two worlds contradict each other's admission decisions: the
-  * stream admits against TTL-bounded in-memory state, the nightly
-  * delta admits against the index, and neither sees the other's
-  * uniques. Here the store is the shared ledger:
-  *
-  *  1. BOOTSTRAP — a newly-deployed stream (fresh checkpoint) seeds
-  *     its band-bucket state from `IndexGenerations.readCurrent`, so a
-  *     copy of anything the nightly loop ever indexed is flagged from
-  *     the first micro-batch. (A RESTART with an existing checkpoint
-  *     keeps its checkpointed state — Spark applies the initial state
-  *     only on first start — which is exactly right: the checkpoint is
-  *     newer than the bootstrap.)
-  *  2. FOLD — each micro-batch's doc-level admitted uniques advance
-  *     the store inside the same `foreachBatch` unit, under the
-  *     ExactlyOnceSink discipline: the batch's commit record lands
-  *     INSIDE the new generation directory before its marker
-  *     ([[graft.operators.IndexGenerations.advanceByConfRecorded]]),
-  *     so a crash anywhere leaves either no trace (replay refolds
-  *     cleanly) or a committed record (replay SKIPS — exactly once).
-  *     The next nightly `d24Advance` then judges a copy of any
-  *     stream-admitted doc `exact` — the contract StoreDedupSpec pins.
+/** The text axis of the [[StoreBridge]] — the junction between the
+  * always-on document ingest ([[IncrementalDedup]]'s world) and the
+  * nightly d24 loop (`TextDedupOps.d24Advance` over the
+  * [[graft.operators.IndexGenerations]] generation store): a fresh
+  * deployment bootstraps its band-bucket state from the d24 index, and
+  * each micro-batch's doc-level admitted uniques fold back under the
+  * recorded exactly-once discipline, so the next nightly `d24Advance`
+  * judges a copy of any stream-admitted doc `exact` — the contract
+  * StoreDedupSpec pins.
   *
   * Signature math, banding parameters, and the exact/near thresholds
   * are `TextDedupOps.d24Sig` / d24's band constants — one definition,
   * so stream state buckets and the nightly band joins agree by
-  * construction.
-  *
-  * Scale: state per bucket is the admitted (id, hash, signature)
-  * entries — ~40 B/doc like the index itself, never text; the TTL
-  * face bounds it to one event-time horizon exactly as
-  * [[IncrementalDedup.detectWithTtl]]. The per-batch fold writes
-  * |batch uniques| rows (LSM delta mode) or |index| (rewrite mode —
-  * prefer `spark.graft.index.advanceMode=delta` with a `maxDeltaChain`
-  * for stream cadence, and let the nightly compact fold the chain).
-  * A TTL-evicted doc re-arriving is re-admitted by the STATE (the
-  * documented TTL trade) and re-folds as a duplicate index row —
-  * verdict-idempotent (the exact arm's `min(base_id)` ignores the
-  * extra row); set `spark.graft.stream.indexCheck=true` to spend one
-  * index anti-join per batch suppressing even those rows.
-  *
-  * Single-writer contract: the store admits ONE writer at a time
-  * ([[graft.operators.IndexGenerations]]), and a folding stream IS a
-  * writer. A deployment running this ingest does not also run
-  * `d24Advance`/`p04Night` against the same root concurrently — either
-  * the stream owns the root (the nightly loop reads it, e.g. p04 in
-  * `buildIndex=false` serve mode against `readCurrent`, advancing a
-  * DIFFERENT root or none), or the stream is paused for the nightly
-  * window (stop → nightly advance/compact/prune → restart; the restart
-  * keeps its checkpoint state, which is newer than the bootstrap, and
-  * the nightly's uniques are caught by the next micro-batches only
-  * after a fresh-checkpoint redeploy or via `indexCheck`). */
-object StoreDedup {
+  * construction. State per bucket is the admitted (id, hash, signature)
+  * entries — ~40 B/doc like the index itself, never text. The
+  * bootstrap-free verdict core is `TextDedupOps.deltaVerdicts` (exact +
+  * near band join), the intra-batch rule `TextDedupOps.intraUniqueSigs`,
+  * and `indexCheck` anti-joins on the content hash. */
+object StoreDedup extends StoreBridge {
 
   case class IngestDoc(doc_id: Long, source: String, text: String)
   case class TimedIngestDoc(doc_id: Long, source: String, text: String,
       ts: java.sql.Timestamp)
   case class Entry(doc_id: Long, content_hash: String, sig: Seq[Long])
   case class BandedDoc(bucket: String, doc_id: Long, source: String,
-      content_hash: String, sig: Seq[Long])
-  case class TimedBandedDoc(bucket: String, doc_id: Long, source: String,
       content_hash: String, sig: Seq[Long], ts: java.sql.Timestamp)
+      extends StoreRow
 
   /** Per-bucket admission outcome; a doc emits one row per bucket it
     * lands in ([[IncrementalDedup]]'s per-bucket Verdict contract).
     * Doc-level uniqueness = no non-`unique` row for the doc_id — the
-    * rule [[foldBatch]] applies. */
+    * rule [[StoreBridge.foldBatch]] applies. */
   case class Admission(doc_id: Long, source: String, content_hash: String,
       sig: Seq[Long], bucket: String, verdict: String, winner: Long)
 
-  /** The fold ledger — `_hwm`-suffixed, so the generation store carries
-    * only the max batch id per stream across compact/rewrite (the skip
-    * below is monotonic: `done.max >= batchId`); the ledger stays
-    * O(#streams) lines over an always-on stream's life instead of one
-    * line per micro-batch forever
-    * ([[graft.operators.IndexGenerations.HwmSuffix]]). */
-  private[streaming] val RecordName = "stream_batch_hwm"
-
-  /** The micro-night ledger ([[nightBatch]]) — `_hwm`-suffixed like
-    * [[RecordName]] and for the same reason: an always-on corpus-
-    * writing ingest commits one night per micro-batch forever, and a
-    * membership ledger would grow a line per batch. */
-  private[streaming] val NightRecordName = "stream_night_hwm"
-
-  /** The fold ledger's pre-hwm name: stores built before the rename
-    * carry their replay evidence under this. Writes use [[RecordName]];
-    * READS must union both or an upgraded store's checkpoint replay
-    * finds no record and re-folds its last batch. The generation
-    * store's compact/rewrite carry record files generically, so legacy
-    * lines survive the lifecycle until their store is rebuilt. */
-  private[streaming] val LegacyRecordName = "stream_batch"
-
-  /** All fold-ledger lines for `indexDir`, current + legacy name — the
-    * one read the three bridges' replay skips share. */
-  private[streaming] def foldRecords(s: SparkSession, indexDir: String)
-      : Seq[String] =
-    IndexGenerations.records(s, indexDir, RecordName) ++
-      IndexGenerations.records(s, indexDir, LegacyRecordName)
+  type Banded = BandedDoc
+  type State = Entry
+  type Out = Admission
+  protected val bandedTag: TypeTag[BandedDoc] = typeTag[BandedDoc]
+  protected val stateTag: TypeTag[Entry] = typeTag[Entry]
+  protected val outTag: TypeTag[Admission] = typeTag[Admission]
+  protected val idCol = "doc_id"
+  protected val foldCols = Seq("doc_id", "source", "content_hash", "sig")
+  protected val indexKeys = Seq("content_hash")
+  protected def verdicts(index: DataFrame, delta: DataFrame): DataFrame =
+    TextDedupOps.deltaVerdicts(index, delta)
+  protected def intraUnique(uniques: DataFrame): DataFrame =
+    TextDedupOps.intraUniqueSigs(uniques)
 
   /** d24's signature + banding over an ingest frame: one row per (LSH
     * band, doc) for signature-bearing docs, plus one EXACT-arm row per
     * doc bucketed on the content hash itself (prefix `h:` — disjoint
     * from band keys), so byte-identical docs collide even when too
     * short to shingle (d24's exact arm needs no signature). */
-  def bandDocs(docs: Dataset[IngestDoc]): Dataset[BandedDoc] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    bandSigs(sigsOf(docs.toDF())).as[BandedDoc]
-  }
+  def bandDocs(docs: Dataset[IngestDoc]): Dataset[BandedDoc] =
+    bandIngest(BucketState.noTs(docs.toDF()))
 
   /** [[bandDocs]] with the event timestamp carried through and a
-    * watermark armed, feeding [[admitAllWithTtl]]. */
+    * watermark armed, feeding [[ingestTimed]]. */
   def bandDocsTimed(docs: Dataset[TimedIngestDoc],
-      watermarkDelay: String = "0 seconds"): Dataset[TimedBandedDoc] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    graft.functions.HashSketch.register(spark)
-    bandSigs(TextDedupOps
-        .d24SigCols(docs.toDF().withWatermark("ts", watermarkDelay))
-        .select("doc_id", "source", "content_hash", "sig", "ts"),
-      Seq("ts"))
-      .as[TimedBandedDoc]
-  }
+      watermarkDelay: String = "0 seconds"): Dataset[BandedDoc] =
+    bandIngest(docs.toDF().withWatermark("ts", watermarkDelay))
 
-  private def sigsOf(docs: DataFrame): DataFrame = {
+  private def bandIngest(docs: DataFrame): Dataset[BandedDoc] = {
+    import docs.sparkSession.implicits._
     graft.functions.HashSketch.register(docs.sparkSession)
-    TextDedupOps.d24Sig(docs)
+    bandDf(TextDedupOps.d24SigCols(docs)
+        .select("doc_id", "source", "content_hash", "sig", "ts"), Seq("ts"))
+      .as[BandedDoc]
   }
 
-  private def bandSigs(sigs: DataFrame,
-      extra: Seq[String] = Seq.empty): DataFrame = {
-    val cols = Seq("doc_id", "source", "content_hash", "sig") ++ extra
+  protected def bandDf(sigs: DataFrame, extra: Seq[String]): DataFrame = {
+    val cols = foldCols ++ extra
     val lsh = sigs.filter(col("sig").isNotNull)
       .select(explode(array((0 until TextDedupOps.BANDS).map(b =>
         TextFns.bandKey(col("sig"), b, TextDedupOps.ROWS)): _*)).as("bucket")
@@ -153,69 +92,11 @@ object StoreDedup {
     lsh.unionByName(hashArm)
   }
 
-  /** Band the LIVE index into the initial state a first-start stream
-    * bootstraps from — one `List[Entry]` per bucket, the same shape
-    * the detector maintains. */
-  def initialStateFrom(spark: SparkSession, indexDir: String)
-      : KeyValueGroupedDataset[String, List[Entry]] = {
-    import spark.implicits._
-    val banded = bandSigs(IndexGenerations.readCurrent(spark, indexDir))
-    banded
-      .groupBy(col("bucket"))
-      .agg(collect_list(
-        struct(col("doc_id"), col("content_hash"), col("sig"))).as("entries"))
-      .select(col("bucket").as("_1"), col("entries").as("_2"))
-      .as[(String, List[Entry])]
-      .groupByKey(_._1)
-      .mapValues(_._2)
-  }
-
-  /** Empty initial state — the bootstrap-free start
-    * ([[bootstrapEnabled]]). */
-  private def emptyInitialState(spark: SparkSession)
-      : KeyValueGroupedDataset[String, List[Entry]] = {
-    import spark.implicits._
-    spark.emptyDataset[(String, List[Entry])].groupByKey(_._1)
-      .mapValues(_._2)
-  }
-
-  /** `spark.graft.stream.bootstrap` (default true) picks the first-
-    * start posture. TRUE: hydrate streaming state from the banded live
-    * index ([[initialStateFrom]]) — every indexed doc is flagged from
-    * the first micro-batch, but first start pays O(|banded index|)
-    * state hydration (~(BANDS+1)·|index| rows held by the state
-    * store). FALSE: start with empty state — O(1) first start at any
-    * index size — and [[foldBatch]] compensates by judging each
-    * batch's would-be uniques against the live index with the FULL
-    * nightly verdict core (exact + near band join,
-    * `TextDedupOps.deltaVerdicts`) before folding, so the two modes
-    * admit the same store content (StoreDedupSpec pins the
-    * equivalence). The trade: bootstrap-free catches index dups at
-    * fold time, not admission time — per-bucket `Admission` verdicts
-    * name in-stream winners only, and each batch pays one banded
-    * index join instead of the one-time hydration.
-    *
-    * Hydrated at 10⁹-doc index scale, prefer Spark's RocksDB state
-    * store (`spark.sql.streaming.stateStore.providerClass` →
-    * `...state.RocksDBStateStoreProvider`): the default HDFS-backed
-    * provider holds every partition's state map ON-HEAP, so
-    * (BANDS+1)·|index| entries eventually outgrow executor heaps,
-    * while RocksDB keeps them off-heap/on-disk with the same
-    * semantics (the bridge is provider-agnostic — spec-pinned). */
-  private[streaming] def bootstrapEnabled(s: SparkSession): Boolean =
-    s.conf.getOption("spark.graft.stream.bootstrap").forall(_.toBoolean)
-
-  private def initialByConf(spark: SparkSession, indexDir: String)
-      : KeyValueGroupedDataset[String, List[Entry]] =
-    if (bootstrapEnabled(spark)) initialStateFrom(spark, indexDir)
-    else emptyInitialState(spark)
-
-  /** One micro-batch of admissions against a bucket's entries — the one
-    * decision body the timed and untimed detectors share. Exact first
-    * (content hash), then near (signature agreement ≥ 500‰, d24's
+  /** One micro-batch of admissions against a bucket's entries. Exact
+    * first (content hash), then near (signature agreement ≥ 500‰, d24's
     * threshold); winners are the min-id match, d24's discipline. */
-  private def step(rows: Seq[BandedDoc], admitted0: List[Entry])
-      : (List[Entry], List[Admission]) = {
+  protected def step(rows: Seq[BandedDoc], admitted0: List[Entry])
+      : (List[Entry], Seq[Admission]) = {
     var admitted = admitted0
     val out = scala.collection.mutable.ListBuffer.empty[Admission]
     rows.sortBy(_.doc_id).foreach { r =>
@@ -242,200 +123,36 @@ object StoreDedup {
     (admitted, out.toList)
   }
 
-  /** The store-bootstrapped detector: every doc emits its per-bucket
-    * admissions (uniques too — [[foldBatch]] needs them), against state
-    * seeded from `initial` on first start. State lives forever; use
-    * [[admitAllWithTtl]] on an unbounded stream. */
-  def admitAll(banded: Dataset[BandedDoc],
-      initial: KeyValueGroupedDataset[String, List[Entry]])
-      : Dataset[Admission] = {
-    val spark = banded.sparkSession
-    import spark.implicits._
-    banded
-      .groupByKey(_.bucket)
-      .flatMapGroupsWithState[List[Entry], Admission](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout(), initial) {
-        (_: String, rows: Iterator[BandedDoc],
-         state: GroupState[List[Entry]]) =>
-          val (admitted, out) = step(rows.toSeq,
-            state.getOption.getOrElse(Nil))
-          state.update(admitted)
-          out.iterator
-      }
-  }
-
-  /** [[admitAll]] with [[IncrementalDedup.detectWithTtl]]'s
-    * bounded-state contract: a bucket idle past `ttlMs` of event time
-    * drops its entries. The store is what makes the TTL trade safe
-    * here: eviction forgets IN-STREAM state only — a restart
-    * re-bootstraps from the index, which never forgets a folded
-    * unique (StoreDedupSpec's restart case). */
-  def admitAllWithTtl(banded: Dataset[TimedBandedDoc], ttlMs: Long,
-      initial: KeyValueGroupedDataset[String, List[Entry]])
-      : Dataset[Admission] = {
-    val spark = banded.sparkSession
-    import spark.implicits._
-    banded
-      .groupByKey(_.bucket)
-      .flatMapGroupsWithState[List[Entry], Admission](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout(), initial) {
-        (_: String, rows: Iterator[TimedBandedDoc],
-         state: GroupState[List[Entry]]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else if (!rows.hasNext) {
-            // first-batch visit of a bootstrap-only bucket (Spark calls
-            // the function for every initial-state key): no admissions
-            // to judge — just arm the TTL so an idle bootstrap bucket
-            // evicts like any other
-            state.setTimeoutTimestamp(
-              state.getCurrentWatermarkMs() + ttlMs + 1)
-            Iterator.empty
-          } else {
-            val rs = rows.toSeq
-            val maxTs = rs.iterator.map(_.ts.getTime).max
-            val (admitted, out) = step(
-              rs.map(r => BandedDoc(r.bucket, r.doc_id, r.source,
-                r.content_hash, r.sig)),
-              state.getOption.getOrElse(Nil))
-            state.update(admitted)
-            state.setTimeoutTimestamp(
-              math.max(maxTs + ttlMs, state.getCurrentWatermarkMs() + 1))
-            out.iterator
-          }
-      }
-  }
-
-  /** Fold one micro-batch's doc-level uniques into the store — the
-    * `foreachBatch` body. Exactly-once: the batch's
-    * `(streamId, batchId)` record commits atomically with the
-    * generation (inside the gen dir, before the marker), and a replayed
-    * batch whose record is already committed is skipped. Returns true
-    * iff this call advanced the store.
-    *
-    * `streamId` scopes the records: a fresh deployment (new checkpoint
-    * → new streamId) must not be fooled by another stream's batch
-    * numbers. The caller-facing [[ingest]] derives it from the
-    * checkpoint dir — the id that is stable exactly as long as the
-    * batch numbering is.
-    *
-    * The fold is intra-batch-deduped (`TextDedupOps.intraUniqueSigs` —
-    * the same rule the nightly advance applies), and with
-    * `spark.graft.stream.indexCheck=true` also anti-joined against the
-    * live index's content hashes, suppressing the re-fold of a
-    * TTL-evicted re-arrival at the cost of an index scan per batch. In
-    * bootstrap-free mode ([[bootstrapEnabled]] false) the check is the
-    * FULL verdict core instead — exact AND near against the live index
-    * — because empty initial state means index dups arrive here marked
-    * `unique`; the hash-only check would let a near-dup-of-index fold.
-    *
-    * The fold releases its session's [[graft.Pinned]] scope on exit:
-    * the verdict/intra-dedup internals pin narrow frames the advance
-    * write fully consumes, and an always-on stream has no later
-    * "caller releases" point — without this every micro-batch leaks
-    * one pinned frame into the storage-memory LRU. (The stream's
-    * session is the fold's pin scope; a session concurrently running
-    * pinned BATCH queries mid-consumption would lose those caches —
-    * correctness-safe, Spark recomputes — so give an embedded ingest
-    * its own session if that matters.) */
-  def foldBatch(s: SparkSession, indexDir: String, admissions: DataFrame,
-      streamId: String, batchId: Long): Boolean = {
-    val prefix = streamId + ":"
-    val done = foldRecords(s, indexDir)
-      .collect { case r if r.startsWith(prefix) =>
-        r.stripPrefix(prefix).toLong }
-    if (done.nonEmpty && done.max >= batchId) false
-    else try {
-      val dupIds = admissions.filter(col("verdict") =!= "unique")
-        .select("doc_id").distinct()
-      val uniques0 = admissions
-        .dropDuplicates("doc_id")
-        .join(dupIds, Seq("doc_id"), "left_anti")
-        .select("doc_id", "source", "content_hash", "sig")
-      val uniques =
-        if (!bootstrapEnabled(s)) {
-          val sigd = graft.Pinned.pin(uniques0)
-          val keep = TextDedupOps
-            .deltaVerdicts(IndexGenerations.readCurrent(s, indexDir), sigd)
-            .filter(col("verdict") === "unique").select("doc_id")
-          sigd.join(keep, Seq("doc_id"))
-            .select("doc_id", "source", "content_hash", "sig")
-        } else if (s.conf.getOption("spark.graft.stream.indexCheck")
-            .exists(_.toBoolean))
-          uniques0.join(IndexGenerations.readCurrent(s, indexDir)
-            .select("content_hash"), Seq("content_hash"), "left_anti")
-            .select("doc_id", "source", "content_hash", "sig")
-        else uniques0
-      IndexGenerations.advanceByConfRecorded(s, indexDir,
-        TextDedupOps.intraUniqueSigs(uniques),
-        Some(RecordName -> (prefix + batchId)))
-      true
-    } finally graft.Pinned.releaseAll(s)
-  }
-
-  /** Assemble and start the full store-backed ingest: band → bootstrap
-    * state from the index → admit → fold each batch's uniques back.
-    * `ttlMs = 0` keeps state forever; positive arms the event-time TTL
-    * (requires `TimedIngestDoc`s via [[ingestTimed]]). The index must
-    * have a committed base generation (build it with
-    * `TextDedupOps.d24Build` first) — an advance on a virgin store
-    * throws by design. */
+  /** Assemble and start the store-backed document ingest: band →
+    * bootstrap state from the d24 index → admit → fold each batch's
+    * uniques back ([[StoreBridge.ingestBanded]]). State lives forever.
+    * The index must have a committed base generation (build it with
+    * `TextDedupOps.d24Build` first). */
   def ingest(docs: Dataset[IngestDoc], indexDir: String,
-      checkpointDir: String): StreamingQuery = {
-    val spark = docs.sparkSession
-    startFold(admitAll(bandDocs(docs),
-      initialByConf(spark, indexDir)), indexDir, checkpointDir)
-  }
+      checkpointDir: String): StreamingQuery =
+    ingestBanded(bandDocs(docs), indexDir, checkpointDir, None)
 
   /** [[ingest]] with the event-time TTL state bound. */
   def ingestTimed(docs: Dataset[TimedIngestDoc], indexDir: String,
       checkpointDir: String, ttlMs: Long,
-      watermarkDelay: String = "0 seconds"): StreamingQuery = {
-    val spark = docs.sparkSession
-    startFold(admitAllWithTtl(bandDocsTimed(docs, watermarkDelay), ttlMs,
-      initialByConf(spark, indexDir)), indexDir, checkpointDir)
-  }
+      watermarkDelay: String = "0 seconds"): StreamingQuery =
+    ingestBanded(bandDocsTimed(docs, watermarkDelay), indexDir,
+      checkpointDir, Some(ttlMs))
 
-  /** One micro-batch as a FULL production night — the corpus-writing
-    * face of the always-on ingest. [[foldBatch]] maintains the index
-    * alone; a deployment whose stream IS the corpus source also needs
-    * each batch's admitted docs written as training shards, and that
-    * is exactly [[graft.queries.TextDedupOps.p04Night]]: verdicts vs
-    * the live index, intra-batch dedup, quality gate, packing, a
+  /** One micro-batch as a full production night
+    * ([[StoreBridge.nightBatch]]) whose night is
+    * [[graft.queries.TextDedupOps.p04Night]]: verdicts vs the live
+    * index, intra-batch dedup, quality gate, packing, a
     * `night=<streamId>.<batchId>` shard partition under `corpusRoot`,
-    * and the index fold — one delta scan, exactly-once per batch. The
-    * ledger is `_hwm`-compacted (`streamId:batchId`, monotonic-skip),
-    * so it stays O(#streams) lines over the stream's life; the skip of
-    * a replayed batch repairs a missing night marker exactly like a
-    * rerun night. Consumers read the accumulating corpus with
-    * [[graft.operators.Corpus.readCommitted]] and bound the file count
-    * with its `compactNights`.
-    *
-    * The trade vs [[foldBatch]]: no in-stream state — every batch pays
-    * the full verdict core against the live index (|delta| + |index|,
-    * the bootstrap-free posture), plus the shard write. Right for a
-    * corpus ingest on a long trigger interval; wrong for a
-    * high-frequency admission filter (use [[ingest]] there). Empty
-    * batches are skipped unrecorded — the hwm of a later batch covers
-    * them, and an unrecorded empty replay just re-skips. */
-  def nightBatch(s: SparkSession, indexDir: String, corpusRoot: String,
-      docs: DataFrame, streamId: String, batchId: Long): Boolean = {
-    require(streamId.matches("[A-Za-z0-9._-]+"),
-      s"streamId '$streamId' must be directory-safe ([A-Za-z0-9._-]+) " +
-        "— it prefixes the night partitions this stream writes")
-    val prefix = streamId + ":"
-    val done = IndexGenerations.records(s, indexDir, NightRecordName)
-      .collect { case r if r.startsWith(prefix) =>
-        r.stripPrefix(prefix).toLong }
-    val replay = done.nonEmpty && done.max >= batchId
-    if (!replay && docs.isEmpty) false
-    else try {
-      TextDedupOps.p04NightRecorded(s, indexDir, docs, corpusRoot,
-        s"$streamId.$batchId", NightRecordName, prefix + batchId,
-        alreadyDone = replay).isDefined
-    } finally graft.Pinned.releaseAll(s)
-  }
+    * and the index fold. */
+  def nightBatch(s: SparkSession, indexDir: String,
+      corpusRoot: String, docs: DataFrame, streamId: String,
+      batchId: Long): Boolean =
+    StoreBridge.nightBatch(s, indexDir, docs.isEmpty, streamId, batchId) {
+      (nightId, record, replay) =>
+        TextDedupOps.p04NightRecorded(s, indexDir, docs, corpusRoot, nightId,
+          StoreBridge.NightRecordName, record, alreadyDone = replay)
+    }
 
   /** Assemble and start the corpus-writing ingest: each micro-batch
     * runs as one [[nightBatch]] production night against `indexDir`,
@@ -445,25 +162,8 @@ object StoreDedup {
   def ingestNights(docs: Dataset[IngestDoc], indexDir: String,
       corpusRoot: String, checkpointDir: String, streamId: String)
       : StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[IngestDoc], batchId: Long) =>
-        nightBatch(batch.sparkSession, indexDir, corpusRoot,
-          batch.toDF(), streamId, batchId)
-        ()
-      }
-      .start()
-
-  private def startFold(admissions: Dataset[Admission], indexDir: String,
-      checkpointDir: String): StreamingQuery =
-    admissions.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Admission], batchId: Long) =>
-        foldBatch(batch.sparkSession, indexDir, batch.toDF(),
-          checkpointDir, batchId)
-        ()
-      }
-      .start()
+    StoreBridge.eachBatch(docs, checkpointDir) { (batch, batchId) =>
+      nightBatch(batch.sparkSession, indexDir, corpusRoot, batch.toDF(),
+        streamId, batchId)
+    }
 }

@@ -1,16 +1,20 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, KeyValueGroupedDataset, SparkSession}
+import scala.reflect.runtime.universe.{TypeTag, typeTag}
+
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.multimodal.Media
-import graft.operators.IndexGenerations
+import graft.queries.MultimodalOps
+import IncrementalDedup.TimedMediaRecord
 
-/** [[StoreDedup]]'s media twin — the junction between the media ingest
-  * stream ([[IncrementalDedup.detectFpDups]]' world) and the nightly
-  * m12 loop (`MultimodalOps.m12Advance` over the generation store).
-  * Identical architecture, media fingerprints instead of signatures:
+/** The media axis of the [[StoreBridge]] — the junction between the
+  * media ingest stream ([[IncrementalDedup.detectFpDups]]' world) and
+  * the nightly m12 loop (`MultimodalOps.m12Advance` over the generation
+  * store). Same architecture as [[StoreDedup]], media fingerprints
+  * instead of signatures:
   *
   *  1. BOOTSTRAP — a fresh deployment seeds bucket state from the m12
   *     index's live generation (kind + byte checksum + perceptual
@@ -26,24 +30,15 @@ import graft.operators.IndexGenerations
   * shuffle. Banding: m07's 5×12 pigeonhole buckets over the phash
   * (exact for hamming ≤ 4) plus an exact-arm bucket on
   * `(kind, checksum)`, mirroring [[StoreDedup]]'s `h:` arm. The
-  * event-time TTL face ([[admitAllWithTtl]] / [[ingestTimed]]) is
-  * [[StoreDedup]]'s bounded-state contract on this axis: a bucket idle
-  * past the TTL of event time drops its entries, and the store is what
-  * makes that trade safe — eviction forgets IN-STREAM state only; a
-  * restart re-bootstraps from the index, which never forgets a folded
-  * unique, and `spark.graft.stream.indexCheck=true` suppresses even
-  * the duplicate re-fold of a TTL-evicted re-upload. */
-object StoreMediaDedup {
+  * bootstrap-free verdict core is `MultimodalOps.mediaDeltaVerdicts`
+  * (exact + perceptual), the intra-batch rule
+  * `MultimodalOps.intraUniqueFps`, and `indexCheck` anti-joins on
+  * kind + checksum. */
+object StoreMediaDedup extends StoreBridge {
 
-  case class TimedMediaRecord(media_id: Long, kind: String,
-      payload: Array[Byte], source: String, ts: java.sql.Timestamp)
   case class Fp(media_id: Long, kind: String, checksum: String, phash: Long)
-  case class TimedFp(media_id: Long, kind: String, checksum: String,
-      phash: Long, ts: java.sql.Timestamp)
   case class BandedFp(bucket: String, media_id: Long, kind: String,
-      checksum: String, phash: Long)
-  case class TimedBandedFp(bucket: String, media_id: Long, kind: String,
-      checksum: String, phash: Long, ts: java.sql.Timestamp)
+      checksum: String, phash: Long, ts: java.sql.Timestamp) extends StoreRow
   case class Entry(media_id: Long, kind: String, checksum: String,
       phash: Long)
 
@@ -52,6 +47,20 @@ object StoreMediaDedup {
   case class FpAdmission(media_id: Long, kind: String, checksum: String,
       phash: Long, bucket: String, verdict: String, winner: Long)
 
+  type Banded = BandedFp
+  type State = Entry
+  type Out = FpAdmission
+  protected val bandedTag: TypeTag[BandedFp] = typeTag[BandedFp]
+  protected val stateTag: TypeTag[Entry] = typeTag[Entry]
+  protected val outTag: TypeTag[FpAdmission] = typeTag[FpAdmission]
+  protected val idCol = "media_id"
+  protected val foldCols = Seq("media_id", "kind", "checksum", "phash")
+  protected val indexKeys = Seq("kind", "checksum")
+  protected def verdicts(index: DataFrame, delta: DataFrame): DataFrame =
+    MultimodalOps.mediaDeltaVerdicts(index, delta)
+  protected def intraUnique(uniques: DataFrame): DataFrame =
+    MultimodalOps.intraUniqueFps(uniques)
+
   private val MaxHamming = 4L
 
   /** The one decode pass: checksum + perceptual hash per crawled
@@ -59,49 +68,38 @@ object StoreMediaDedup {
     * 64-byte RESIZE (what m12Fingerprints stores), the phash of the
     * raw payload (what perceptualHashes hashes). */
   def fingerprints(media: Dataset[Media.MediaRecord]): Dataset[Fp] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions(it => it.map(r =>
-      Fp(r.media_id, r.kind,
-        Media.checksumOf(Media.resizePayload(r.payload, 64)),
-        Media.imagePHashOf(r.payload))))
+    import media.sparkSession.implicits._
+    media.mapPartitions(it => it.map(r => fpOf(r.media_id, r.kind, r.payload)))
   }
 
-  /** [[fingerprints]] with the event timestamp carried through the
-    * decode pass, feeding [[bandFpsTimed]]. */
-  def fingerprintsTimed(media: Dataset[TimedMediaRecord]): Dataset[TimedFp] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions(it => it.map(r =>
-      TimedFp(r.media_id, r.kind,
-        Media.checksumOf(Media.resizePayload(r.payload, 64)),
-        Media.imagePHashOf(r.payload), r.ts)))
-  }
+  private def fpOf(mediaId: Long, kind: String, payload: Array[Byte]): Fp =
+    Fp(mediaId, kind, Media.checksumOf(Media.resizePayload(payload, 64)),
+      Media.imagePHashOf(payload))
 
   /** m07's 5×12 pigeonhole banding (`p:<band·4096+nib>`) plus the
     * exact-arm bucket (`x:<kind>:<checksum>`) — disjoint prefixes, so
     * a byte-identical re-upload collides even when its perceptual
     * banding would not need to. */
   def bandFps(fps: Dataset[Fp]): Dataset[BandedFp] = {
-    val spark = fps.sparkSession
-    import spark.implicits._
-    bandFpsDf(fps.toDF()).as[BandedFp]
+    import fps.sparkSession.implicits._
+    bandDf(BucketState.noTs(fps.toDF()), Seq("ts")).as[BandedFp]
   }
 
-  /** [[bandFps]] with the event timestamp carried through and a
-    * watermark armed, feeding [[admitAllWithTtl]]. */
-  def bandFpsTimed(fps: Dataset[TimedFp],
-      watermarkDelay: String = "0 seconds"): Dataset[TimedBandedFp] = {
-    val spark = fps.sparkSession
-    import spark.implicits._
-    bandFpsDf(fps.toDF().withWatermark("ts", watermarkDelay), Seq("ts"))
-      .as[TimedBandedFp]
+  /** [[fingerprints]] + [[bandFps]] for a timed crawl: the event
+    * timestamp carried through the decode pass and a watermark armed,
+    * feeding [[ingestTimed]]. */
+  def bandFpsTimed(media: Dataset[TimedMediaRecord],
+      watermarkDelay: String = "0 seconds"): Dataset[BandedFp] = {
+    import media.sparkSession.implicits._
+    val fps = media.mapPartitions(it => it.map(r =>
+        (fpOf(r.media_id, r.kind, r.payload), r.ts)))
+      .toDF("fp", "ts").select("fp.*", "ts")
+    bandDf(fps.withWatermark("ts", watermarkDelay), Seq("ts"))
+      .as[BandedFp]
   }
 
-  private def bandFpsDf(fps: DataFrame,
-      extra: Seq[String] = Seq.empty): DataFrame = {
-    val cols = (Seq("media_id", "kind", "checksum", "phash") ++ extra)
-      .map(col)
+  protected def bandDf(fps: DataFrame, extra: Seq[String]): DataFrame = {
+    val cols = (foldCols ++ extra).map(col)
     val pigeon = fps.select(
       explode(array((0 until 5).map(b =>
         concat(lit("p:"), (lit(b.toLong * 4096L) +
@@ -113,39 +111,10 @@ object StoreMediaDedup {
     pigeon.unionByName(exact)
   }
 
-  /** Band the live m12 index into first-start initial state. */
-  def initialStateFrom(spark: SparkSession, indexDir: String)
-      : KeyValueGroupedDataset[String, List[Entry]] = {
-    import spark.implicits._
-    bandFpsDf(IndexGenerations.readCurrent(spark, indexDir))
-      .groupBy(col("bucket"))
-      .agg(collect_list(struct(col("media_id"), col("kind"),
-        col("checksum"), col("phash"))).as("entries"))
-      .select(col("bucket").as("_1"), col("entries").as("_2"))
-      .as[(String, List[Entry])]
-      .groupByKey(_._1)
-      .mapValues(_._2)
-  }
-
-  /** `spark.graft.stream.bootstrap` on the media axis
-    * ([[StoreDedup.bootstrapEnabled]], one conf for both): FALSE
-    * starts with empty state (O(1) at any index size) and
-    * [[foldBatch]] judges each batch's would-be uniques against the
-    * live index with the full m12 verdict core before folding. */
-  private def initialByConf(spark: SparkSession, indexDir: String)
-      : KeyValueGroupedDataset[String, List[Entry]] =
-    if (StoreDedup.bootstrapEnabled(spark))
-      initialStateFrom(spark, indexDir)
-    else {
-      import spark.implicits._
-      spark.emptyDataset[(String, List[Entry])].groupByKey(_._1)
-        .mapValues(_._2)
-    }
-
   /** Exact first (kind + checksum), then perceptual (hamming ≤ 4);
     * min-id winners — m12's verdict discipline at ingest cadence. */
-  private def step(rows: Seq[BandedFp], admitted0: List[Entry])
-      : (List[Entry], List[FpAdmission]) = {
+  protected def step(rows: Seq[BandedFp], admitted0: List[Entry])
+      : (List[Entry], Seq[FpAdmission]) = {
     var admitted = admitted0
     val out = scala.collection.mutable.ListBuffer.empty[FpAdmission]
     rows.sortBy(_.media_id).foreach { r =>
@@ -173,137 +142,39 @@ object StoreMediaDedup {
     (admitted, out.toList)
   }
 
-  /** The store-bootstrapped media detector ([[StoreDedup.admitAll]]'s
-    * twin). */
-  def admitAll(banded: Dataset[BandedFp],
-      initial: KeyValueGroupedDataset[String, List[Entry]])
-      : Dataset[FpAdmission] = {
-    val spark = banded.sparkSession
-    import spark.implicits._
-    banded
-      .groupByKey(_.bucket)
-      .flatMapGroupsWithState[List[Entry], FpAdmission](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout(), initial) {
-        (_: String, rows: Iterator[BandedFp],
-         state: GroupState[List[Entry]]) =>
-          val (admitted, out) = step(rows.toSeq,
-            state.getOption.getOrElse(Nil))
-          state.update(admitted)
-          out.iterator
-      }
-  }
+  /** Assemble and start the store-backed media ingest: decode → band →
+    * bootstrap from the m12 index → admit → fold each batch's uniques
+    * back. The index must have a committed base generation
+    * (`MultimodalOps.m12Build`). */
+  def ingest(media: Dataset[Media.MediaRecord], indexDir: String,
+      checkpointDir: String): StreamingQuery =
+    ingestBanded(bandFps(fingerprints(media)), indexDir, checkpointDir, None)
 
-  /** [[admitAll]] with the event-time TTL state bound
-    * ([[StoreDedup.admitAllWithTtl]]'s twin, same eviction contract):
-    * a bucket idle past `ttlMs` of event time drops its entries,
-    * including bootstrap-only buckets that never see stream data. */
-  def admitAllWithTtl(banded: Dataset[TimedBandedFp], ttlMs: Long,
-      initial: KeyValueGroupedDataset[String, List[Entry]])
-      : Dataset[FpAdmission] = {
-    val spark = banded.sparkSession
-    import spark.implicits._
-    banded
-      .groupByKey(_.bucket)
-      .flatMapGroupsWithState[List[Entry], FpAdmission](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout(), initial) {
-        (_: String, rows: Iterator[TimedBandedFp],
-         state: GroupState[List[Entry]]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else if (!rows.hasNext) {
-            // first-batch visit of a bootstrap-only bucket: arm the TTL
-            // so an idle bootstrap bucket evicts like any other
-            state.setTimeoutTimestamp(
-              state.getCurrentWatermarkMs() + ttlMs + 1)
-            Iterator.empty
-          } else {
-            val rs = rows.toSeq
-            val maxTs = rs.iterator.map(_.ts.getTime).max
-            val (admitted, out) = step(
-              rs.map(r => BandedFp(r.bucket, r.media_id, r.kind,
-                r.checksum, r.phash)),
-              state.getOption.getOrElse(Nil))
-            state.update(admitted)
-            state.setTimeoutTimestamp(
-              math.max(maxTs + ttlMs, state.getCurrentWatermarkMs() + 1))
-            out.iterator
-          }
-      }
-  }
+  /** [[ingest]] with the event-time TTL state bound — the unbounded-
+    * crawl posture: state holds one event-time horizon, the index
+    * holds forever. */
+  def ingestTimed(media: Dataset[TimedMediaRecord], indexDir: String,
+      checkpointDir: String, ttlMs: Long,
+      watermarkDelay: String = "0 seconds"): StreamingQuery =
+    ingestBanded(bandFpsTimed(media, watermarkDelay), indexDir,
+      checkpointDir, Some(ttlMs))
 
-  /** Fold one micro-batch's asset-level uniques into the m12 store —
-    * [[StoreDedup.foldBatch]]'s discipline (recorded advance, replay
-    * skip, intra-batch dedup via `MultimodalOps.intraUniqueFps`, the
-    * optional per-batch index anti-join on kind+checksum). */
-  def foldBatch(s: SparkSession, indexDir: String, admissions: DataFrame,
-      streamId: String, batchId: Long): Boolean = {
-    val prefix = streamId + ":"
-    val done = StoreDedup.foldRecords(s, indexDir)
-      .collect { case r if r.startsWith(prefix) =>
-        r.stripPrefix(prefix).toLong }
-    if (done.nonEmpty && done.max >= batchId) false
-    else try {
-      val dupIds = admissions.filter(col("verdict") =!= "unique")
-        .select("media_id").distinct()
-      val uniques0 = admissions
-        .dropDuplicates("media_id")
-        .join(dupIds, Seq("media_id"), "left_anti")
-        .select("media_id", "kind", "checksum", "phash")
-      val uniques =
-        if (!StoreDedup.bootstrapEnabled(s)) {
-          // bootstrap-free: index dups arrive marked unique — judge
-          // them with the full m12 verdict core (exact + perceptual)
-          val fpd = graft.Pinned.pin(uniques0)
-          val keep = graft.queries.MultimodalOps
-            .mediaDeltaVerdicts(
-              IndexGenerations.readCurrent(s, indexDir), fpd)
-            .filter(col("verdict") === "unique").select("media_id")
-          fpd.join(keep, Seq("media_id"))
-            .select("media_id", "kind", "checksum", "phash")
-        } else if (s.conf.getOption("spark.graft.stream.indexCheck")
-            .exists(_.toBoolean))
-          uniques0.join(IndexGenerations.readCurrent(s, indexDir)
-            .select("kind", "checksum"), Seq("kind", "checksum"),
-            "left_anti")
-            .select("media_id", "kind", "checksum", "phash")
-        else uniques0
-      IndexGenerations.advanceByConfRecorded(s, indexDir,
-        graft.queries.MultimodalOps.intraUniqueFps(uniques),
-        Some(StoreDedup.RecordName -> (prefix + batchId)))
-      true
-    } finally graft.Pinned.releaseAll(s)
-  }
-
-  /** One micro-batch as a FULL media production night — the
-    * corpus-writing face ([[graft.streaming.StoreDedup.nightBatch]]'s
-    * media twin): verdicts vs the live m12 index, intra-batch dedup,
-    * a `night=<streamId>.<batchId>` PAYLOAD partition under
-    * `corpusRoot` (media_id-sharded), and the fingerprint fold — one
-    * decode pass, exactly-once per batch on the shared
-    * [[StoreDedup.NightRecordName]] hwm ledger. Empty batches skip
-    * unrecorded; a replayed batch skips byte-frozen and repairs a
-    * missing marker for a dir that exists. */
+  /** One micro-batch as a FULL media production night
+    * ([[StoreBridge.nightBatch]]) whose night is m12's recorded night:
+    * verdicts vs the live m12 index, intra-batch dedup, a
+    * `night=<streamId>.<batchId>` PAYLOAD partition under `corpusRoot`
+    * (media_id-sharded), and the fingerprint fold — one decode pass.
+    * A replayed batch skips byte-frozen and repairs a missing marker
+    * for a dir that exists. */
   def nightBatch(s: SparkSession, indexDir: String, corpusRoot: String,
       media: Dataset[Media.MediaRecord], streamId: String,
-      batchId: Long): Boolean = {
-    require(streamId.matches("[A-Za-z0-9._-]+"),
-      s"streamId '$streamId' must be directory-safe ([A-Za-z0-9._-]+) " +
-        "— it prefixes the night partitions this stream writes")
-    val prefix = streamId + ":"
-    val done = IndexGenerations
-      .records(s, indexDir, StoreDedup.NightRecordName)
-      .collect { case r if r.startsWith(prefix) =>
-        r.stripPrefix(prefix).toLong }
-    val replay = done.nonEmpty && done.max >= batchId
-    if (!replay && media.isEmpty) false
-    else try {
-      graft.queries.MultimodalOps.m12NightRecorded(s, indexDir, media,
-        s"$streamId.$batchId", Some(corpusRoot),
-        StoreDedup.NightRecordName, prefix + batchId,
-        alreadyDone = replay).isDefined
-    } finally graft.Pinned.releaseAll(s)
-  }
+      batchId: Long): Boolean =
+    StoreBridge.nightBatch(s, indexDir, media.isEmpty, streamId, batchId) {
+      (nightId, record, replay) =>
+        MultimodalOps.m12NightRecorded(s, indexDir, media, nightId,
+          Some(corpusRoot), StoreBridge.NightRecordName, record,
+          alreadyDone = replay)
+    }
 
   /** Assemble and start the corpus-writing media ingest: each
     * micro-batch runs as one [[nightBatch]] production night, its
@@ -312,49 +183,8 @@ object StoreMediaDedup {
   def ingestNights(media: Dataset[Media.MediaRecord], indexDir: String,
       corpusRoot: String, checkpointDir: String, streamId: String)
       : StreamingQuery =
-    media.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch {
-        (batch: Dataset[Media.MediaRecord], batchId: Long) =>
-          nightBatch(batch.sparkSession, indexDir, corpusRoot,
-            batch, streamId, batchId)
-          ()
-      }
-      .start()
-
-  /** Assemble and start the store-backed media ingest: decode → band →
-    * bootstrap from the m12 index → admit → fold each batch's uniques
-    * back. The index must have a committed base generation
-    * (`MultimodalOps.m12Build`). */
-  def ingest(media: Dataset[Media.MediaRecord], indexDir: String,
-      checkpointDir: String): StreamingQuery = {
-    val spark = media.sparkSession
-    startFold(admitAll(bandFps(fingerprints(media)),
-      initialByConf(spark, indexDir)), indexDir, checkpointDir)
-  }
-
-  /** [[ingest]] with the event-time TTL state bound — the unbounded-
-    * crawl posture: state holds one event-time horizon, the index
-    * holds forever. */
-  def ingestTimed(media: Dataset[TimedMediaRecord], indexDir: String,
-      checkpointDir: String, ttlMs: Long,
-      watermarkDelay: String = "0 seconds"): StreamingQuery = {
-    val spark = media.sparkSession
-    startFold(admitAllWithTtl(
-      bandFpsTimed(fingerprintsTimed(media), watermarkDelay), ttlMs,
-      initialByConf(spark, indexDir)), indexDir, checkpointDir)
-  }
-
-  private def startFold(admissions: Dataset[FpAdmission], indexDir: String,
-      checkpointDir: String): StreamingQuery =
-    admissions.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[FpAdmission], batchId: Long) =>
-        foldBatch(batch.sparkSession, indexDir, batch.toDF(),
-          checkpointDir, batchId)
-        ()
-      }
-      .start()
+    StoreBridge.eachBatch(media, checkpointDir) { (batch, batchId) =>
+      nightBatch(batch.sparkSession, indexDir, corpusRoot, batch,
+        streamId, batchId)
+    }
 }

@@ -1,15 +1,16 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, KeyValueGroupedDataset, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+import scala.reflect.runtime.universe.{TypeTag, typeTag}
 
-import graft.operators.IndexGenerations
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
+
 import graft.queries.SimilarityOps
 
-/** [[StoreDedup]]'s embedding twin — the junction between a vector
-  * ingest stream ([[IncrementalDedup.detectVecDups]]' world) and the
-  * nightly s24 loop (`SimilarityOps.s24Advance` over the generation
+/** The embedding axis of the [[StoreBridge]] — the junction between a
+  * vector ingest stream ([[IncrementalDedup.detectVecDups]]' world) and
+  * the nightly s24 loop (`SimilarityOps.s24Advance` over the generation
   * store). Completes the store-bridge triad (text / media / vector):
   *
   *  1. BOOTSTRAP — a fresh deployment seeds bucket state from the s24
@@ -25,20 +26,17 @@ import graft.queries.SimilarityOps
   * the s11 tables — and admission is the exact quantized-grid cosine
   * ≥ `SimilarityOps.VecDupCos` against the bucket's admitted entries,
   * min-id winner. No exact arm: a byte-identical embedding has cosine
-  * 1.0 and collides in every table.
-  *
-  * The `spark.graft.stream.bootstrap=false` posture, the per-batch
-  * `spark.graft.stream.indexCheck` (here an anti-join on quantized-
-  * vector equality), the `(streamId, batchId)` fold records, and the
-  * event-time TTL face all follow [[StoreDedup]]'s contracts. */
-object StoreVecDedup {
+  * 1.0 and collides in every table. The bootstrap-free verdict core is
+  * `SimilarityOps.vecDeltaVerdicts`, the intra-batch rule
+  * `SimilarityOps.intraUniqueQvs`, and `indexCheck` anti-joins on
+  * quantized-vector equality. */
+object StoreVecDedup extends StoreBridge {
 
   case class VecRecord(vec_id: Long, embedding: Seq[Float])
   case class TimedVecRecord(vec_id: Long, embedding: Seq[Float],
       ts: java.sql.Timestamp)
-  case class BandedVec(bucket: String, vec_id: Long, qv: Seq[Long], n2: Long)
-  case class TimedBandedVec(bucket: String, vec_id: Long, qv: Seq[Long],
-      n2: Long, ts: java.sql.Timestamp)
+  case class BandedVec(bucket: String, vec_id: Long, qv: Seq[Long], n2: Long,
+      ts: java.sql.Timestamp) extends StoreRow
   case class Entry(vec_id: Long, qv: Seq[Long], n2: Long)
 
   /** Per-bucket admission outcome ([[StoreDedup.Admission]]'s shape);
@@ -46,66 +44,50 @@ object StoreVecDedup {
   case class VecAdmission(vec_id: Long, qv: Seq[Long], n2: Long,
       bucket: String, verdict: String, winner: Long)
 
+  type Banded = BandedVec
+  type State = Entry
+  type Out = VecAdmission
+  protected val bandedTag: TypeTag[BandedVec] = typeTag[BandedVec]
+  protected val stateTag: TypeTag[Entry] = typeTag[Entry]
+  protected val outTag: TypeTag[VecAdmission] = typeTag[VecAdmission]
+  protected val idCol = "vec_id"
+  protected val foldCols = Seq("vec_id", "qv", "n2")
+  protected val indexKeys = Seq("qv")
+  protected def verdicts(index: DataFrame, delta: DataFrame): DataFrame =
+    SimilarityOps.vecDeltaVerdicts(index, delta)
+  protected def intraUnique(uniques: DataFrame): DataFrame =
+    SimilarityOps.intraUniqueQvs(uniques)
+
   /** One row per (LSH table, vec) with qv/n2 carried through — the
     * per-row explode a streaming plan needs (the batch verdicts use
     * the id-only band join instead; carrying the vector here is fine
     * because stream batches are small and nothing rejoins). */
-  private def bandDf(sigs: DataFrame,
-      extra: Seq[String] = Seq.empty): DataFrame = {
-    val cols = Seq("vec_id", "qv", "n2") ++ extra
+  protected def bandDf(sigs: DataFrame, extra: Seq[String]): DataFrame = {
+    graft.functions.HashSketch.register(sigs.sparkSession)
     sigs.select(
       explode(array(SimilarityOps.s24BucketCols: _*)).as("bucket")
-        +: cols.map(col): _*)
+        +: (foldCols ++ extra).map(col): _*)
   }
 
   /** s24's quantization + banding over an ingest frame: one row per
     * (LSH table, vec). */
-  def bandVecs(vecs: Dataset[VecRecord]): Dataset[BandedVec] = {
-    val spark = vecs.sparkSession
-    import spark.implicits._
-    graft.functions.HashSketch.register(spark)
-    bandDf(SimilarityOps.s24Sig(vecs.toDF())).as[BandedVec]
-  }
+  def bandVecs(vecs: Dataset[VecRecord]): Dataset[BandedVec] =
+    bandIngest(BucketState.noTs(vecs.toDF()))
 
   /** [[bandVecs]] with the event timestamp carried through and a
-    * watermark armed, feeding [[admitAllWithTtl]]. */
+    * watermark armed, feeding [[ingestTimed]]. */
   def bandVecsTimed(vecs: Dataset[TimedVecRecord],
-      watermarkDelay: String = "0 seconds"): Dataset[TimedBandedVec] = {
-    val spark = vecs.sparkSession
-    import spark.implicits._
-    graft.functions.HashSketch.register(spark)
-    graft.functions.DotQ.register(spark)
-    val sigs = vecs.toDF().withWatermark("ts", watermarkDelay)
+      watermarkDelay: String = "0 seconds"): Dataset[BandedVec] =
+    bandIngest(vecs.toDF().withWatermark("ts", watermarkDelay))
+
+  private def bandIngest(vecs: DataFrame): Dataset[BandedVec] = {
+    import vecs.sparkSession.implicits._
+    graft.functions.DotQ.register(vecs.sparkSession)
+    val sigs = vecs
       .withColumn("qv", graft.functions.VectorFns.qvec(col("embedding")))
       .withColumn("n2", graft.functions.VectorFns.norm2q(col("qv")))
-      .select("vec_id", "qv", "n2", "ts")
-    bandDf(sigs, Seq("ts")).as[TimedBandedVec]
+    bandDf(sigs, Seq("ts")).as[BandedVec]
   }
-
-  /** Band the live s24 index into first-start initial state. */
-  def initialStateFrom(spark: SparkSession, indexDir: String)
-      : KeyValueGroupedDataset[String, List[Entry]] = {
-    import spark.implicits._
-    graft.functions.HashSketch.register(spark)
-    bandDf(IndexGenerations.readCurrent(spark, indexDir))
-      .groupBy(col("bucket"))
-      .agg(collect_list(
-        struct(col("vec_id"), col("qv"), col("n2"))).as("entries"))
-      .select(col("bucket").as("_1"), col("entries").as("_2"))
-      .as[(String, List[Entry])]
-      .groupByKey(_._1)
-      .mapValues(_._2)
-  }
-
-  private def initialByConf(spark: SparkSession, indexDir: String)
-      : KeyValueGroupedDataset[String, List[Entry]] =
-    if (StoreDedup.bootstrapEnabled(spark))
-      initialStateFrom(spark, indexDir)
-    else {
-      import spark.implicits._
-      spark.emptyDataset[(String, List[Entry])].groupByKey(_._1)
-        .mapValues(_._2)
-    }
 
   /** Exact cosine on the quantized grid — the scalar twin of batch
     * s24's `cosineQ(dotq(...))` verify. */
@@ -120,9 +102,9 @@ object StoreVecDedup {
   }
 
   /** One micro-batch of admissions against a bucket's entries — the
-    * min-id cosine admission both detectors share. */
-  private def step(rows: Seq[BandedVec], admitted0: List[Entry])
-      : (List[Entry], List[VecAdmission]) = {
+    * min-id cosine admission. */
+  protected def step(rows: Seq[BandedVec], admitted0: List[Entry])
+      : (List[Entry], Seq[VecAdmission]) = {
     var admitted = admitted0
     val out = scala.collection.mutable.ListBuffer.empty[VecAdmission]
     rows.sortBy(_.vec_id).foreach { r =>
@@ -140,128 +122,16 @@ object StoreVecDedup {
     (admitted, out.toList)
   }
 
-  /** The store-bootstrapped vector detector ([[StoreDedup.admitAll]]'s
-    * twin). */
-  def admitAll(banded: Dataset[BandedVec],
-      initial: KeyValueGroupedDataset[String, List[Entry]])
-      : Dataset[VecAdmission] = {
-    val spark = banded.sparkSession
-    import spark.implicits._
-    banded
-      .groupByKey(_.bucket)
-      .flatMapGroupsWithState[List[Entry], VecAdmission](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout(), initial) {
-        (_: String, rows: Iterator[BandedVec],
-         state: GroupState[List[Entry]]) =>
-          val (admitted, out) = step(rows.toSeq,
-            state.getOption.getOrElse(Nil))
-          state.update(admitted)
-          out.iterator
-      }
-  }
-
-  /** [[admitAll]] with the event-time TTL state bound
-    * ([[StoreDedup.admitAllWithTtl]]'s contract verbatim). */
-  def admitAllWithTtl(banded: Dataset[TimedBandedVec], ttlMs: Long,
-      initial: KeyValueGroupedDataset[String, List[Entry]])
-      : Dataset[VecAdmission] = {
-    val spark = banded.sparkSession
-    import spark.implicits._
-    banded
-      .groupByKey(_.bucket)
-      .flatMapGroupsWithState[List[Entry], VecAdmission](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout(), initial) {
-        (_: String, rows: Iterator[TimedBandedVec],
-         state: GroupState[List[Entry]]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else if (!rows.hasNext) {
-            state.setTimeoutTimestamp(
-              state.getCurrentWatermarkMs() + ttlMs + 1)
-            Iterator.empty
-          } else {
-            val rs = rows.toSeq
-            val maxTs = rs.iterator.map(_.ts.getTime).max
-            val (admitted, out) = step(
-              rs.map(r => BandedVec(r.bucket, r.vec_id, r.qv, r.n2)),
-              state.getOption.getOrElse(Nil))
-            state.update(admitted)
-            state.setTimeoutTimestamp(
-              math.max(maxTs + ttlMs, state.getCurrentWatermarkMs() + 1))
-            out.iterator
-          }
-      }
-  }
-
-  /** Fold one micro-batch's vec-level uniques into the s24 store —
-    * [[StoreDedup.foldBatch]]'s discipline: recorded advance, replay
-    * skip, intra-batch dedup via `SimilarityOps.intraUniqueQvs`; in
-    * bootstrap-free mode the full `vecDeltaVerdicts` join against the
-    * live index replaces the hydrated state, and with `indexCheck` on
-    * the fold anti-joins on quantized-vector equality. */
-  def foldBatch(s: SparkSession, indexDir: String, admissions: DataFrame,
-      streamId: String, batchId: Long): Boolean = {
-    val prefix = streamId + ":"
-    val done = StoreDedup.foldRecords(s, indexDir)
-      .collect { case r if r.startsWith(prefix) =>
-        r.stripPrefix(prefix).toLong }
-    if (done.nonEmpty && done.max >= batchId) false
-    else try {
-      val dupIds = admissions.filter(col("verdict") =!= "unique")
-        .select("vec_id").distinct()
-      val uniques0 = admissions
-        .dropDuplicates("vec_id")
-        .join(dupIds, Seq("vec_id"), "left_anti")
-        .select("vec_id", "qv", "n2")
-      val uniques =
-        if (!StoreDedup.bootstrapEnabled(s)) {
-          val sigd = graft.Pinned.pin(uniques0)
-          val keep = SimilarityOps
-            .vecDeltaVerdicts(
-              IndexGenerations.readCurrent(s, indexDir), sigd)
-            .filter(col("verdict") === "unique").select("vec_id")
-          sigd.join(keep, Seq("vec_id")).select("vec_id", "qv", "n2")
-        } else if (s.conf.getOption("spark.graft.stream.indexCheck")
-            .exists(_.toBoolean))
-          uniques0.join(IndexGenerations.readCurrent(s, indexDir)
-            .select("qv"), Seq("qv"), "left_anti")
-            .select("vec_id", "qv", "n2")
-        else uniques0
-      IndexGenerations.advanceByConfRecorded(s, indexDir,
-        SimilarityOps.intraUniqueQvs(uniques),
-        Some(StoreDedup.RecordName -> (prefix + batchId)))
-      true
-    } finally graft.Pinned.releaseAll(s)
-  }
-
   /** Assemble and start the store-backed vector ingest. The index must
     * have a committed base generation (`SimilarityOps.s24Build`). */
   def ingest(vecs: Dataset[VecRecord], indexDir: String,
-      checkpointDir: String): StreamingQuery = {
-    val spark = vecs.sparkSession
-    startFold(admitAll(bandVecs(vecs),
-      initialByConf(spark, indexDir)), indexDir, checkpointDir)
-  }
+      checkpointDir: String): StreamingQuery =
+    ingestBanded(bandVecs(vecs), indexDir, checkpointDir, None)
 
   /** [[ingest]] with the event-time TTL state bound. */
   def ingestTimed(vecs: Dataset[TimedVecRecord], indexDir: String,
       checkpointDir: String, ttlMs: Long,
-      watermarkDelay: String = "0 seconds"): StreamingQuery = {
-    val spark = vecs.sparkSession
-    startFold(admitAllWithTtl(bandVecsTimed(vecs, watermarkDelay), ttlMs,
-      initialByConf(spark, indexDir)), indexDir, checkpointDir)
-  }
-
-  private def startFold(admissions: Dataset[VecAdmission], indexDir: String,
-      checkpointDir: String): StreamingQuery =
-    admissions.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[VecAdmission], batchId: Long) =>
-        foldBatch(batch.sparkSession, indexDir, batch.toDF(),
-          checkpointDir, batchId)
-        ()
-      }
-      .start()
+      watermarkDelay: String = "0 seconds"): StreamingQuery =
+    ingestBanded(bandVecsTimed(vecs, watermarkDelay), indexDir,
+      checkpointDir, Some(ttlMs))
 }

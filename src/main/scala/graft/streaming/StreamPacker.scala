@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming sequence packing — the incremental face of the batch packer
   * (t12): documents arrive continuously and each is assigned to a fixed
@@ -14,7 +13,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * the docs in doc_id order produces EXACTLY the batch assignment — the
   * batch/streaming agreement that lets a backfill (batch) and a live tail
   * (stream) share one shard layout. State per source is a single Long
-  * (the cursor): bounded by source cardinality, no TTL needed.
+  * (the cursor): bounded by source cardinality, no TTL needed. The fold
+  * runs on the package's one state kernel ([[BucketState.run]]).
   *
   * Scale: packing is per-source sequential by definition (each doc's bin
   * depends on the running sum), so the stream shuffles once on `source`
@@ -29,24 +29,20 @@ object StreamPacker {
       offset_in_bin: Long)
 
   def pack(docs: Dataset[Doc], budget: Long): Dataset[Assignment] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
+    import docs.sparkSession.implicits._
     require(budget > 0, s"budget must be positive, got $budget")
-    docs.groupByKey(_.source)
-      .flatMapGroupsWithState[Long, Assignment](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (source: String, rows: Iterator[Doc], state: GroupState[Long]) =>
-          var cursor = state.getOption.getOrElse(0L)
-          // deterministic intra-batch order: doc_id (matches batch t12's
-          // ORDER BY doc_id)
-          val out = rows.toSeq.sortBy(_.doc_id).map { d =>
-            val a = Assignment(source, d.doc_id, cursor / budget,
-              cursor % budget)
-            cursor += d.n_toks
-            a
-          }
-          state.update(cursor)
-          out.iterator
-      }
+    BucketState.run(docs)(_.source) {
+      (source: String, rows: Seq[Doc], state: Option[Long]) =>
+        var cursor = state.getOrElse(0L)
+        // deterministic intra-batch order: doc_id (matches batch t12's
+        // ORDER BY doc_id)
+        val out = rows.sortBy(_.doc_id).map { d =>
+          val a = Assignment(source, d.doc_id, cursor / budget,
+            cursor % budget)
+          cursor += d.n_toks
+          a
+        }
+        (cursor, out)
+    }
   }
 }

@@ -68,4 +68,12 @@ class CacheLeakSpec extends SparkSuite {
     assert(offenders.isEmpty,
       s"untracked persists (route through Pinned.pin):\n${offenders.mkString("\n")}")
   }
+
+  test("x01 leaves at most one memory-sink view however often it runs") {
+    def sinks = spark.catalog.listTables().collect()
+      .count(t => t.isTemporary && t.name.startsWith("x01_span_out_"))
+    val x01 = SparkEntry.queries("x01_stream_span_dedup")
+    (1 to 2).foreach(_ => x01(spark, sf).count())
+    assert(sinks <= 1, s"$sinks x01 memory-sink views left in the session")
+  }
 }

@@ -10,7 +10,7 @@ class BlockSourceBatchSpec extends SparkSuite {
 
   private def read() = spark.read
     .format(classOf[BlockSourceProvider].getName)
-    .option("fixtures", fixture("basic"))
+    .option("node", fixture("basic"))
     .load()
 
   test("batch read scans the node's blocks (lenient over gaps)") {
@@ -36,7 +36,7 @@ class BlockSourceBatchSpec extends SparkSuite {
     var batches = 0
     val q = spark.readStream
       .format(classOf[BlockSourceProvider].getName)
-      .option("fixtures", fixture("basic"))
+      .option("node", fixture("basic"))
       .option("startHeight", "99")
       .option("maxBlocksPerBatch", "2")
       .load()
@@ -63,7 +63,7 @@ class BlockSourceBatchSpec extends SparkSuite {
     var rows = 0L
     val q = spark.readStream
       .format(classOf[BlockSourceProvider].getName)
-      .option("fixtures", fixture("basic"))
+      .option("node", fixture("basic"))
       .option("startHeight", "99")
       .option("maxBlocksPerBatch", "2")
       .load()

@@ -45,15 +45,15 @@ class MainSpec extends SparkSuite {
   }
 
   test("node scheme dispatch: fixture and http resolve, unknown is a clear error") {
-    assert(Main.nodeFor("http://127.0.0.1:4467").isInstanceOf[HttpNode])
-    assert(Main.nodeFor("https://node.example:443").isInstanceOf[HttpNode])
-    assert(Main.nodeFor("fixture:///tmp/fx").isInstanceOf[FixtureNode])
-    assert(Main.nodeFor("/tmp/fx").isInstanceOf[FixtureNode]) // bare dir
+    assert(NodeClient.forAddr("http://127.0.0.1:4467").isInstanceOf[HttpNode])
+    assert(NodeClient.forAddr("https://node.example:443").isInstanceOf[HttpNode])
+    assert(NodeClient.forAddr("fixture:///tmp/fx").isInstanceOf[FixtureNode])
+    assert(NodeClient.forAddr("/tmp/fx").isInstanceOf[FixtureNode]) // bare dir
     // a scheme-less host:port is a config typo, not a fixture dir — must
     // fail up front with a clear message, not at first trigger
-    intercept[IllegalArgumentException] { Main.nodeFor("localhost:4467") }
+    intercept[IllegalArgumentException] { NodeClient.forAddr("localhost:4467") }
     val ex = intercept[IllegalArgumentException] {
-      Main.nodeFor("grpc://127.0.0.1:4467")
+      NodeClient.forAddr("grpc://127.0.0.1:4467")
     }
     assert(ex.getMessage.contains("NodeClient"))
   }

@@ -191,7 +191,7 @@ class IncrementalDedupSpec extends SparkSuite {
     def t(min: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 10:$min%02d:00")
     val input = MemoryStream[TimedDoc]
     // ttl = 10 minutes of event time, zero watermark delay
-    val verdicts = detectWithTtl(bandTimed(input.toDS()), ttlMs = 10L * 60 * 1000)
+    val verdicts = detect(bandTimed(input.toDS()), ttlMs = Some(10L * 60 * 1000))
     val q = verdicts.writeStream.outputMode(OutputMode.Append())
       .format("memory").queryName("ttl_out").start()
     try {
@@ -220,8 +220,8 @@ class IncrementalDedupSpec extends SparkSuite {
     implicit val sqlCtx = spark.sqlContext
     val c = (n: Int) => (0 until 8).map(i => s"w${n}_$i").mkString(" ")
     val input = MemoryStream[TimedDoc]
-    val q = detectSpanDupsWithTtl(chunkSpansTimed(input.toDS()),
-        ttlMs = 10L * 60 * 1000)
+    val q = detectSpanDups(chunkSpansTimed(input.toDS()),
+        ttlMs = Some(10L * 60 * 1000))
       .writeStream.outputMode(OutputMode.Append())
       .format("memory").queryName("span_ttl_out").start()
     try {
@@ -251,8 +251,8 @@ class IncrementalDedupSpec extends SparkSuite {
     val other = Seq.tabulate(dims)(i =>
       (math.cos(3 * i + 2) * (if (i % 2 == 0) 0.7 else -0.6)).toFloat)
     val input = MemoryStream[TimedVecDoc]
-    val q = detectVecDupsWithTtl(bandVectorsTimed(input.toDS()),
-        ttlMs = 10L * 60 * 1000)
+    val q = detectVecDups(bandVectorsTimed(input.toDS()),
+        ttlMs = Some(10L * 60 * 1000))
       .writeStream.outputMode(OutputMode.Append())
       .format("memory").queryName("vec_ttl_out").start()
     try {
@@ -282,7 +282,7 @@ class IncrementalDedupSpec extends SparkSuite {
     val input = MemoryStream[(Long, Long, java.sql.Timestamp)]
     val timed = bandHashes60Timed(
       input.toDF().toDF("media_id", "phash", "ts"))
-    val q = detectFpDupsWithTtl(timed, ttlMs = 10L * 60 * 1000)
+    val q = detectFpDups(timed, ttlMs = Some(10L * 60 * 1000))
       .writeStream.outputMode(OutputMode.Append())
       .format("memory").queryName("fp_ttl_out").start()
     try {
@@ -312,7 +312,7 @@ class IncrementalDedupSpec extends SparkSuite {
     val input = MemoryStream[(Long, Long, java.sql.Timestamp)]
     val timed = bandHashes60Timed(
       input.toDF().toDF("media_id", "phash", "ts"))
-    val q = detectFrameDupCandidatesWithTtl(timed, ttlMs = 10L * 60 * 1000)
+    val q = detectFrameDupCandidates(timed, ttlMs = Some(10L * 60 * 1000))
       .writeStream.outputMode(OutputMode.Append())
       .format("memory").queryName("frame_ttl_out").start()
     try {
@@ -384,8 +384,8 @@ class IncrementalDedupSpec extends SparkSuite {
     val a = img8((_, y) => if (y < 4) 40 else 210)
     val b = img8((x, _) => if (x % 2 == 0) 30 else 220)
     val input = MemoryStream[TimedMediaRecord]
-    val q = detectFpDupsWithTtl(bandFingerprintsTimed(input.toDS()),
-        ttlMs = 10L * 60 * 1000)
+    val q = detectFpDups(bandFingerprintsTimed(input.toDS()),
+        ttlMs = Some(10L * 60 * 1000))
       .writeStream.outputMode(OutputMode.Append())
       .format("memory").queryName("fp_timed_out").start()
     try {

@@ -176,7 +176,7 @@ class StoreDedupSpec extends SparkSuite {
     val gen = IndexGenerations.currentGen(spark, idx).get
     java.nio.file.Files.write(
       java.nio.file.Paths.get(idx, s"gen=$gen",
-        "_" + StoreDedup.LegacyRecordName),
+        "_" + StoreBridge.LegacyRecordName),
       "ckL:5".getBytes("UTF-8"))
     // the checkpoint replay of batch 5 after the upgrade: skipped
     val gens = IndexGenerations.committed(spark, idx)
@@ -187,7 +187,7 @@ class StoreDedupSpec extends SparkSuite {
     assert(foldBatch(spark, idx, admissionsOf(11L, "lu2k"), "ckL", 6L))
     assert(indexIds(idx) == Set(0L, 11L))
     assert(IndexGenerations
-      .records(spark, idx, StoreDedup.RecordName).contains("ckL:6"))
+      .records(spark, idx, StoreBridge.RecordName).contains("ckL:6"))
   }
 
   test("the fold's exactly-once survives compact + prune: a checkpoint " +
@@ -429,7 +429,7 @@ class StoreDedupSpec extends SparkSuite {
     // generation FILE holds at most one line per stream (the union
     // across still-committed generations collapses at compact+prune —
     // WriterFenceSpec pins that O(#streams) bound)
-    def ledger = IndexGenerations.records(spark, idx, NightRecordName)
+    def ledger = IndexGenerations.records(spark, idx, StoreBridge.NightRecordName)
     assert(ledger.collect { case r if r.startsWith("crawlA:") =>
       r.stripPrefix("crawlA:").toLong }.max == 1L)
     val ledgerBefore = ledger

@@ -116,9 +116,9 @@ class StoreMediaDedupSpec extends SparkSuite {
     def ts(sec: Long) = new java.sql.Timestamp((100000L + sec) * 1000L)
     def timed(sec: Long, rows: (Long, String)*) =
       mediaOf(rows: _*).collect().map(r =>
-        StoreMediaDedup.TimedMediaRecord(r.media_id, r.kind, r.payload,
+        IncrementalDedup.TimedMediaRecord(r.media_id, r.kind, r.payload,
           r.source, ts(sec)))
-    val in = MemoryStream[StoreMediaDedup.TimedMediaRecord]
+    val in = MemoryStream[IncrementalDedup.TimedMediaRecord]
     val q = StoreMediaDedup.ingestTimed(in.toDS(), idx,
       Files.createTempDirectory("smd3_c").toString, ttlMs = 1000L)
     try {
