@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** The ONE list of graft's SQL-callable Catalyst expressions — shared by
@@ -37,10 +38,14 @@ object FunctionDefs {
         .BloomFilterMightContain(e(0), e(1))))
 
   /** Register every function on an EXISTING session (temp-function
-    * registry; idempotent, createOrReplace semantics). */
-  def registerAll(spark: SparkSession): Unit =
+    * registry; idempotent). Query builders call this on every
+    * construction, so names the session already has (an earlier call, or
+    * the extension injector) are left as they are, not replaced. */
+  def registerAll(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
     all.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        name, builder, "built-in")
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, builder, "built-in")
     }
+  }
 }

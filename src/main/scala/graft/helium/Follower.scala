@@ -51,7 +51,10 @@ object Follower {
     * session's `defaultParallelism` before the per-partition fetch loop,
     * so a batch's calls run on every core at once. An explicit partition
     * count is not coalesced by AQE, which would otherwise fold the small
-    * `distinct` shuffle into one partition and serialize every call. */
+    * `distinct` shuffle into one partition and serialize every call.
+    * Each partition fetches its hashes in windows of [[NodeClient.Window]]
+    * through [[NodeClient.getTxnJsons]], so a remote node has a window of
+    * calls in flight per partition; the calls are still one per hash. */
   def fetchPayloads(spark: SparkSession, node: NodeClient,
       blocks: DataFrame, mode: EtlMode): DataFrame = {
     import org.apache.spark.sql.Row
@@ -63,9 +66,8 @@ object Follower {
       .repartition(spark.sparkContext.defaultParallelism, col("hash"))
       .distinct()
     val fetched = hashes.rdd.mapPartitions { it =>
-      it.flatMap { r =>
-        val h = r.getString(0)
-        node.getTxnJson(h).map(Row(h, _))
+      it.map(_.getString(0)).grouped(NodeClient.Window).flatMap { hs =>
+        hs.zip(node.getTxnJsons(hs)).flatMap { case (h, json) => json.map(Row(h, _)) }
       }
     }
     val raw = spark.createDataFrame(fetched,

@@ -1,6 +1,8 @@
 package graft.helium
 
 import java.nio.charset.StandardCharsets.UTF_8
+import java.util.concurrent.{Callable, ExecutionException, LinkedBlockingQueue,
+  ThreadPoolExecutor, TimeUnit}
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 
@@ -18,6 +20,16 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
   * opens its own connection, so executor-side [[source.BlockPartitionReader]]s
   * fetch their height ranges in parallel with no shared client. The
   * Jackson mapper is per-JVM (`@transient lazy`).
+  *
+  * Each call is a round-trip the caller would otherwise wait out alone, so
+  * the batch reads ([[getBlockJsons]], [[getTxnJsons]]) put a whole window
+  * of calls in flight at once: each key's call runs on one JVM-wide pool
+  * of [[NodeClient.Window]] daemon threads, shared by every task of the
+  * executor, and the results come back in key order. The calls are the
+  * same ones, one per key, with the retry rules below; only their waits
+  * overlap. The first failing key (in key order) rethrows its own
+  * exception, and the window's outstanding calls are cancelled, as they
+  * are when the waiting task is interrupted.
   *
   * Transient failures (transport errors, HTTP 5xx/408/429, JSON-RPC
   * -32603 / -32000..-32099 server errors) are retried executor-side up to
@@ -41,9 +53,9 @@ class HttpNode(endpoint: String, maxAttempts: Int = 3) extends NodeClient {
       conn.setReadTimeout(30000)
       conn.setDoOutput(true)
       // no conn.disconnect() on the SUCCESS path: closing the streams
-      // returns the socket to the JDK keep-alive pool, so a partition's
-      // one-POST-per-height fetch loop reuses one TCP (and TLS) connection
-      // instead of handshaking per block
+      // returns the socket to the JDK keep-alive pool, so successive
+      // windows of calls reuse their TCP (and TLS) connections instead
+      // of handshaking per block
       val out = conn.getOutputStream
       try out.write(body.getBytes(UTF_8)) finally out.close()
       val code = conn.getResponseCode
@@ -168,9 +180,46 @@ class HttpNode(endpoint: String, maxAttempts: Int = 3) extends NodeClient {
     call("transaction_get",
       Some(mapper.writeValueAsString(
         mapper.createObjectNode().put("hash", hash))))
+
+  override def getBlockJsons(heights: Seq[Long]): Seq[Option[String]] =
+    HttpNode.inFlight(heights)(getBlockJson)
+
+  override def getTxnJsons(hashes: Seq[String]): Seq[Option[String]] =
+    HttpNode.inFlight(hashes)(getTxnJson)
 }
 
 object HttpNode {
+  /** Where every HttpNode in the JVM runs its batch reads' calls: at most
+    * [[NodeClient.Window]] at once, on daemon threads that exit when idle. */
+  private lazy val pool: ThreadPoolExecutor = {
+    val p = new ThreadPoolExecutor(NodeClient.Window, NodeClient.Window,
+      30L, TimeUnit.SECONDS, new LinkedBlockingQueue[Runnable](), r => {
+        val t = new Thread(r, "graft-node-call")
+        t.setDaemon(true)
+        t
+      })
+    p.allowCoreThreadTimeOut(true)
+    p
+  }
+
+  /** `f` of every key, run concurrently on [[pool]], results in key order.
+    * Waiting in key order makes the first failing KEY's exception the one
+    * rethrown (unwrapped from its `ExecutionException`); on that failure,
+    * or when the waiting thread is interrupted (a killed task), the calls
+    * still outstanding are cancelled. */
+  private def inFlight[K, V](keys: Seq[K])(f: K => V): Seq[V] = {
+    val calls = keys.iterator
+      .map(k => pool.submit(new Callable[V] { def call(): V = f(k) }))
+      .toVector
+    try calls.map { c =>
+      try c.get() catch { case e: ExecutionException => throw e.getCause }
+    } catch {
+      case t: Throwable =>
+        calls.foreach(_.cancel(true))
+        throw t
+    }
+  }
+
   /** A failure worth retrying (transport, HTTP 5xx/408/429, JSON-RPC
     * -32603/-32000..-32099). Extends IOException so callers that treat
     * node failures generically (lenient scans, the streaming source)

@@ -6,6 +6,13 @@ package graft.helium
   * src/block_processor.rs:29,58). Implementations must be Serializable so
   * executor-side readers of the streaming source can fetch blocks in
   * parallel partitions.
+  *
+  * Fetch loops (the stream's per-partition block reader and the follower's
+  * per-partition payload fetch) call the batch reads [[getBlockJsons]] and
+  * [[getTxnJsons]] one window of at most [[NodeClient.Window]] keys at a
+  * time. The default batch read loops over the single-key call, so a
+  * local backend needs nothing more; [[HttpNode]] keeps a whole window of
+  * calls in flight at once.
   */
 trait NodeClient extends Serializable {
   /** Current chain height (S1). */
@@ -16,9 +23,21 @@ trait NodeClient extends Serializable {
   /** Full txn payload JSON by hash, None if unknown (S3).
     * Shape: {"hash":"..","type":"..","fields":"{...json...}"} */
   def getTxnJson(hash: String): Option[String]
+  /** [[getBlockJson]] for each height, results in key order. A failure
+    * is the first failing height's own exception. */
+  def getBlockJsons(heights: Seq[Long]): Seq[Option[String]] =
+    heights.map(getBlockJson)
+  /** [[getTxnJson]] for each hash, results in key order. A failure is the
+    * first failing hash's own exception. */
+  def getTxnJsons(hashes: Seq[String]): Seq[Option[String]] =
+    hashes.map(getTxnJson)
 }
 
 object NodeClient {
+  /** Keys per batch read in the fetch loops, and [[HttpNode]]'s bound on
+    * node calls in flight per JVM. */
+  val Window = 16
+
   /** Backend dispatch by address scheme — the single place a node address
     * becomes a client: `fixture:///dir` (or a bare directory path) →
     * [[FixtureNode]]; `http(s)://host:port` → [[HttpNode]] (JSON-RPC 2.0,

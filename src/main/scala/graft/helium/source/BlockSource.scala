@@ -23,8 +23,9 @@ import graft.helium.NodeClient
   * Offsets are block heights: a micro-batch covers the half-open height
   * range (start, end], exactly the drain-until-caught-up loop of
   * src/follower.rs:70-97 — but the heights inside one batch are fetched in
-  * parallel across `partitions` executor slices, which is the scale-out the
-  * single-threaded reference lacks (SURVEY §3.1).
+  * parallel across `partitions` executor slices, each keeping a window of
+  * node calls in flight, which is the scale-out the single-threaded
+  * reference lacks (SURVEY §3.1).
   *
   * Rows are (height, json) — payload parsing happens declaratively with
   * `from_json` downstream so Catalyst can prune/push as usual.
@@ -173,21 +174,34 @@ class BlockMicroBatchStream(options: Map[String, String])
   override def getDefaultReadLimit: ReadLimit =
     maxPerBatch.map(m => ReadLimit.maxRows(m)).getOrElse(ReadLimit.allAvailable())
 
+  /** The tip [[latestOffset]] read and [[reportLatestOffset]] has not yet
+    * reported: the engine asks for both on every trigger, one right after
+    * the other, and they share one `block_height` call. */
+  private var unreportedTip: Option[Long] = None
+
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val tip = fixedTip.getOrElse(node.height())
+    val tip = fixedTip.getOrElse {
+      val t = node.height()
+      unreportedTip = Some(t)
+      t
+    }
     val s = start.asInstanceOf[HeightOffset].height
     HeightOffset(maxPerBatch.map(m => math.min(tip, s + m)).getOrElse(tip))
   }
 
-  override def reportLatestOffset(): Offset =
-    HeightOffset(fixedTip.getOrElse(node.height()))
+  override def reportLatestOffset(): Offset = {
+    val tip = fixedTip.orElse(unreportedTip).getOrElse(node.height())
+    unreportedTip = None
+    HeightOffset(tip)
+  }
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[HeightOffset].height
     val e = end.asInstanceOf[HeightOffset].height
     if (e <= s) return Array.empty
-    // split (s, e] into ranges; one fetch loop per partition (the
-    // reference fetches serially: src/follower.rs:86-97)
+    // split (s, e] into ranges; one fetch loop per partition, each with
+    // a window of NodeClient.Window calls in flight (the reference
+    // fetches serially, one call at a time: src/follower.rs:86-97)
     val n = math.min(numPartitions.toLong, e - s).toInt
     (0 until n).map { i =>
       val lo = s + 1 + i * (e - s) / n
@@ -214,22 +228,31 @@ case class HeightRangePartition(lo: Long, hi: Long,
     options: Map[String, String], lenient: Boolean = false)
   extends InputPartition
 
+/** Reads its range one window of [[NodeClient.Window]] heights at a time
+  * ([[NodeClient.getBlockJsons]]), so a remote node has the whole window
+  * in flight; rows and gaps are still handled in height order. */
 class BlockPartitionReader(p: HeightRangePartition)
     extends PartitionReader[InternalRow] {
   private val node = BlockSource.nodeFor(p.options)
-  private var h = p.lo - 1
+  /** First height not yet fetched. */
+  private var unfetched = p.lo
+  private var window: Iterator[(Long, Option[String])] = Iterator.empty
   private var current: InternalRow = _
 
   override def next(): Boolean = {
     while (true) {
-      h += 1
-      if (h > p.hi) return false
-      node.getBlockJson(h) match {
-        case Some(json) =>
+      if (!window.hasNext) {
+        if (unfetched > p.hi) return false
+        val hs = unfetched to math.min(p.hi, unfetched + NodeClient.Window - 1)
+        unfetched = hs.last + 1
+        window = hs.iterator.zip(node.getBlockJsons(hs))
+      }
+      window.next() match {
+        case (h, Some(json)) =>
           current = InternalRow(h, UTF8String.fromString(json))
           return true
-        case None if p.lenient => () // skip gap, keep scanning
-        case None =>
+        case (_, None) if p.lenient => () // skip gap, keep scanning
+        case (h, None) =>
           throw new IllegalStateException(s"Couldn't get block $h")
       }
     }

@@ -2,7 +2,7 @@ package graft.operators
 
 import java.util.concurrent.Executors
 
-import scala.concurrent.duration.Duration
+import scala.concurrent.duration._
 import scala.concurrent.{Await, ExecutionContext, Future}
 
 /** Concurrent-action helper for composed pipelines — the "overlap
@@ -30,13 +30,18 @@ object Overlap {
       t
     }))
 
+  /** How long a failed foreground leg waits for the background leg. */
+  private val DrainBound = 5.minutes
+
   /** Evaluate `a` and `b` concurrently (`a` on a pool thread, `b` on the
     * calling thread) and return both — blocks until BOTH complete, so
     * pins/checkpoints referenced by either leg stay live throughout.
     * `spark.graft.overlap=false` degrades to sequential evaluation
-    * (a then b) for A/B measurement and contention triage. */
-  def both[A, B](s: org.apache.spark.sql.SparkSession, a: => A, b: => B)
-      : (A, B) = {
+    * (a then b) for A/B measurement and contention triage. If `b` fails,
+    * its exception is rethrown once `a` has finished, or after
+    * `drainBound` if `a` has not. */
+  def both[A, B](s: org.apache.spark.sql.SparkSession, a: => A, b: => B,
+      drainBound: Duration = DrainBound): (A, B) = {
     if (graft.Conf.flag(s, "spark.graft.overlap", true)) {
       val fa = Future(a)(pool)
       val rb =
@@ -46,8 +51,12 @@ object Overlap {
             // drain the background leg before rethrowing: the caller's
             // finally/releaseAll would otherwise unpin caches the pool
             // thread is still reading (recomputation + confusing
-            // concurrent failures); its own failure is secondary here
-            try Await.result(fa, Duration.Inf)
+            // concurrent failures); its own failure is secondary here.
+            // The wait is bounded: a background leg that hangs (say, on
+            // something the failed leg was to produce) must not turn the
+            // failure into a deadlock, so after `drainBound` the original
+            // exception is rethrown anyway
+            try Await.result(fa, drainBound)
             catch { case _: Throwable => () }
             throw t
         }

@@ -219,4 +219,19 @@ class FunctionsSpec extends SparkSuite {
     }
     assert(rows(0)._1 != rows(1)._1)
   }
+
+  test("a second register replaces no registered function") {
+    val registry = spark.sessionState.functionRegistry
+    def infos() = FunctionDefs.all.map { case (name, _) =>
+      registry.lookupFunction(
+        org.apache.spark.sql.catalyst.FunctionIdentifier(name)).get
+    }
+    val before = infos()
+    HashSketch.register(spark)
+    DotQ.register(spark)
+    // a replacement registers a fresh ExpressionInfo under the name
+    infos().zip(before).zip(FunctionDefs.all.map(_._1)).foreach {
+      case ((after, was), name) => assert(after eq was, s"$name was replaced")
+    }
+  }
 }

@@ -24,10 +24,20 @@ class MockNodeHttpServer(backend: NodeClient) {
   private val failMethod =
     new java.util.concurrent.atomic.AtomicReference[String](null)
   private val failRemaining = new java.util.concurrent.atomic.AtomicInteger(0)
-  def armFailures(method: String, n: Int): Unit = {
+  /** Keys (the `height` or `hash` param) the armed failures hit; empty
+    * means every call of the method. */
+  @volatile private var failKeys = Set.empty[String]
+  def armFailures(method: String, n: Int, keys: Set[String] = Set.empty): Unit = {
+    failKeys = keys
     failMethod.set(method)
     failRemaining.set(n)
   }
+  /** Holds every request this long before answering — a slow node, so
+    * that overlapping calls are certain to overlap on the server. */
+  @volatile var delayMs = 0L
+  private val inFlight = new java.util.concurrent.atomic.AtomicInteger(0)
+  /** Most requests the server was handling at one time. */
+  val maxInFlight = new java.util.concurrent.atomic.AtomicInteger(0)
   /** Arms `n` consecutive HTTP-level failures with the given status on
     * EVERY request — models a misconfigured endpoint (404/401) or a
     * rate-limiting proxy (429/503) in front of the node. */
@@ -45,6 +55,13 @@ class MockNodeHttpServer(backend: NodeClient) {
   server.setExecutor(java.util.concurrent.Executors.newCachedThreadPool())
   server.createContext("/", new HttpHandler {
     override def handle(ex: HttpExchange): Unit = {
+      maxInFlight.accumulateAndGet(inFlight.incrementAndGet(), (a, b) => math.max(a, b))
+      try {
+        if (delayMs > 0) Thread.sleep(delayMs)
+        respond(ex)
+      } finally inFlight.decrementAndGet()
+    }
+    private def respond(ex: HttpExchange): Unit = {
       val req = mapper.readTree(ex.getRequestBody)
       val id = Option(req.get("id")).map(_.asText()).getOrElse("1")
       val method = Option(req.get("method")).map(_.asText()).getOrElse("")
@@ -63,11 +80,14 @@ class MockNodeHttpServer(backend: NodeClient) {
         ex.close()
         return
       }
+      val key = Option(params).flatMap(p =>
+        Option(p.get("height")).orElse(Option(p.get("hash")))).map(_.asText())
       val body = if (method == failMethod.get() &&
+          (failKeys.isEmpty || key.exists(failKeys)) &&
           failRemaining.getAndUpdate(n => math.max(n - 1, 0)) > 0)
         // a server-side failure that is NOT "no such entity" — the
         // client must throw, never map this to a silent None/gap
-        s"""{"jsonrpc":"2.0","id":"$id","error":{"code":-32603,"message":"internal error"}}"""
+        s"""{"jsonrpc":"2.0","id":"$id","error":{"code":-32603,"message":"internal error at ${key.getOrElse("")}"}}"""
       else {
         val result: Option[String] = method match {
           case "block_height" => Some(s"""{"height":${backend.height()}}""")
@@ -286,6 +306,126 @@ class HttpNodeSpec extends SparkSuite {
       assert(served("transaction_get") == 7)
       assert(spark.read.parquet(s"$root/transactions").count() == 7)
       assert(spark.read.parquet(s"$root/rewards").count() == 5)
+    } finally srv.stop()
+  }
+
+  test("batch reads keep more than one call in flight and answer in key order") {
+    val dir = copiedFixture()
+    val fix = new FixtureNode(dir)
+    val srv = new MockNodeHttpServer(fix)
+    try {
+      srv.delayMs = 50
+      val http = new HttpNode(srv.endpoint)
+      val heights = (98L to 107L).toVector // 100..105 exist
+      val blocks = http.getBlockJsons(heights)
+      assert(srv.maxInFlight.get() > 1,
+        "one thread's batch read had at most one call in flight")
+      assert(blocks.map(_.map(normalize)) ==
+        heights.map(h => fix.getBlockJson(h).map(normalize)))
+      // one call per key, no more
+      assert(srv.served.get("block_get").intValue() == heights.size)
+      val hashes = fix.getBlockJsons(100L to 105L).flatten.flatMap { b =>
+        """"hash"\s*:\s*"([^"]+)"\s*,\s*"type"""".r.findAllMatchIn(b)
+          .map(_.group(1))
+      }.toVector :+ "no_such_hash"
+      assert(hashes.size > 2)
+      assert(http.getTxnJsons(hashes).map(_.map(normalize)) ==
+        hashes.map(h => fix.getTxnJson(h).map(normalize)))
+    } finally srv.stop()
+  }
+
+  test("a persistent -32603 in the middle of a window surfaces as the " +
+    "first failing key's IOException") {
+    val srv = new MockNodeHttpServer(new FixtureNode(copiedFixture()))
+    try {
+      val http = new HttpNode(srv.endpoint)
+      srv.armFailures("block_get", 1000, keys = Set("102", "104"))
+      val e = intercept[java.io.IOException] {
+        http.getBlockJsons(100L to 105L)
+      }
+      assert(e.getMessage.contains("-32603") && e.getMessage.endsWith("at 102"),
+        e.getMessage)
+      srv.armFailures("transaction_get", 1000, keys = Set("abc", "xyz"))
+      val t = intercept[java.io.IOException] {
+        http.getTxnJsons(Seq("no_such_hash", "abc", "xyz"))
+      }
+      assert(t.getMessage.endsWith("at abc"), t.getMessage)
+      srv.armFailures("transaction_get", 0)
+      assert(http.getBlockJsons(100L to 105L).forall(_.nonEmpty))
+    } finally srv.stop()
+  }
+
+  test("an interrupted batch read returns at once and cancels its queued calls") {
+    val srv = new MockNodeHttpServer(new FixtureNode(copiedFixture()))
+    try {
+      srv.delayMs = 300
+      val http = new HttpNode(srv.endpoint)
+      val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]
+      val reader = new Thread(() =>
+        try http.getBlockJsons(Vector.fill(5)(100L to 105L).flatten)
+        catch { case t: Throwable => failure.set(t) })
+      reader.start()
+      Thread.sleep(100)
+      reader.interrupt()
+      reader.join(5000)
+      assert(!reader.isAlive, "the interrupted read kept waiting")
+      assert(failure.get().isInstanceOf[InterruptedException], failure.get())
+      Thread.sleep(1000) // the calls already in flight finish
+      // 30 calls were asked for; at most one pool's worth had started
+      val served = srv.served.getOrDefault("block_get", 0).intValue()
+      assert(served <= NodeClient.Window, s"$served calls reached the node")
+    } finally srv.stop()
+  }
+
+  test("a strict read names the first missing height of its window") {
+    val fix = new FixtureNode(copiedFixture())
+    val gappy = new NodeClient {
+      override def height(): Long = 110L
+      override def getBlockJson(h: Long): Option[String] =
+        if (h == 102L || h == 104L) None else fix.getBlockJson(h)
+      override def getTxnJson(hash: String): Option[String] = fix.getTxnJson(hash)
+    }
+    withServer(gappy) { endpoint =>
+      val reader = new graft.helium.source.BlockPartitionReader(
+        graft.helium.source.HeightRangePartition(100L, 105L,
+          Map("node" -> endpoint)))
+      val got = scala.collection.mutable.ArrayBuffer.empty[Long]
+      val e = intercept[IllegalStateException] {
+        while (reader.next()) got += reader.get().getLong(0)
+      }
+      assert(e.getMessage == "Couldn't get block 102")
+      assert(got == Seq(100L, 101L))
+      // a lenient read of the same range skips both gaps
+      val lenient = new graft.helium.source.BlockPartitionReader(
+        graft.helium.source.HeightRangePartition(100L, 105L,
+          Map("node" -> endpoint), lenient = true))
+      got.clear()
+      while (lenient.next()) got += lenient.get().getLong(0)
+      assert(got == Seq(100L, 101L, 103L, 105L))
+    }
+  }
+
+  test("each trigger of the stream asks the node for its height once") {
+    val dir = copiedFixture()
+    val srv = new MockNodeHttpServer(new FixtureNode(dir))
+    val ckpt = tmpDir("heightckpt")
+    try {
+      def heightCalls = srv.served.getOrDefault("block_height", 0).intValue()
+      for (run <- 1 to 3) {
+        val before = heightCalls
+        val q = spark.readStream
+          .format(classOf[graft.helium.source.BlockSourceProvider].getName)
+          .option("node", srv.endpoint)
+          .option("startHeight", "99")
+          .load()
+          .writeStream.format("noop")
+          .option("checkpointLocation", ckpt)
+          .trigger(org.apache.spark.sql.streaming.Trigger.Once())
+          .start()
+        try q.awaitTermination() finally q.stop()
+        assert(heightCalls - before == 1,
+          s"run $run: ${heightCalls - before} block_height calls for one trigger")
+      }
     } finally srv.stop()
   }
 
