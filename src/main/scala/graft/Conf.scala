@@ -2,12 +2,32 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The one reader for boolean `spark.graft.*` switches, so every switch
-  * parses the same way: `true`/`false` in any case; unset → `default`;
-  * anything else fails loudly with the key named — a typo'd switch
+/** The one reader for `spark.graft.*` switches and numbers, so every
+  * knob parses the same way and fails loudly with its key named: a
+  * switch is `true`/`false` in any case, a number a plain decimal whole
+  * number in range; unset → the default (or None). A typo'd switch
   * (`pin=0`, `overlap=off`) must not silently run the other arm of an
-  * A/B. */
+  * A/B, and a typo'd number (`maxDeltaChain=4x`) must say which knob it
+  * was. */
 object Conf {
+
+  def long(s: SparkSession, key: String): Option[Long] =
+    number(s, key, _.toLongOption)
+
+  def long(s: SparkSession, key: String, default: Long): Long =
+    long(s, key).getOrElse(default)
+
+  def int(s: SparkSession, key: String): Option[Int] =
+    number(s, key, _.toIntOption)
+
+  def int(s: SparkSession, key: String, default: Int): Int =
+    int(s, key).getOrElse(default)
+
+  private def number[A](s: SparkSession, key: String,
+      parse: String => Option[A]): Option[A] =
+    s.conf.getOption(key).map(v => parse(v).getOrElse(
+      throw new IllegalArgumentException(
+        s"$key must be a whole number, got '$v'")))
 
   def flag(s: SparkSession, key: String, default: Boolean): Boolean =
     s.conf.getOption(key).fold(default) { v =>

@@ -40,31 +40,38 @@ import graft.operators.IndexGenerations
   * graft.Nightly <text|media> shards-status  <shardsRoot>
   * graft.Nightly <text|media> audit-shards   <shardsRoot>
   * graft.Nightly <text|media> delete-docs    <shardsRoot> --ids <id,...>
+  * graft.Nightly <text|media> feed <shardsRoot> --epoch <n> --readers <k>
+  *                            [--out <dir> [--materialize]] ...
   * graft.Nightly <text|media> reconcile <indexDir> --shards <root>
   * }}}
   *
-  * `night` is the exactly-once production night: on text it writes the
-  * shard increment under `<shards root>/night=<nightId>` AND folds the
-  * index from one delta scan (`TextDedupOps.p04Night` — pass the SAME
-  * `--shards` root every night; each night is its own partition and a
-  * rerun of a committed id is a recorded no-op); on media and vec it
-  * is the recorded advance alone (`MultimodalOps.m12Night` /
-  * `SimilarityOps.s24Night` — no shard half, same night-id ledger).
-  * The vec axis reads embeddings-shaped parquet (vec_id, embedding,
-  * label) where text/media read documents-shaped.
+  * Every index command resolves the axis once to its
+  * [[graft.queries.DeltaAxis]] and runs that descriptor's lifecycle
+  * step — one implementation for all three axes; the axis supplies only
+  * its input rows ([[graft.queries.DeltaAxis.fromDocs]]: documents-
+  * shaped parquet on text/media, media payloads derived through
+  * [[graft.multimodal.Media.mediaFromDocuments]] as the m12 query face
+  * does; embeddings-shaped parquet (vec_id, embedding, label) on vec),
+  * its index rows, verdict core and corpus columns.
   *
   * `build` distills a base corpus into generation 0
-  * (`TextDedupOps.d24Build` / `MultimodalOps.m12Build`); `advance`
-  * runs one crawl night — verdicts for the delta against the live
-  * index, admitted uniques folded into generation N+1 (rewrite or LSM
-  * per `spark.graft.index.advanceMode`, chain bounded by
-  * `maxDeltaChain`'s same-night auto-compact), verdicts optionally
-  * written as the night's artifact, superseded generations optionally
-  * pruned. Confs arrive via `SPARK_GRAFT_CONF=k=v,k=v`
-  * ([[SparkEntry.applyEnvConf]], the Bench/Verify knob). Media nights
-  * read the same documents-shaped parquet and derive their payloads
-  * through [[graft.multimodal.Media.mediaFromDocuments]], matching the
-  * m12 query face.
+  * ([[graft.queries.DeltaAxis.build]]); `advance`
+  * ([[graft.queries.DeltaAxis.advance]]) runs one crawl night —
+  * verdicts for the delta against the live index, admitted uniques
+  * folded into generation N+1 (rewrite or LSM per
+  * `spark.graft.index.advanceMode`, chain bounded by `maxDeltaChain`'s
+  * same-night auto-compact), verdicts optionally written as the night's
+  * artifact, superseded generations optionally pruned. `night`
+  * ([[graft.queries.DeltaAxis.night]]) is the exactly-once production
+  * night: the recorded advance plus, where the axis has a corpus, the
+  * night's partition under `<shards root>/night=<nightId>` from the
+  * same delta scan — text requires `--shards` (pass the SAME root every
+  * night; each night is its own partition and a rerun of a committed id
+  * is a recorded no-op) and writes packed shards, media writes its
+  * admitted payloads when given `--shards`, vec has no corpus. `judge`
+  * is the dry run ([[graft.queries.DeltaAxis.judge]]). Confs arrive via
+  * `SPARK_GRAFT_CONF=k=v,k=v` ([[SparkEntry.applyEnvConf]], the
+  * Bench/Verify knob).
   *
   * Prints ONE JSON line per command (generation, verdict breakdown) —
   * the driver-parseable shape Bench established. */
@@ -72,10 +79,12 @@ object Nightly {
 
   private val Usage =
     "usage: graft.Nightly <text|media|vec> " +
-      "<build|advance|night|compact|prune|status|retract> " +
+      "<build|advance|night|judge|compact|prune|status|retract> " +
       "<indexDir> [<parquetDir>] [--verdicts <dir>] [--prune] " +
-      "[--clean-lines] " +
-      "[--id <nightId> --shards <dir>] | graft.Nightly <text|media> " +
+      "[--clean-lines] [--ids <id,...>] " +
+      "[--id <nightId> [--shards <dir>]] | graft.Nightly all " +
+      "<night|status|reconcile|judge> <indexBase> ... | " +
+      "graft.Nightly <text|media> " +
       "<compact-shards|prune-shards|shards-status|audit-shards|" +
       "delete-docs|feed> <shardsRoot> [--into <nightId>] " +
       "[--ids <id,...>] [--epoch <n> --readers <k> [--nights <id,...>] " +
@@ -154,7 +163,8 @@ object Nightly {
       }
       return per.mkString(s"""{"metric":"nightly_all_$cmd",""", ",", "}")
     }
-    require(Set("text", "media", "vec")(axis), Usage)
+    val ax = queries.DeltaAxis.byName(axis)
+      .getOrElse(throw new IllegalArgumentException(Usage))
     val rest = args.drop(3)
     // --format jsonl reads the crawl dump through the ingestion face
     // (graft.sources.Jsonl: explicit schema, reject capture, id
@@ -175,41 +185,42 @@ object Nightly {
     val cleanLinesFlag = rest.contains("--clean-lines")
     require(!cleanLinesFlag || axis == "text",
       "--clean-lines is a text-axis option\n" + Usage)
-    def docsAt(path: String): DataFrame = {
+    // the axis's input rows: documents- (text, media) or
+    // embeddings-shaped (vec) rows through the axis's fromDocs
+    def inputAt(path: String): DataFrame = {
       val raw =
         if (axis != "vec" && jsonlFlag.getOrElse(
             path.endsWith(".jsonl") || path.endsWith(".json")))
           sources.Jsonl.documents(s, path)
         else s.read.parquet(path)
-      if (!cleanLinesFlag) raw
-      else {
+      ax.fromDocs(if (!cleanLinesFlag) raw else {
         val cleaned = raw.withColumn("text",
           graft.functions.TextFns.cleanLines(col("text")))
         if (cleaned.columns.contains("n_chars"))
           cleaned.withColumn("n_chars", length(col("text")).cast("long"))
         else cleaned
-      }
+      })
     }
-    def mediaAt(path: String) =
-      graft.multimodal.Media.mediaFromDocuments(docsAt(path))
     def line(fields: (String, String)*): String =
       fields.map { case (k, v) => s""""$k":$v""" }
         .mkString("{", ",", "}")
-    def corpusIdCol(ax: String): String =
-      if (ax == "media") "media_id" else "doc_id"
+    // the shard-corpus commands' (id, content) columns
+    def corpusCols: (String, String) = ax.corpusCols.getOrElse(
+      throw new IllegalArgumentException(
+        s"no shard corpus on the $axis axis"))
     def genField = "gen" ->
       IndexGenerations.currentGen(s, indexDir).getOrElse(-1L).toString
+    def verdictCounts(v: DataFrame): String = {
+      val counts = v.groupBy("verdict").count()
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      Seq("exact", "near", "unique")
+        .map(k => s""""$k":${counts.getOrElse(k, 0L)}""")
+        .mkString("{", ",", "}")
+    }
     cmd match {
       case "build" =>
         val path = rest.headOption.getOrElse(sys.error(Usage))
-        axis match {
-          case "text"  => queries.TextDedupOps.d24Build(s, indexDir,
-            docsAt(path))
-          case "media" => queries.MultimodalOps.m12Build(s, indexDir,
-            mediaAt(path))
-          case "vec"   => queries.SimilarityOps.s24Build(s, indexDir,
-            docsAt(path))
-        }
+        ax.build(s, indexDir, inputAt(path))
         val n = IndexGenerations.readCurrent(s, indexDir).count()
         line("metric" -> "\"nightly_build\"", "axis" -> s""""$axis"""",
           genField, "index_rows" -> n.toString)
@@ -217,98 +228,51 @@ object Nightly {
       case "advance" =>
         val path = rest.headOption.getOrElse(sys.error(Usage))
         val flags = rest.tail
-        val v = axis match {
-          case "text"  => queries.TextDedupOps.d24Advance(s, indexDir,
-            docsAt(path).select("doc_id", "source", "text"))
-          case "media" => queries.MultimodalOps.m12Advance(s, indexDir,
-            mediaAt(path))
-          case "vec"   => queries.SimilarityOps.s24Advance(s, indexDir,
-            docsAt(path))
-        }
-        val counts = v.groupBy("verdict").count()
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+        val v = ax.advance(s, indexDir, inputAt(path))
+        val vs = verdictCounts(v)
         flags.sliding(2).collectFirst { case Seq("--verdicts", d) => d }
           .foreach(d => v.write.mode("overwrite").parquet(d))
         Pinned.releaseAll(s)
         if (flags.contains("--prune")) IndexGenerations.prune(s, indexDir)
-        val vs = Seq("exact", "near", "unique")
-          .map(k => s""""$k":${counts.getOrElse(k, 0L)}""")
-          .mkString("{", ",", "}")
         line("metric" -> "\"nightly_advance\"", "axis" -> s""""$axis"""",
           genField, "verdicts" -> vs,
           "pruned" -> flags.contains("--prune").toString)
 
       case "night" =>
-        // the COMPLETE production night, exactly-once per --id: on
-        // text, shard increment (under <shards>/night=<id>) + index
-        // fold from one delta scan; on media the night is the recorded
-        // advance alone (the m12 index has no shard half)
+        // the COMPLETE production night, exactly-once per --id: the
+        // recorded advance, plus the night's corpus partition under
+        // <shards>/night=<id> where the axis has one (text requires
+        // --shards; media writes its payloads when given it; vec has no
+        // corpus) — both halves from one delta scan
         val path = rest.headOption.getOrElse(sys.error(Usage))
         val flags = rest.tail
         def flag(name: String): Option[String] =
           flags.sliding(2).collectFirst { case Seq(`name`, v) => v }
         val nightId = flag("--id").getOrElse(
           sys.error("night requires --id <nightId>\n" + Usage))
-        def verdictField(v: DataFrame): (String, String) = {
-          val counts = v.groupBy("verdict").count()
-            .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-          // the night's verdict artifact, like advance's. Best-effort
-          // relative to the night's commit point (the index advance):
-          // a crash in the window after the commit loses only this
-          // artifact — the skipped rerun cannot regenerate it, because
-          // re-judging against the ADVANCED index would call every doc
-          // exact-against-itself. The verdict counts survive in the
-          // night's JSON line either way.
-          flag("--verdicts").foreach(d =>
-            v.write.mode("overwrite").parquet(d))
-          "verdicts" -> Seq("exact", "near", "unique")
-            .map(k => s""""$k":${counts.getOrElse(k, 0L)}""")
-            .mkString("{", ",", "}")
-        }
-        def pruneField: (String, String) = {
-          if (flags.contains("--prune"))
-            IndexGenerations.prune(s, indexDir)
-          "pruned" -> flags.contains("--prune").toString
-        }
-        val run: Option[Seq[(String, String)]] = axis match {
-          case "text" =>
-            val shardsDir = flag("--shards").getOrElse(
-              sys.error("a text night requires --shards <dir>\n" + Usage))
-            queries.TextDedupOps.p04Night(s, indexDir,
-              docsAt(path).select("doc_id", "source", "text"),
-              shardsDir, nightId).map { case (receipt, v) =>
-              val vf = verdictField(v)
-              val shards = receipt.count()
-              Pinned.releaseAll(s)
-              Seq(vf, "shards" -> shards.toString, pruneField)
-            }
-          case "media" =>
-            // --shards arms the media corpus half: the night's admitted
-            // unique payloads land under <shards>/night=<id>
-            queries.MultimodalOps.m12Night(s, indexDir, mediaAt(path),
-              nightId, flag("--shards")).map { v =>
-              val vf = verdictField(v)
-              Pinned.releaseAll(s)
-              Seq(vf, pruneField)
-            }
-          case "vec" =>
-            queries.SimilarityOps.s24Night(s, indexDir, docsAt(path),
-              nightId).map { v =>
-              val vf = verdictField(v)
-              Pinned.releaseAll(s)
-              Seq(vf, pruneField)
-            }
-        }
-        run match {
+        val head = Seq("metric" -> "\"nightly_night\"",
+          "axis" -> s""""$axis"""")
+        ax.night(s, indexDir, inputAt(path), nightId, flag("--shards")) match {
           case None =>
-            line("metric" -> "\"nightly_night\"",
-              "axis" -> s""""$axis"""", genField,
-              "id" -> s""""$nightId"""", "skipped" -> "true")
-          case Some(fields) =>
-            line(Seq("metric" -> "\"nightly_night\"",
-              "axis" -> s""""$axis"""", genField,
-              "id" -> s""""$nightId"""", "skipped" -> "false") ++
-              fields: _*)
+            line(head ++ Seq(genField, "id" -> s""""$nightId"""",
+              "skipped" -> "true"): _*)
+          case Some(night) =>
+            val vs = verdictCounts(night.verdicts)
+            // the night's verdict artifact, like advance's. Best-effort
+            // relative to the night's commit point (the index advance):
+            // a crash in the window after the commit loses only this
+            // artifact — the skipped rerun cannot regenerate it, because
+            // re-judging against the ADVANCED index would call every doc
+            // exact-against-itself. The verdict counts survive in the
+            // night's JSON line either way.
+            flag("--verdicts").foreach(d =>
+              night.verdicts.write.mode("overwrite").parquet(d))
+            val shards = night.receipt.map(r => "shards" -> r.count().toString)
+            Pinned.releaseAll(s)
+            if (flags.contains("--prune")) IndexGenerations.prune(s, indexDir)
+            line(head ++ Seq(genField, "id" -> s""""$nightId"""",
+              "skipped" -> "false", "verdicts" -> vs) ++ shards ++
+              Seq("pruned" -> flags.contains("--prune").toString): _*)
         }
 
       case "judge" =>
@@ -319,31 +283,13 @@ object Nightly {
         // flags then drive `night` for real.
         val path = rest.headOption.getOrElse(sys.error(Usage))
         val flags = rest.tail
-        graft.functions.HashSketch.register(s)
-        val index = IndexGenerations.readCurrent(s, indexDir)
-        val v = axis match {
-          case "text" => queries.TextDedupOps.deltaVerdicts(index,
-            Pinned.pin(queries.TextDedupOps.d24Sig(
-              docsAt(path).select("doc_id", "source", "text"))))
-          case "media" => queries.MultimodalOps.mediaDeltaVerdicts(
-            index,
-            Pinned.pin(queries.MultimodalOps.m12Fingerprints(
-              mediaAt(path))))
-          case "vec" => queries.SimilarityOps.vecDeltaVerdicts(index,
-            Pinned.pin(queries.SimilarityOps.s24Sig(docsAt(path))))
-        }
-        val pinnedV = Pinned.pin(v)
-        val counts = pinnedV.groupBy("verdict").count()
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+        val v = Pinned.pin(ax.judge(s, indexDir, inputAt(path)))
+        val vs = verdictCounts(v)
         flags.sliding(2).collectFirst { case Seq("--verdicts", d) => d }
-          .foreach(d => pinnedV.write.mode("overwrite").parquet(d))
+          .foreach(d => v.write.mode("overwrite").parquet(d))
         Pinned.releaseAll(s)
         line("metric" -> "\"nightly_judge\"", "axis" -> s""""$axis"""",
-          genField,
-          "verdicts" -> Seq("exact", "near", "unique")
-            .map(k => s""""$k":${counts.getOrElse(k, 0L)}""")
-            .mkString("{", ",", "}"),
-          "folded" -> "false")
+          genField, "verdicts" -> vs, "folded" -> "false")
 
       case "status" =>
         // read-only store inspection — what an operator checks before
@@ -386,10 +332,7 @@ object Nightly {
           .collectFirst { case Seq("--ids", v) => v }
           .getOrElse(sys.error("retract requires --ids <id,...>\n" + Usage))
           .split(",").map(_.trim.toLong).toSeq
-        val idCol = axis match {
-          case "text" => "doc_id"; case "media" => "media_id"
-          case "vec" => "vec_id"
-        }
+        val idCol = ax.idCol
         val colId = org.apache.spark.sql.functions.col(idCol)
         val liveIdx = IndexGenerations.readCurrent(s, indexDir)
         val hitIds = liveIdx.filter(colId.isin(ids: _*))
@@ -415,22 +358,22 @@ object Nightly {
       // the corpus-root lifecycle (graft.operators.Corpus) — here the
       // third positional is the SHARDS root, not an index dir. The
       // text corpus keys on doc_id/text; the media payload corpus
-      // (m12Night --shards) on media_id/payload.
+      // (a media night given --shards) on media_id/payload.
       case "compact-shards" =>
-        require(axis != "vec", "no shard corpus on the vec axis")
+        val idc = corpusCols._1
         val into = rest.sliding(2)
           .collectFirst { case Seq("--into", v) => v }
           .getOrElse(sys.error(
             "compact-shards requires --into <nightId>\n" + Usage))
         val ran = operators.Corpus.compactNights(s, indexDir, into,
-          idCol = corpusIdCol(axis))
+          idCol = idc)
         line("metric" -> "\"shards_compact\"",
           "into" -> s""""$into"""", "skipped" -> (!ran).toString,
           "live" -> operators.Corpus.liveNights(s, indexDir)
             .map(id => s""""$id"""").mkString("[", ",", "]"))
 
       case "prune-shards" =>
-        require(axis != "vec", "no shard corpus on the vec axis")
+        corpusCols
         // --pin <id,...>: absorbed nights a long-running consumer is
         // still re-reading via readNights survive this prune
         val pins = rest.sliding(2)
@@ -445,7 +388,7 @@ object Nightly {
             .map(id => s""""$id"""").mkString("[", ",", "]"))
 
       case "shards-status" =>
-        require(axis != "vec", "no shard corpus on the vec axis")
+        corpusCols
         val committed = operators.Corpus.committedNights(s, indexDir)
         val live = operators.Corpus.liveNights(s, indexDir)
         // ONE corpus scan: rows is the sum of the per-night counts
@@ -478,7 +421,7 @@ object Nightly {
         // with --materialize, the FULL corpus rows in epoch order, one
         // file per rank, the layout a loader reads sequentially with
         // no join-back. Without --out it is a dry-run balance report.
-        require(axis != "vec", "no shard corpus on the vec axis")
+        val idc = corpusCols._1
         def intFlag(name: String): Int = rest.sliding(2)
           .collectFirst { case Seq(`name`, v) => v.toInt }
           .getOrElse(sys.error(s"feed requires $name <n>\n$Usage"))
@@ -499,7 +442,6 @@ object Nightly {
         val materialize = rest.contains("--materialize")
         require(!materialize || outFlag.isDefined,
           "--materialize requires --out\n" + Usage)
-        val idc = corpusIdCol(axis)
         val docs0 = nights match {
           case Some(ids) => operators.Corpus.readNights(s, indexDir, ids)
           case None      => operators.Corpus.readCommitted(s, indexDir)
@@ -530,7 +472,7 @@ object Nightly {
             operators.EpochFeed.mixtureKeep(col(idc), ratePm, epoch))
         }
         val withTok0 =
-          if (axis == "media")
+          if (ax == queries.DeltaAxis.Media)
             docs.withColumn("__feed_tok",
               length(col("payload")).cast("long"))
           else docs.withColumn("__feed_tok", col("n_toks").cast("long"))
@@ -581,29 +523,36 @@ object Nightly {
               .getFileSystem(s.sparkContext.hadoopConfiguration)
             val marker =
               new org.apache.hadoop.fs.Path(dir, "_FEED_COMMITTED")
-            // overwrite discipline: parquet overwrite is delete+write,
-            // not atomic — drop the marker FIRST so a reader honoring
-            // it sees "in-flight" for the whole rewrite instead of a
-            // torn mix of old and new files, and stamp it LAST with
-            // the spec that produced the artifact
-            fs.delete(marker, false)
-            if (materialize)
-              operators.EpochFeed.writeMaterialized(
-                docs.join(assign.drop("weight"), Seq(idc)),
-                readers, dir)
-            else
-              assign.write.mode("overwrite").partitionBy("reader")
-                .parquet(dir)
-            val os = fs.create(marker, true)
-            try os.write((Seq(
-              s"axis=$axis", s"epoch=$epoch", s"readers=$readers",
-              s"materialize=$materialize") ++
-              splitFlag.map(v => s"split=$v") ++
-              rates.map(rm => "rates=" + rm.toSeq.sorted
-                .map { case (k, v) => s"$k=$v" }.mkString(",")) ++
-              nights.map(ns => "nights=" + ns.mkString(",")))
-              .mkString("\n").getBytes("UTF-8"))
-            finally os.close()
+            // single writer per --out root (the index store's lease):
+            // two feeds racing on one epoch dir would interleave their
+            // deletes and writes under one marker. The lease file sits
+            // at the root, not in the epoch dir, whose overwrite
+            // deletes the whole directory.
+            IndexGenerations.withLease(s, out) {
+              // overwrite discipline: parquet overwrite is delete+write,
+              // not atomic — drop the marker FIRST so a reader honoring
+              // it sees "in-flight" for the whole rewrite instead of a
+              // torn mix of old and new files, and stamp it LAST with
+              // the spec that produced the artifact
+              fs.delete(marker, false)
+              if (materialize)
+                operators.EpochFeed.writeMaterialized(
+                  docs.join(assign.drop("weight"), Seq(idc)),
+                  readers, dir)
+              else
+                assign.write.mode("overwrite").partitionBy("reader")
+                  .parquet(dir)
+              val os = fs.create(marker, true)
+              try os.write((Seq(
+                s"axis=$axis", s"epoch=$epoch", s"readers=$readers",
+                s"materialize=$materialize") ++
+                splitFlag.map(v => s"split=$v") ++
+                rates.map(rm => "rates=" + rm.toSeq.sorted
+                  .map { case (k, v) => s"$k=$v" }.mkString(",")) ++
+                nights.map(ns => "nights=" + ns.mkString(",")))
+                .mkString("\n").getBytes("UTF-8"))
+              finally os.close()
+            }
           }
           // driver-plane rollup: one row per reader rank (bounded by
           // --readers), the balance report a trainer checks for skew
@@ -625,14 +574,14 @@ object Nightly {
         // the retention face: rewrite only the affected nights minus
         // the requested ids (absorption commit point, crash-safe);
         // bytes leave disk at the NEXT prune-shards
-        require(axis != "vec", "no shard corpus on the vec axis")
+        val idc = corpusCols._1
         val ids = rest.sliding(2)
           .collectFirst { case Seq("--ids", v) => v }
           .getOrElse(sys.error(
             "delete-docs requires --ids <id,id,...>\n" + Usage))
           .split(",").map(_.trim.toLong).toSeq
         val replaced = operators.Corpus.deleteDocs(s, indexDir, ids,
-          idCol = corpusIdCol(axis))
+          idCol = idc)
         line("metric" -> "\"shards_delete\"",
           "requested" -> ids.length.toString,
           "replaced" -> replaced.toSeq.sorted
@@ -646,7 +595,7 @@ object Nightly {
         // lineages merged by hand) mean future nights can re-admit
         // duplicates of already-served content — the alarm an operator
         // wants BEFORE the next night runs, not after the dup lands.
-        require(axis != "vec", "no shard corpus on the vec axis")
+        val idc = corpusCols._1
         val shardsRoot = rest.sliding(2)
           .collectFirst { case Seq("--shards", v) => v }
           .getOrElse(sys.error(
@@ -654,11 +603,11 @@ object Nightly {
         // pin: sample + count below would otherwise each re-run the
         // full corpus-vs-index anti-join
         val bad = Pinned.pin(operators.Corpus.servedNotBanned(s,
-          shardsRoot, indexDir, idCol = corpusIdCol(axis)))
+          shardsRoot, indexDir, idCol = idc))
         // sample ids make the line actionable without a second query;
         // the full frame stays available through the library face
         val n = bad.count()
-        val sample = bad.orderBy(corpusIdCol(axis)).limit(10)
+        val sample = bad.orderBy(idc).limit(10)
           .collect().map(_.getLong(0))
         Pinned.releaseAll(s)
         line("metric" -> "\"nightly_reconcile\"",
@@ -671,10 +620,9 @@ object Nightly {
         // the self-consistency check an operator runs on a root of
         // unknown provenance: any cross-night exact dup means the
         // increments did NOT all flow through one index lineage
-        require(axis != "vec", "no shard corpus on the vec axis")
+        val (idc, content) = corpusCols
         val dups = operators.Corpus.exactDupGroups(s, indexDir,
-          idCol = corpusIdCol(axis),
-          contentCol = if (axis == "media") "payload" else "text")
+          idCol = idc, contentCol = content)
         val groups = dups.count()
         line("metric" -> "\"shards_audit\"",
           "dup_groups" -> groups.toString,

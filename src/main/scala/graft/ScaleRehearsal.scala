@@ -12,10 +12,10 @@ import org.apache.spark.sql.functions._
   *  1. the composed p01 corpus build (exact dedup → span dedup →
   *     decontamination → quality gates → packing → shard write),
   *  2. the d24 delta-dedup cycle against its generation-store index
-  *     (build + serve + one [[graft.queries.TextDedupOps.d24Advance]]
-  *     night),
+  *     (build + serve + one [[graft.queries.DeltaAxis.advance]] night
+  *     on the text axis),
   *  3. the m12 media cycle on the same corpus (decode + fingerprint
-  *     build, serve, one [[graft.queries.MultimodalOps.m12Advance]]
+  *     build, serve, one media-axis [[graft.queries.DeltaAxis.advance]]
   *     night), and
   *  4. the IVF-PQ lifecycle over a 10× embeddings table (offline build
   *     → atomic multi-table store write → serve → frozen-quantizer
@@ -93,8 +93,8 @@ object ScaleRehearsal {
         .filter(col("doc_id") % 97 === 0)
         .select((col("doc_id") + lit(10L * n)).as("doc_id"),
           concat(lit("nightly "), col("text")).as("text"), col("source"))
-      val r = graft.queries.TextDedupOps
-        .d24Advance(spark, s"$work/d24_index", delta).count()
+      val r = graft.queries.DeltaAxis.Text
+        .advance(spark, s"$work/d24_index", delta).count()
       Pinned.releaseAll(spark)
       r
     }
@@ -337,8 +337,8 @@ object ScaleRehearsal {
           .select((col("doc_id") + lit(20L * n)).as("doc_id"),
             concat(lit("medianight "), col("text")).as("text"),
             col("lang"), col("source"), col("n_chars")))
-      val r = graft.queries.MultimodalOps
-        .m12Advance(spark, s"$work/m12_index", delta).count()
+      val r = graft.queries.DeltaAxis.Media
+        .advance(spark, s"$work/m12_index", delta).count()
       Pinned.releaseAll(spark)
       r
     }
@@ -384,14 +384,14 @@ object ScaleRehearsal {
     val s24Dir = s"$work/s24_index"
     val emb10 = spark.read.parquet(s"$dir/embeddings.parquet")
     val (s24Rows, s24BuildSecs) = timed {
-      graft.queries.SimilarityOps.s24Build(spark, s24Dir, emb10)
+      graft.queries.DeltaAxis.Vec.build(spark, s24Dir, emb10)
       graft.operators.IndexGenerations.readCurrent(spark, s24Dir).count()
     }
     val (s24AdvRows, s24AdvSecs) = timed {
       val delta = emb10.filter(col("vec_id") % 103 === 0)
         .withColumn("vec_id", col("vec_id") + lit(100L * ne))
-      val r = graft.queries.SimilarityOps
-        .s24Advance(spark, s24Dir, delta).count()
+      val r = graft.queries.DeltaAxis.Vec
+        .advance(spark, s24Dir, delta).count()
       Pinned.releaseAll(spark)
       r
     }

@@ -114,9 +114,8 @@ object ConnectedComponents {
     // cost more than it saves). Result-identical — property-tested
     // against union-find with task metrics asserting the per-task join
     // input actually shrank.
-    val hotDegree = edges.sparkSession.conf
-      .getOption("spark.graft.cc.hotDegree").map(_.toLong)
-      .getOrElse(1000000L)
+    val hotDegree = graft.Conf.long(edges.sparkSession,
+      "spark.graft.cc.hotDegree", 1000000L)
     val hotKeys: Array[Long] = sym.groupBy(col("a"))
       .agg(count(lit(1)).as("deg"))
       .filter(col("deg") >= hotDegree)

@@ -8,7 +8,7 @@ import org.apache.spark.sql.types.StructType
 
 /** The corpus root's night-partition lifecycle — the read/compact/prune
   * half of the nightly shard increments
-  * ([[graft.queries.TextDedupOps.p04Night]] writes one
+  * ([[graft.queries.DeltaAxis.night]] writes one
   * `night=<nightId>` partition per committed night, marker-stamped).
   * This is the consumer-facing contract the reference's follower keeps
   * on its own output tables (only committed blocks are visible,
@@ -58,7 +58,7 @@ object Corpus {
 
   /** Stamp `nightDir`'s committed marker (lines = `content`). With
     * `onlyIfMissing` an existing marker stays byte-frozen — the
-    * rerun-repair face ([[graft.queries.TextDedupOps.p04Night]]).
+    * rerun-repair face ([[graft.queries.DeltaAxis.nightRecorded]]).
     * Marker CONTENT is load-bearing (`absorbs:` lines), so the stamp
     * is write-temp-then-rename: a reader can never observe a visible
     * but empty marker, which for a compaction would read as "commits

@@ -96,15 +96,14 @@ object IndexGenerations {
     * a crashed writer's and taken over once. The lease is released on
     * ALL exits (a failed write leaves a torn, unmarked dir that the
     * retry overwrites — the lease guards concurrency, not retries). */
-  private[operators] def withLease[A](s: SparkSession, root: String)(
+  private[graft] def withLease[A](s: SparkSession, root: String)(
       body: => A): A = {
     val fs = fsOf(s, root)
     val rp = new Path(root)
     if (!fs.exists(rp)) fs.mkdirs(rp)
     val lp = new Path(rp, Lease)
-    val timeoutMs = s.conf
-      .getOption("spark.graft.index.leaseTimeoutMs")
-      .map(_.toLong).getOrElse(3600000L)
+    val timeoutMs =
+      graft.Conf.long(s, "spark.graft.index.leaseTimeoutMs", 3600000L)
     // the lease content is "<stamp>:<uuid>" — the stamp bounds
     // staleness, the uuid makes ownership checkable. Takeover and exit
     // never blind-delete the lease PATH: both first claim it with an
@@ -355,7 +354,7 @@ object IndexGenerations {
   /** [[readAt]] under `spark.graft.index.readGen` when set (the
     * serve-mode pin for reproducible audits), else [[readCurrent]]. */
   def readByConf(s: SparkSession, root: String): DataFrame =
-    s.conf.getOption("spark.graft.index.readGen").map(_.toLong) match {
+    graft.Conf.long(s, "spark.graft.index.readGen") match {
       case Some(g) => readAt(s, root, g)
       case None    => readCurrent(s, root)
     }
@@ -457,9 +456,9 @@ object IndexGenerations {
 
   /** [[advance]] or [[advanceDelta]] per
     * `spark.graft.index.advanceMode` (`rewrite` (default) | `delta`) —
-    * the one switch the nightly operators (d24Advance / m12Advance)
-    * consult, so a deployment flips the whole family to LSM mode with
-    * one conf. In delta mode, `spark.graft.index.maxDeltaChain=N`
+    * the one switch the nightly operators (every axis's
+    * `graft.queries.DeltaAxis.advance`) consult, so a deployment flips
+    * the whole family to LSM mode with one conf. In delta mode, `spark.graft.index.maxDeltaChain=N`
     * bounds the chain: when an advance leaves more than N deltas above
     * the newest total, a [[compact]] runs in the same night. Compaction
     * is still additive-only (superseded generations stay until an
@@ -492,7 +491,7 @@ object IndexGenerations {
       additions: DataFrame, record: Option[(String, String)]): Long =
     if (s.conf.getOption("spark.graft.index.advanceMode").contains("delta")) {
       val g = advanceDeltaRecorded(s, root, additions, record)
-      s.conf.getOption("spark.graft.index.maxDeltaChain").map(_.toInt) match {
+      graft.Conf.int(s, "spark.graft.index.maxDeltaChain") match {
         case Some(max) if activeSet(s, root).size - 1 > max =>
           val c = compact(s, root)
           if (graft.Conf.flag(s, "spark.graft.index.autoPrune", false))
@@ -668,7 +667,7 @@ object IndexGenerations {
   def prune(s: SparkSession, root: String,
       pinned: Seq[Long] = Seq.empty): Unit = withLease(s, root) {
     val pins = pinned ++
-      s.conf.getOption("spark.graft.index.readGen").map(_.toLong)
+      graft.Conf.long(s, "spark.graft.index.readGen")
     val keep = (activeSet(s, root) ++ pins.flatMap(asOfSet(s, root, _)))
       .map(n => s"gen=$n").toSet
     val fs = fsOf(s, root)

@@ -324,18 +324,27 @@ object MultimodalOps {
   }
 
   /** Media delta dedup against a persisted fingerprint index — d24's
-    * third-execution-mode discipline on the media axis: the base
-    * partition distills to (media_id, kind, byte checksum, perceptual
-    * aHash60) — ~50 B per asset, payloads never stored — written to
-    * parquet and read back; the increment dedups against the artifact.
-    * Verdicts per delta asset: `exact` (same kind + byte checksum;
-    * winner = smallest base id), else `near` (m07's 5×12 pigeonhole
-    * banding over the perceptual hash — exact for hamming ≤ 4 — winner
-    * = smallest base id, its hamming reported), else `unique`. The
-    * perceptual arm catches what the checksum cannot: a RE-ENCODE of a
-    * base asset arriving in the delta (MediaSpec's invariance
-    * fixtures). Payloads never shuffle: fingerprints compute in the
-    * decode scan, everything after is narrow. */
+    * third-execution-mode discipline on the media axis, served by
+    * [[DeltaAxis.serve]] on [[DeltaAxis.Media]]: the base partition
+    * distills to (media_id, kind, byte checksum, perceptual aHash60) —
+    * ~50 B per asset, payloads never stored — written to parquet and
+    * read back; the increment dedups against the artifact. The split
+    * filters BEFORE the decode (mapPartitions is opaque to Catalyst, so
+    * a post-decode filter would still decode both sides), and
+    * `spark.graft.m12.buildIndex=false` serves from a pre-built
+    * artifact without decoding the base partition at all
+    * (IndexReuseSpec pins it). Verdicts per delta asset: `exact` (same
+    * kind + byte checksum; winner = smallest base id), else `near`
+    * (m07's 5×12 pigeonhole banding over the perceptual hash — exact
+    * for hamming ≤ 4 — winner = smallest base id, its hamming
+    * reported), else `unique`. The perceptual arm catches what the
+    * checksum cannot: a RE-ENCODE of a base asset arriving in the
+    * delta (MediaSpec's invariance fixtures). Payloads never shuffle:
+    * fingerprints compute in the decode scan, everything after is
+    * narrow. */
+  private def m12(s: SparkSession, d: String): DataFrame =
+    DeltaAxis.Media.serve(s, documents(s, d))
+
   /** m12's index row for any media dataset: kind + byte checksum +
     * perceptual aHash60 — ~50 B/asset, payloads never leave the decode
     * scan. */
@@ -346,128 +355,16 @@ object MultimodalOps {
       .join(Media.perceptualHashes(m).toDF()
         .select(col("media_id"), col("phash")), Seq("media_id"))
 
-  /** Build (or rebuild from scratch) the m12 fingerprint index from a
-    * base media corpus — generation 0 of the
-    * [[graft.operators.IndexGenerations]] store. */
-  def m12Build(s: SparkSession, indexDir: String,
-      baseMedia: org.apache.spark.sql.Dataset[Media.MediaRecord]): Unit =
-    graft.operators.IndexGenerations.reset(s, indexDir,
-      m12Fingerprints(baseMedia))
-
-  /** The nightly write face on the media axis (d24Advance's twin):
-    * verdicts for `deltaMedia` against the LIVE index generation, then
-    * fold the admitted `unique` assets' fingerprints into generation
-    * N+1. Returns the verdicts frame (same schema as m12); caller
-    * releases pins via [[graft.Pinned.releaseAll]]. */
-  def m12Advance(s: SparkSession, indexDir: String,
-      deltaMedia: org.apache.spark.sql.Dataset[Media.MediaRecord])
-      : DataFrame =
-    m12AdvanceRecorded(s, indexDir, deltaMedia, None)
-
-  private def m12AdvanceRecorded(s: SparkSession, indexDir: String,
-      deltaMedia: org.apache.spark.sql.Dataset[Media.MediaRecord],
-      record: Option[(String, String)],
-      beforeAdvance: DataFrame => Unit = _ => ()): DataFrame = {
-    val index = graft.operators.IndexGenerations.readCurrent(s, indexDir)
-    val delta = graft.Pinned.pin(m12Fingerprints(deltaMedia))
-    val v = graft.Pinned.pin(mediaDeltaVerdicts(index, delta))
-    val uniques = delta
-      .join(v.filter(col("verdict") === "unique").select("media_id"),
-        Seq("media_id"))
-    // pinned: the shard hook and the fold both consume it
-    val admitted = graft.Pinned.pin(intraUniqueFps(uniques))
-    beforeAdvance(admitted)
-    graft.operators.IndexGenerations.advanceByConfRecorded(s, indexDir,
-      admitted, record)
-    v
-  }
-
-  /** The media-axis production night —
-    * [[graft.queries.TextDedupOps.p04Night]] minus the shard half
-    * (the m12 index has no training-corpus output; its artifact IS the
-    * advanced generation): one recorded, exactly-once-per-`nightId`
-    * advance. A rerun of a committed night returns None without
-    * touching the store — re-running blind would re-judge every asset
-    * exact-against-itself and fold nothing, silently consuming the
-    * night id a scheduler believes is still pending. Returns Some
-    * (verdicts) for a run night; caller releases pins via
-    * [[graft.Pinned.releaseAll]]. */
-  def m12Night(s: SparkSession, indexDir: String,
-      deltaMedia: org.apache.spark.sql.Dataset[Media.MediaRecord],
-      nightId: String): Option[DataFrame] =
-    m12Night(s, indexDir, deltaMedia, nightId, None)
-
-  /** [[m12Night]] WITH the corpus half — `shardsDir = Some(root)`
-    * writes the night's admitted unique payloads (post intra-dedup, the
-    * exact asset set whose fingerprints fold) as a
-    * `night=<nightId>` partition of a media corpus root, hash-sharded
-    * on media_id — p04Night's shape on the media axis, same write
-    * order (shards first, the recorded advance as the commit point,
-    * marker last), same collision refusal, same marker repair on a
-    * skipped rerun. The root serves through
-    * [[graft.operators.Corpus.readCommitted]] and compacts/deletes via
-    * the idCol="media_id", contentCol="payload" faces. */
-  def m12Night(s: SparkSession, indexDir: String,
-      deltaMedia: org.apache.spark.sql.Dataset[Media.MediaRecord],
-      nightId: String, shardsDir: Option[String]): Option[DataFrame] =
-    m12NightRecorded(s, indexDir, deltaMedia, nightId, shardsDir,
-      graft.queries.TextDedupOps.NightRecord, nightId,
-      alreadyDone = graft.operators.IndexGenerations
-        .records(s, indexDir, graft.queries.TextDedupOps.NightRecord)
-        .contains(nightId))
-
-  /** [[m12Night]] with the commit record under the caller's control —
-    * the streaming micro-night face
-    * ([[graft.streaming.StoreMediaDedup.nightBatch]]), exactly
-    * [[graft.queries.TextDedupOps.p04NightRecorded]]'s contract on the
-    * media axis. */
-  private[graft] def m12NightRecorded(s: SparkSession, indexDir: String,
-      deltaMedia: org.apache.spark.sql.Dataset[Media.MediaRecord],
-      nightId: String, shardsDir: Option[String],
-      recordName: String, recordValue: String, alreadyDone: Boolean)
-      : Option[DataFrame] = {
-    require(nightId.matches("[A-Za-z0-9._-]+"),
-      s"nightId '$nightId' must be directory-safe ([A-Za-z0-9._-]+) — " +
-        "night ids are one namespace across both axes")
-    val done = alreadyDone
-    val record = Some(recordName -> recordValue)
-    shardsDir match {
-      case None =>
-        if (done) None
-        else Some(m12AdvanceRecorded(s, indexDir, deltaMedia, record))
-      case Some(out) =>
-        val nightDir = s"$out/night=$nightId"
-        val ndPath = new org.apache.hadoop.fs.Path(nightDir)
-        val fs = ndPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        if (done) {
-          if (fs.exists(ndPath))
-            graft.operators.Corpus.stampCommitted(s, nightDir,
-              Seq(nightId), onlyIfMissing = true)
-          return None
-        }
-        if (fs.exists(new org.apache.hadoop.fs.Path(ndPath,
-            graft.operators.Corpus.Marker)))
-          throw new IllegalStateException(
-            s"night id '$nightId' collides with an existing committed " +
-              s"corpus partition at $nightDir that this index never " +
-              "recorded — pick a different id")
-        // an ABSORBED id is poisoned even after its dir is pruned:
-        // re-committing it mutual-absorbs with its absorber and blanks
-        // the whole corpus (p04NightRecorded's guard, media twin)
-        graft.operators.Corpus.refuseAbsorbedId(s, out, nightId)
-        val v = m12AdvanceRecorded(s, indexDir, deltaMedia, record,
-          beforeAdvance = admitted => {
-            graft.operators.ShardWriter.writeDocs(
-              deltaMedia.toDF().join(admitted.select("media_id"),
-                Seq("media_id")),
-              16, nightDir, idCol = "media_id")
-            ()
-          })
-        graft.operators.Corpus.stampCommitted(s, nightDir, Seq(nightId),
-          onlyIfMissing = false)
-        Some(v)
-    }
-  }
+  /** m07's 5×12 pigeonhole bands over the perceptual hash, one row per
+    * (band, asset), the asset id renamed to `as` — the id-only band keys
+    * [[mediaDeltaVerdicts]] and [[intraUniqueFps]] both join on. */
+  private def m12Bands(df: DataFrame, as: String): DataFrame = df
+    .select(col("media_id").as(as),
+      explode(array((0 until 5).map(b =>
+        struct(lit(b).as("band"),
+          shiftright(col("phash"), b * 12).bitwiseAND(lit(0xFFFL))
+            .as("nib"))): _*)).as("bk"))
+    .select(col(as), col("bk.band").as("band"), col("bk.nib").as("nib"))
 
   /** [[graft.queries.TextDedupOps.intraUniqueSigs]]' media twin: dedup
     * a night's admitted uniques against each other before the index
@@ -485,15 +382,8 @@ object MultimodalOps {
         .agg(min(col("media_id")).as("keep_id")), Seq("kind", "checksum"))
       .filter(col("media_id") =!= col("keep_id"))
       .select("media_id")
-    def bands(df: DataFrame, as: String) = df
-      .select(col("media_id").as(as),
-        explode(array((0 until 5).map(b =>
-          struct(lit(b).as("band"),
-            shiftright(col("phash"), b * 12).bitwiseAND(lit(0xFFFL))
-              .as("nib"))): _*)).as("bk"))
-      .select(col(as), col("bk.band").as("band"), col("bk.nib").as("nib"))
-    val nearDrop = bands(u, "media_id")
-      .join(bands(u, "base_id"), Seq("band", "nib"))
+    val nearDrop = m12Bands(u, "media_id")
+      .join(m12Bands(u, "base_id"), Seq("band", "nib"))
       .filter(col("base_id") < col("media_id"))
       .select("media_id", "base_id")
       .dropDuplicates("media_id", "base_id")
@@ -507,34 +397,9 @@ object MultimodalOps {
       Seq("media_id"), "left_anti")
   }
 
-  private def m12(s: SparkSession, d: String): DataFrame = {
-    val indexDir = s.conf.getOption("spark.graft.m12.indexDir")
-      .getOrElse(sys.props("java.io.tmpdir") + "/graft_m12_index")
-    val media = Media.mediaFromDocuments(documents(s, d))
-    // the split filters BEFORE the decode (mapPartitions is opaque to
-    // Catalyst, so a post-decode filter would still decode both sides)
-    val isDelta =
-      pmod(graft.functions.Portable.hash60(
-        col("media_id").cast("string"), 424), lit(5L)) === 0L
-    import s.implicits._
-    // `spark.graft.m12.buildIndex=false` serves from a pre-built
-    // artifact without decoding the base partition at all (d24's
-    // nightly contract — IndexReuseSpec pins it); generation store so
-    // the nightly loop can ADVANCE it ([[m12Advance]])
-    if (graft.Conf.flag(s, "spark.graft.m12.buildIndex", true))
-      graft.operators.IndexGenerations.reset(s, indexDir,
-        m12Fingerprints(media.toDF().filter(!isDelta).as[Media.MediaRecord]))
-    // serve face honors the reproducible-audit pin (readGen → readAt);
-    // pair with buildIndex=false — a rebuild prunes unpinned history
-    val index = graft.operators.IndexGenerations.readByConf(s, indexDir)
-    val delta = graft.Pinned.pin(
-      m12Fingerprints(media.toDF().filter(isDelta).as[Media.MediaRecord]))
-    mediaDeltaVerdicts(index, delta)
-  }
-
   /** Verdicts for a fingerprinted `delta` frame against a fingerprinted
-    * `index` frame — the read-only core shared by the m12 query face and
-    * [[m12Advance]]. Both inputs carry (media_id, kind, checksum,
+    * `index` frame — the media axis's read-only verdict core
+    * ([[DeltaAxis]]). Both inputs carry (media_id, kind, checksum,
     * phash); `delta` should be pinned by the caller. */
   private[graft] def mediaDeltaVerdicts(index: DataFrame,
       delta: DataFrame): DataFrame = {
@@ -543,15 +408,8 @@ object MultimodalOps {
         col("media_id").as("base_id")), Seq("kind", "checksum"))
       .groupBy(col("media_id"))
       .agg(min(col("base_id")).as("exact_winner"))
-    def bands(df: DataFrame, as: String) = df
-      .select(col("media_id").as(as),
-        explode(array((0 until 5).map(b =>
-          struct(lit(b).as("band"),
-            shiftright(col("phash"), b * 12).bitwiseAND(lit(0xFFFL))
-              .as("nib"))): _*)).as("bk"))
-      .select(col(as), col("bk.band").as("band"), col("bk.nib").as("nib"))
-    val cand = bands(delta, "media_id")
-      .join(bands(index, "base_id"), Seq("band", "nib"))
+    val cand = m12Bands(delta, "media_id")
+      .join(m12Bands(index, "base_id"), Seq("band", "nib"))
       .select("media_id", "base_id")
       .dropDuplicates("media_id", "base_id")
     val near = cand

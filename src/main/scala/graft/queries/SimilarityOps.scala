@@ -461,7 +461,7 @@ object SimilarityOps {
     * 128-vector test table and 0.1‰ of a 100 TB corpus both yield
     * thousands of truth pairs). Default 500 matches the embedded oracle. */
   private def recallSamplePm(s: SparkSession): Long =
-    s.conf.get("spark.graft.similarity.recallSamplePm", "500").toLong
+    graft.Conf.long(s, "spark.graft.similarity.recallSamplePm", 500L)
 
   private val SAMPLE_SEED = 444
 
@@ -1115,7 +1115,6 @@ object SimilarityOps {
     * test scale; production semantic dedup typically runs ≥ 0.9
     * (which only RAISES banding recall: p = 1 − θ/π grows). */
   private[graft] val VecDupCos = 0.45
-  private val S24Seed = 777
 
   /** Distill an embeddings frame into s24 index rows. */
   private[graft] def s24Sig(emb: DataFrame): DataFrame =
@@ -1197,72 +1196,14 @@ object SimilarityOps {
     u.join(drop, Seq("vec_id"), "left_anti")
   }
 
-  /** Build (or rebuild from scratch) the s24 vector index from a base
-    * embeddings corpus — generation 0 of the store. */
-  def s24Build(s: SparkSession, indexDir: String, baseEmb: DataFrame): Unit = {
-    graft.functions.HashSketch.register(s)
-    graft.operators.IndexGenerations.reset(s, indexDir, s24Sig(baseEmb))
-  }
-
-  /** The nightly write face on the embedding axis (d24Advance's twin):
-    * verdicts for `deltaEmb` against the LIVE index generation, then
-    * fold the admitted uniques' quantized vectors into generation N+1.
-    * Returns the verdicts frame (same schema as the s24 query);
-    * caller releases pins via [[graft.Pinned.releaseAll]]. */
-  def s24Advance(s: SparkSession, indexDir: String,
-      deltaEmb: DataFrame): DataFrame =
-    s24AdvanceRecorded(s, indexDir, deltaEmb, None)
-
-  private def s24AdvanceRecorded(s: SparkSession, indexDir: String,
-      deltaEmb: DataFrame, record: Option[(String, String)]): DataFrame = {
-    graft.functions.HashSketch.register(s)
-    val index = graft.operators.IndexGenerations.readCurrent(s, indexDir)
-    val delta = graft.Pinned.pin(s24Sig(deltaEmb))
-    val v = graft.Pinned.pin(vecDeltaVerdicts(index, delta))
-    val uniques = delta
-      .join(v.filter(col("verdict") === "unique").select("vec_id"),
-        Seq("vec_id"))
-    graft.operators.IndexGenerations.advanceByConfRecorded(s, indexDir,
-      intraUniqueQvs(uniques), record)
-    v
-  }
-
-  /** The embedding-axis production night — `m12Night`'s shape: one
-    * recorded, exactly-once-per-`nightId` advance on the shared
-    * night-id ledger; a rerun of a committed night returns None
-    * without touching the store. */
-  def s24Night(s: SparkSession, indexDir: String, deltaEmb: DataFrame,
-      nightId: String): Option[DataFrame] = {
-    require(nightId.matches("[A-Za-z0-9._-]+"),
-      s"nightId '$nightId' must be directory-safe ([A-Za-z0-9._-]+) — " +
-        "night ids are one namespace across all axes")
-    if (graft.operators.IndexGenerations
-        .records(s, indexDir, graft.queries.TextDedupOps.NightRecord)
-        .contains(nightId)) None
-    else Some(s24AdvanceRecorded(s, indexDir, deltaEmb,
-      Some(graft.queries.TextDedupOps.NightRecord -> nightId)))
-  }
-
-  /** s24 query face — the d24 pattern on embeddings: split the corpus
-    * by identity hash into base (4/5) and delta (1/5), distill + persist
-    * the base index once (`spark.graft.s24.buildIndex=false` skips the
-    * build — the nightly posture, serving yesterday's artifact), judge
-    * the delta against `readByConf` (honors the
-    * `spark.graft.index.readGen` audit pin). */
-  private def s24(s: SparkSession, d: String): DataFrame = {
-    graft.functions.HashSketch.register(s)
-    val indexDir = s.conf.getOption("spark.graft.s24.indexDir")
-      .getOrElse(sys.props("java.io.tmpdir") + "/graft_s24_index")
-    val emb = s24Sig(embeddings(s, d))
-    val isDelta = pmod(graft.functions.Portable.hash60(
-      col("vec_id").cast("string"), S24Seed), lit(5L)) === 0L
-    if (graft.Conf.flag(s, "spark.graft.s24.buildIndex", true))
-      graft.operators.IndexGenerations.reset(s, indexDir,
-        emb.filter(!isDelta))
-    val index = graft.operators.IndexGenerations.readByConf(s, indexDir)
-    val delta = graft.Pinned.pin(emb.filter(isDelta))
-    vecDeltaVerdicts(index, delta)
-  }
+  /** s24 query face — [[DeltaAxis.serve]] on [[DeltaAxis.Vec]], the d24
+    * pattern on embeddings: split the corpus by identity hash into base
+    * (4/5) and delta (1/5), distill + persist the base index once
+    * (`spark.graft.s24.buildIndex=false` skips the build — the nightly
+    * posture, serving yesterday's artifact), judge the delta against
+    * `readByConf` (honors the `spark.graft.index.readGen` audit pin). */
+  private def s24(s: SparkSession, d: String): DataFrame =
+    DeltaAxis.Vec.serve(s, embeddings(s, d))
 
   val queries: ListMap[String, (SparkSession, String) => DataFrame] = ListMap(
     "s01_knn_bruteforce" -> s01 _,
@@ -1885,7 +1826,8 @@ object SimilarityOps {
       s"""WITH $embCte,
          |sp AS (
          |  SELECT vec_id, qv, n2,
-         |    (${graft.functions.Portable.sqlHash60("vec_id::VARCHAR", S24Seed)}
+         |    (${graft.functions.Portable.sqlHash60("vec_id::VARCHAR",
+             DeltaAxis.Vec.splitSeed)}
          |       % 5 = 0) AS is_delta
          |  FROM embn),
          |base AS (SELECT * FROM sp WHERE NOT is_delta),

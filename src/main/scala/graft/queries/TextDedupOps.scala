@@ -936,8 +936,7 @@ object TextDedupOps {
   private[graft] val BpeRounds = 6
 
   private def bpeRoundsConf(s: SparkSession): Int =
-    s.conf.getOption("spark.graft.bpe.rounds").map(_.toInt)
-      .getOrElse(BpeRounds)
+    graft.Conf.int(s, "spark.graft.bpe.rounds", BpeRounds)
 
   /** Vocabulary-row cutoff below which the merge LOOP runs driver-local
     * over the collected (word, cnt) table ([[graft.operators.BpeTrainer]])
@@ -950,8 +949,7 @@ object TextDedupOps {
     * either way. Above the cutoff the distributed chain takes over
     * unchanged. */
   private def bpeLocalVocabCutoff(s: SparkSession): Long =
-    s.conf.getOption("spark.graft.bpe.localVocabCutoff").map(_.toLong)
-      .getOrElse(2000000L)
+    graft.Conf.long(s, "spark.graft.bpe.localVocabCutoff", 2000000L)
 
   /** Size-gated BPE merge learning: driver-local incremental trainer over
     * the aggregated vocabulary below [[bpeLocalVocabCutoff]] (feasible at
@@ -1576,8 +1574,8 @@ object TextDedupOps {
     val grams = substrGrams(docs)
     val first0 = grams.groupBy(col("gram"))
       .agg(min(col("pk")).as("first_pk"), count(lit(1)).as("cnt"))
-    val joined = s.conf.getOption("spark.graft.d23.hotCount")
-        .map(_.toLong).filter(_ > 0) match {
+    val joined = graft.Conf.long(s, "spark.graft.d23.hotCount")
+        .filter(_ > 0) match {
       case None =>
         grams.join(first0.select(col("gram"), col("first_pk")), Seq("gram"))
       case Some(hotCount) =>
@@ -1643,17 +1641,19 @@ object TextDedupOps {
     * dedup execution mode next to static-batch (d01–d08) and streaming
     * ingest ([[graft.streaming.IncrementalDedup]]): a nightly crawl
     * increment dedups against yesterday's corpus WITHOUT rescanning
-    * yesterday's text. The base partition (a deterministic hash split
-    * standing in for "the existing corpus") is distilled to a narrow
-    * index — (doc_id, content md5, MinHash signature) — written to
-    * parquet and READ BACK, the same offline-build / online-serve
-    * discipline as [[graft.operators.AnnIndexStore]]; the delta pass
-    * touches only that index plus the new documents. Verdict per delta
-    * doc: `exact` (content hash present in the index; winner = smallest
-    * such base id), else `near` (band-join candidates, verified by the
-    * MinHash COMPONENT-MATCH estimate `1000·matches DIV k ≥ 500` —
-    * signatures only, so the index never stores shingle sets; winner =
-    * smallest verified base id, its estimate reported), else `unique`.
+    * yesterday's text. The d24 query face is
+    * [[DeltaAxis.serve]] on the text axis: the base partition (a
+    * deterministic hash split standing in for "the existing corpus") is
+    * distilled to a narrow index — (doc_id, content md5, MinHash
+    * signature) — written to parquet and READ BACK, the same
+    * offline-build / online-serve discipline as
+    * [[graft.operators.AnnIndexStore]]; the delta pass touches only that
+    * index plus the new documents. Verdict per delta doc: `exact`
+    * (content hash present in the index; winner = smallest such base
+    * id), else `near` (band-join candidates, verified by the MinHash
+    * COMPONENT-MATCH estimate `1000·matches DIV k ≥ 500` — signatures
+    * only, so the index never stores shingle sets; winner = smallest
+    * verified base id, its estimate reported), else `unique`.
     * Intra-delta duplicates are deliberately out of scope — compose
     * d02/d03 over the delta for those; this operator is the
     * index-reuse face.
@@ -1663,6 +1663,9 @@ object TextDedupOps {
     * increment + id-only band joins against the index + one signature
     * join back — cost proportional to |delta| + |index|, never
     * |base text|. */
+  private def d24(s: SparkSession, d: String): DataFrame =
+    DeltaAxis.Text.serve(s, documents(s, d))
+
   /** d24's index row for any (doc_id, source, text) frame: content md5 +
     * MinHash signature — ~40 B/doc, the text never leaves this select. */
   private[graft] def d24Sig(df: DataFrame): DataFrame =
@@ -1680,41 +1683,22 @@ object TextDedupOps {
     .withColumn("sig", when(size(col("hs")) > 0,
       graft.functions.HashSketch.minhashSig(col("hs"), MINHASH_K)))
 
-  /** Build (or rebuild from scratch) the d24 signature index from a base
-    * corpus — generation 0 of the
-    * [[graft.operators.IndexGenerations]] store. */
-  def d24Build(s: SparkSession, indexDir: String, baseDocs: DataFrame): Unit = {
-    graft.functions.HashSketch.register(s)
-    graft.operators.IndexGenerations.reset(s, indexDir, d24Sig(baseDocs))
-  }
+  /** One row per (LSH band, signed doc), the doc id renamed to `as` —
+    * the id-only band keys [[deltaVerdicts]] and [[intraUniqueSigs]]
+    * both join on (the d03 discipline: signatures rejoin only for the
+    * candidate pairs). */
+  private def d24Bands(df: DataFrame, as: String): DataFrame = df
+    .filter(col("sig").isNotNull)
+    .select(col("doc_id").as(as),
+      explode(array((0 until BANDS).map(b =>
+        bandKey(col("sig"), b, ROWS)): _*)).as("band_key"))
 
-  /** The nightly write face: verdicts for `deltaDocs` against the LIVE
-    * index generation, then fold the admitted `unique` docs' signatures
-    * into generation N+1 (write-new + atomic marker swap — see
-    * [[graft.operators.IndexGenerations.advance]]). Night 2's uniques
-    * are in night 3's index, which is the contract the read-only d24
-    * query face cannot deliver alone. Crash/replay: a crash BEFORE the
-    * marker leaves the previous generation live (rerun = clean first
-    * attempt); a crash AFTER it is content-idempotent — the rerun's
-    * docs match THEMSELVES in the advanced index, verdict exact,
-    * nothing re-folds (DeltaAdvanceSpec pins both). The fold is
-    * intra-night-deduped first ([[intraUniqueSigs]]) — a delta full of
-    * internal copies contributes one signature per distinct content.
-    * Returns the verdicts frame (same schema as d24); caller releases
-    * pins via [[graft.Pinned.releaseAll]] after consuming it. */
-  def d24Advance(s: SparkSession, indexDir: String,
-      deltaDocs: DataFrame): DataFrame = {
-    graft.functions.HashSketch.register(s)
-    val index = graft.operators.IndexGenerations.readCurrent(s, indexDir)
-    val delta = graft.Pinned.pin(d24Sig(deltaDocs))
-    val v = graft.Pinned.pin(deltaVerdicts(index, delta))
-    val uniques = delta
-      .join(v.filter(col("verdict") === "unique").select("doc_id"),
-        Seq("doc_id"))
-    graft.operators.IndexGenerations.advanceByConf(s, indexDir,
-      intraUniqueSigs(uniques))
-    v
-  }
+  /** The MinHash component-match estimate of `d_sig` vs `b_sig`, per
+    * mille — the near arm's verify. */
+  private def d24EstPm: Column = expr(
+    s"""(1000L * size(filter(zip_with(d_sig, b_sig, (x, y) -> x = y),
+       |  v -> v))) DIV $MINHASH_K"""
+      .stripMargin.replaceAll("\n", " "))
 
   /** Dedup a night's admitted uniques AGAINST EACH OTHER before they
     * fold into the index: a crawl batch with many internal copies must
@@ -1742,59 +1726,27 @@ object TextDedupOps {
         .agg(min(col("doc_id")).as("keep_id")), Seq("content_hash"))
       .filter(col("doc_id") =!= col("keep_id"))
       .select("doc_id")
-    def bands(df: DataFrame, as: String) = df
-      .filter(col("sig").isNotNull)
-      .select(col("doc_id").as(as),
-        explode(array((0 until BANDS).map(b =>
-          bandKey(col("sig"), b, ROWS)): _*)).as("band_key"))
-    val nearDrop = bands(u, "doc_id")
-      .join(bands(u, "base_id"), Seq("band_key"))
+    val nearDrop = d24Bands(u, "doc_id")
+      .join(d24Bands(u, "base_id"), Seq("band_key"))
       .filter(col("base_id") < col("doc_id"))
       .select("doc_id", "base_id")
       .dropDuplicates("doc_id", "base_id")
       .join(u.select(col("doc_id"), col("sig").as("d_sig")), Seq("doc_id"))
       .join(u.select(col("doc_id").as("base_id"), col("sig").as("b_sig")),
         Seq("base_id"))
-      .withColumn("est_pm", expr(
-        s"""(1000L * size(filter(zip_with(d_sig, b_sig, (x, y) -> x = y),
-           |  v -> v))) DIV $MINHASH_K"""
-          .stripMargin.replaceAll("\n", " ")))
+      .withColumn("est_pm", d24EstPm)
       .filter(col("est_pm") >= 500)
       .select("doc_id").distinct()
     u.join(exactDrop.unionByName(nearDrop).distinct(),
       Seq("doc_id"), "left_anti")
   }
 
-  private def d24(s: SparkSession, d: String): DataFrame = {
-    graft.functions.HashSketch.register(s)
-    val indexDir = s.conf.getOption("spark.graft.d24.indexDir")
-      .getOrElse(sys.props("java.io.tmpdir") + "/graft_d24_index")
-    val docs = documents(s, d)
-    val isDelta =
-      pmod(graft.functions.Portable.hash60(col("doc_id").cast("string"),
-        424), lit(5L)) === 0L
-    // offline face: distill + persist the base index, then read the
-    // artifact back — delta runs consume the files, not the base scan.
-    // `spark.graft.d24.buildIndex=false` skips the build entirely (the
-    // nightly contract: today's run serves from yesterday's artifact,
-    // and the plan then contains exactly ONE documents scan — the
-    // delta's; IndexReuseSpec pins both facts). The artifact is a
-    // generation store so the nightly loop can ADVANCE it ([[d24Advance]]).
-    if (graft.Conf.flag(s, "spark.graft.d24.buildIndex", true))
-      graft.operators.IndexGenerations.reset(s, indexDir,
-        d24Sig(docs.filter(!isDelta)))
-    // serve face honors the reproducible-audit pin
-    // (spark.graft.index.readGen → readAt) — pair it with
-    // buildIndex=false, since a rebuild would prune unpinned history
-    val index = graft.operators.IndexGenerations.readByConf(s, indexDir)
-    val delta = graft.Pinned.pin(d24Sig(docs.filter(isDelta)))
-    deltaVerdicts(index, delta)
-  }
-
   /** Verdicts for a sig'd `delta` frame against a sig'd `index` frame —
-    * the read-only core shared by the d24 query face and [[d24Advance]].
-    * Both inputs carry (doc_id, source, content_hash, sig); `delta`
-    * should be pinned by the caller (three scans below). */
+    * the text axis's read-only verdict core ([[DeltaAxis]]: the d24
+    * query face, the nightly advance and the stream bridge's
+    * bootstrap-free fold). Both inputs carry (doc_id, source,
+    * content_hash, sig); `delta` should be pinned by the caller (three
+    * scans below). */
   private[graft] def deltaVerdicts(index: DataFrame,
       delta: DataFrame): DataFrame = {
     val exact = delta.select(col("doc_id"), col("content_hash"))
@@ -1802,25 +1754,15 @@ object TextDedupOps {
         Seq("content_hash"))
       .groupBy(col("doc_id"))
       .agg(min(col("base_id")).as("exact_winner"))
-    // id-only band join (the d03 discipline): signatures rejoin only
-    // for the candidate pairs
-    def bands(df: DataFrame, as: String) = df
-      .filter(col("sig").isNotNull)
-      .select(col("doc_id").as(as),
-        explode(array((0 until BANDS).map(b =>
-          bandKey(col("sig"), b, ROWS)): _*)).as("band_key"))
-    val cand = bands(delta, "doc_id")
-      .join(bands(index, "base_id"), Seq("band_key"))
+    val cand = d24Bands(delta, "doc_id")
+      .join(d24Bands(index, "base_id"), Seq("band_key"))
       .select("doc_id", "base_id")
       .dropDuplicates("doc_id", "base_id")
     val near = cand
       .join(delta.select(col("doc_id"), col("sig").as("d_sig")), Seq("doc_id"))
       .join(index.select(col("doc_id").as("base_id"), col("sig").as("b_sig")),
         Seq("base_id"))
-      .withColumn("est_pm", expr(
-        s"""(1000L * size(filter(zip_with(d_sig, b_sig, (x, y) -> x = y),
-           |  v -> v))) DIV $MINHASH_K"""
-          .stripMargin.replaceAll("\n", " ")))
+      .withColumn("est_pm", d24EstPm)
       .filter(col("est_pm") >= 500)
       .groupBy(col("doc_id"))
       .agg(min(struct(col("base_id"), col("est_pm"))).as("w"))
@@ -2232,8 +2174,8 @@ object TextDedupOps {
   /** Bucket count for the packing prefix sum — config-overridable so
     * specs can force a high bucket count through the two-pass path. */
   private def packBuckets(s: SparkSession): Int =
-    s.conf.getOption("spark.graft.pack.buckets").map(_.toInt)
-      .getOrElse(graft.operators.PrefixSum.DefaultBuckets)
+    graft.Conf.int(s, "spark.graft.pack.buckets",
+      graft.operators.PrefixSum.DefaultBuckets)
 
   /** Gopher-style REPETITION filters, completing t09's static rules: a
     * duplicate-token rate (n_words − n_distinct_tokens) and the frequency
@@ -2729,7 +2671,8 @@ object TextDedupOps {
     * the admitted docs. Confs: `spark.graft.p04.outDir`,
     * `spark.graft.p04.indexDir`, `spark.graft.p04.buildIndex=false`
     * to serve a pre-built index (the nightly posture — pair with
-    * [[d24Advance]] / the `graft.Nightly` CLI owning the advance). */
+    * [[DeltaAxis.advance]] / the `graft.Nightly` CLI owning the
+    * advance). */
   private[graft] def p04(s: SparkSession, d: String): DataFrame = {
     val outDir = s.conf.getOption("spark.graft.p04.outDir")
       .getOrElse(sys.props("java.io.tmpdir") + "/graft_p04_shards")
@@ -2774,7 +2717,7 @@ object TextDedupOps {
   }
 
   /** The admitted-delta gate + pack + text-rejoin stages shared by
-    * [[p04Corpus]] and [[p04Night]]: t14's per-source p10 floor, t12's
+    * [[p04Corpus]] and [[nightShards]]: t14's per-source p10 floor, t12's
     * bucketed prefix-sum packing, the narrow (doc_id, text) join
     * feeding the shard writer. Production mode pins the scored
     * projection (threshold agg + gate both scan it) and CUTS lineage
@@ -2817,119 +2760,16 @@ object TextDedupOps {
     packed.join(deltaDocs.select(col("doc_id"), col("text")), Seq("doc_id"))
   }
 
-  /** Record name under which [[p04Night]] stamps its night id into the
-    * generation it advances. */
-  private[graft] val NightRecord = "night"
-
-  /** The COMPLETE production night over one delta scan — p04's shard
-    * increment AND [[d24Advance]]'s index fold in a single call
-    * sharing the signature/verdict pins: verdicts vs the live index,
-    * admitted uniques ([[intraUniqueSigs]]) folded into generation
-    * N+1, the same admitted set gated, packed, and written as
-    * tonight's shards. The two halves CANNOT disagree on admission —
-    * one `admitted` frame feeds both — which is the property running
-    * p04 and d24Advance separately would have to re-derive.
-    *
-    * Exactly-once per `nightId` (the [[graft.streaming.StoreBridge]]
-    * fold discipline): the shard write runs FIRST, then the advance
-    * commits with `nightId` recorded inside the new generation before
-    * its marker — so a crash anywhere before the marker leaves the
-    * night uncommitted (the rerun redoes shards + fold from the same
-    * still-live index generation), and a rerun of a COMMITTED night
-    * returns None without touching the shards (re-running it blind
-    * would re-judge every doc exact-against-itself and overwrite the
-    * night's shards with nothing — the hole the record closes).
-    *
-    * Shards land under `outDir/night=<nightId>` — each night is its
-    * OWN partition of the corpus root, so a scheduler passing one
-    * constant `--shards` root every night ACCUMULATES increments
-    * instead of night N overwriting night N−1 (the overwrite inside
-    * [[graft.operators.ShardWriter.writeDocs]] is scoped to this
-    * night's dir, which a rerun of THIS night may legitimately
-    * replace). `spark.read.parquet(outDir)` serves the whole corpus
-    * with `night` as a partition column; a committed night also
-    * carries a `_NIGHT_COMMITTED` file so shard-only consumers can
-    * skip a crashed night's partial dir without consulting the index.
-    *
-    * Returns Some((shard receipt, verdicts)) for a run night, None for
-    * an already-committed one; caller releases pins via
-    * [[graft.Pinned.releaseAll]] after consuming the frames. */
-  def p04Night(s: SparkSession, indexDir: String, deltaDocs: DataFrame,
-      outDir: String, nightId: String)
-      : Option[(DataFrame, DataFrame)] =
-    p04NightRecorded(s, indexDir, deltaDocs, outDir, nightId,
-      NightRecord, nightId,
-      alreadyDone = graft.operators.IndexGenerations
-        .records(s, indexDir, NightRecord).contains(nightId))
-
-  /** [[p04Night]] with the commit record under the caller's control —
-    * the streaming micro-night face
-    * ([[graft.streaming.StoreDedup.nightBatch]]) records
-    * `streamId:batchId` lines into an `_hwm` ledger (O(#streams) lines
-    * over an always-on stream's life) instead of one membership line
-    * per night, and its replay check is the monotonic max-batch rule
-    * rather than `contains` — so `alreadyDone` is computed by the
-    * caller over its own ledger. Everything else — the one-delta-scan
-    * composition, the shard-partition layout, the write order (shards,
-    * then the recorded advance as the commit point, then the marker),
-    * the marker repair on a skipped rerun — is p04Night verbatim. */
-  private[graft] def p04NightRecorded(s: SparkSession, indexDir: String,
-      deltaDocs: DataFrame, outDir: String, nightId: String,
-      recordName: String, recordValue: String, alreadyDone: Boolean)
-      : Option[(DataFrame, DataFrame)] = {
-    require(nightId.matches("[A-Za-z0-9._-]+"),
-      s"nightId '$nightId' must be directory-safe ([A-Za-z0-9._-]+) — " +
-        "it names the night's shard partition under the corpus root")
-    val nightDir = s"$outDir/night=$nightId"
-    val ndPath = new org.apache.hadoop.fs.Path(nightDir)
-    val fs = ndPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (alreadyDone) {
-      // skipped rerun of a committed night — but repair the shard-side
-      // marker if it is missing: a crash in the window between the
-      // index advance (the night's commit point) and the marker stamp
-      // would otherwise leave a committed night that shard-only
-      // consumers skip forever. onlyIfMissing keeps a healthy rerun
-      // byte-frozen (NightlySpec pins that), and the dir-exists guard
-      // keeps a replayed EMPTY stream batch (hwm-covered, dir never
-      // written) from minting a phantom marker-only night.
-      if (fs.exists(ndPath))
-        graft.operators.Corpus.stampCommitted(s, nightDir, Seq(nightId),
-          onlyIfMissing = true)
-      return None
-    }
-    // night ids share one corpus-root namespace with compaction and
-    // delete-replacement nights, which the INDEX ledger knows nothing
-    // about — a committed marker on a night this ledger has not
-    // recorded means the id belongs to one of those, and running would
-    // overwrite-destroy it (a pruned compaction is the whole corpus)
-    if (fs.exists(new org.apache.hadoop.fs.Path(ndPath,
-        graft.operators.Corpus.Marker)))
-      throw new IllegalStateException(
-        s"night id '$nightId' collides with an existing committed " +
-          s"corpus partition at $nightDir that this index never " +
-          "recorded (a compaction or delete replacement?) — pick a " +
-          "different id")
-    // an ABSORBED id is poisoned even after its dir is pruned (no
-    // marker left to collide with): committing it again would mutual-
-    // absorb with its absorber and blank the whole corpus
-    graft.operators.Corpus.refuseAbsorbedId(s, outDir, nightId)
-    graft.functions.HashSketch.register(s)
-    val index = graft.operators.IndexGenerations.readCurrent(s, indexDir)
-    val delta = graft.Pinned.pin(d24Sig(deltaDocs))
-    val v = graft.Pinned.pin(deltaVerdicts(index, delta))
-    val admittedSigs = graft.Pinned.pin(intraUniqueSigs(
-      delta.join(v.filter(col("verdict") === "unique").select("doc_id"),
-        Seq("doc_id"))))
-    val corpus = gateAndPack(s, deltaDocs,
-      admittedSigs.select("doc_id"), production = true)
-    val receipt = shardReceipt(
-      graft.operators.ShardWriter.writeDocs(corpus, NShards, nightDir))
-    graft.operators.IndexGenerations.advanceByConfRecorded(s, indexDir,
-      admittedSigs, Some(recordName -> recordValue))
-    graft.operators.Corpus.stampCommitted(s, nightDir, Seq(nightId),
-      onlyIfMissing = false)
-    Some((receipt, v))
-  }
+  /** The text axis's night corpus half ([[DeltaAxis.Text]]): the
+    * night's admitted docs gated, packed and written as the
+    * `nightDir` shard partition — p04's stages on the admitted set the
+    * index fold consumes, so the two halves of a production night
+    * CANNOT disagree on admission. Returns the per-shard receipt. */
+  private[queries] def nightShards(s: SparkSession, deltaDocs: DataFrame,
+      admitted: DataFrame, nightDir: String): DataFrame =
+    shardReceipt(graft.operators.ShardWriter.writeDocs(
+      gateAndPack(s, deltaDocs, admitted.select("doc_id"),
+        production = true), NShards, nightDir))
 
   // ---- DuckDB oracles ----
 
@@ -3160,11 +3000,8 @@ object TextDedupOps {
     * `spark.graft.dedup.leakage.exactPairs`) describe the SAME
     * computation the Spark side ran, and a correctness run under a
     * non-default conf verifies instead of reporting false mismatches. */
-  private def activeConf(name: String): Option[String] =
-    SparkSession.getActiveSession.flatMap(_.conf.getOption(name))
-
   private def activeBpeRounds: Int =
-    activeConf("spark.graft.bpe.rounds").map(_.toInt).getOrElse(BpeRounds)
+    SparkSession.getActiveSession.fold(BpeRounds)(bpeRoundsConf)
 
   /** SQL twin of [[leakagePairs]] — the d16/d18/d19 pair source. */
   private def leakagePairsSql: String = leakagePairsSqlFrom("documents")

@@ -18,8 +18,10 @@ trait StoreRow {
 /** The junction between an always-on ingest stream ([[IncrementalDedup]])
   * and a nightly batch loop over an [[graft.operators.IndexGenerations]]
   * generation store — written once, for every axis: text
-  * ([[StoreDedup]], nightly `d24Advance`), media ([[StoreMediaDedup]],
-  * `m12Advance`) and vectors ([[StoreVecDedup]], `s24Advance`). Without
+  * ([[StoreDedup]]), media ([[StoreMediaDedup]]) and vectors
+  * ([[StoreVecDedup]]), each the stream face of one
+  * [[graft.queries.DeltaAxis]] whose nightly [[graft.queries.DeltaAxis.advance]]
+  * folds the same store. Without
   * it the two worlds contradict each other's admission decisions: the
   * stream admits against TTL-bounded in-memory state, the nightly delta
   * admits against the index, and neither sees the other's uniques. Here
@@ -39,9 +41,10 @@ trait StoreRow {
   *
   * An axis object supplies only what differs: its row/state/admission
   * types, its banding ([[bandDf]]), its per-bucket decision body
-  * ([[step]]) and its descriptor — the id column, the columns a fold
-  * writes, the bootstrap-free verdict core, the intra-batch-unique rule
-  * and the `indexCheck` anti-join keys.
+  * ([[step]]), the columns a fold writes, the `indexCheck` anti-join
+  * keys and its [[graft.queries.DeltaAxis]] ([[axis]]) — which gives
+  * the id column, the bootstrap-free verdict core and the
+  * intra-batch-unique rule the nightly lifecycle uses too.
   *
   * TTL: [[ingestBanded]] takes `ttlMs` — [[BucketState.run]]'s bounded
   * state contract, including bootstrap-only buckets that never see
@@ -82,8 +85,10 @@ trait StoreBridge extends Serializable {
   private implicit def stateTagged: TypeTag[State] = stateTag
   private implicit def outTagged: TypeTag[Out] = outTag
 
-  /** The axis's row id — the unit of uniqueness a fold judges. */
-  protected def idCol: String
+  /** The batch lifecycle axis this stream folds into: its id column
+    * (the unit of uniqueness a fold judges), verdict core and
+    * intra-batch dedup. */
+  protected def axis: graft.queries.DeltaAxis
   /** The columns of an admitted row the store keeps. */
   protected def foldCols: Seq[String]
   /** Bucket rows over a frame carrying [[foldCols]] (the live index or an
@@ -92,10 +97,6 @@ trait StoreBridge extends Serializable {
   /** One micro-batch of a bucket's rows against its admitted entries. */
   protected def step(rows: Seq[Banded], admitted: List[State])
       : (List[State], Seq[Out])
-  /** The nightly verdict core (index, delta) → per-id `verdict`. */
-  protected def verdicts(index: DataFrame, delta: DataFrame): DataFrame
-  /** The nightly intra-batch dedup over a fold's uniques. */
-  protected def intraUnique(uniques: DataFrame): DataFrame
   /** Index columns whose equality marks a re-fold (`indexCheck`). */
   protected def indexKeys: Seq[String]
 
@@ -141,7 +142,8 @@ trait StoreBridge extends Serializable {
     * numbers. [[ingestBanded]] derives it from the checkpoint dir — the
     * id that is stable exactly as long as the batch numbering is.
     *
-    * The fold is intra-batch-deduped ([[intraUnique]] — the rule the
+    * The fold is intra-batch-deduped (the axis's
+    * [[graft.queries.DeltaAxis.intraUnique]] — the rule the
     * nightly advance applies), and with
     * `spark.graft.stream.indexCheck=true` also anti-joined against the
     * live index on [[indexKeys]], suppressing the re-fold of a
@@ -165,6 +167,7 @@ trait StoreBridge extends Serializable {
     if (StoreBridge.replayed(StoreBridge.foldRecords(s, indexDir),
         streamId, batchId)) false
     else try {
+      val idCol = axis.idCol
       val cols = foldCols.map(col)
       val dupIds = admissions.filter(col("verdict") =!= "unique")
         .select(idCol).distinct()
@@ -175,7 +178,8 @@ trait StoreBridge extends Serializable {
       val uniques =
         if (!StoreBridge.bootstrapEnabled(s)) {
           val delta = graft.Pinned.pin(uniques0)
-          val keep = verdicts(IndexGenerations.readCurrent(s, indexDir), delta)
+          val keep = axis.verdicts(IndexGenerations.readCurrent(s, indexDir),
+            delta)
             .filter(col("verdict") === "unique").select(idCol)
           delta.join(keep, Seq(idCol)).select(cols: _*)
         } else if (graft.Conf.flag(s, "spark.graft.stream.indexCheck", false))
@@ -184,7 +188,7 @@ trait StoreBridge extends Serializable {
             .select(cols: _*)
         else uniques0
       IndexGenerations.advanceByConfRecorded(s, indexDir,
-        intraUnique(uniques),
+        axis.intraUnique(uniques),
         Some(StoreBridge.RecordName -> s"$streamId:$batchId"))
       true
     } finally graft.Pinned.releaseAll(s)
@@ -208,6 +212,44 @@ trait StoreBridge extends Serializable {
       foldBatch(batch.sparkSession, indexDir, batch, checkpointDir, batchId)
     }
   }
+
+  /** One micro-batch as a FULL production night — the corpus-writing
+    * face of the always-on ingest, shared by the text and media axes.
+    * [[StoreBridge.foldBatch]] maintains the index alone; a deployment
+    * whose stream IS the corpus source also needs each batch's admitted
+    * rows written as training shards, and that is exactly the axis's
+    * recorded night ([[graft.queries.DeltaAxis.nightRecorded]]): verdicts
+    * vs the live index, intra-batch dedup, the shard write under a
+    * `night=<streamId>.<batchId>` partition, and the index fold — one
+    * delta scan, exactly-once per batch. The ledger is `_hwm`-compacted
+    * ([[StoreBridge.NightRecordName]], `streamId:batchId`, monotonic-skip), so it
+    * stays O(#streams) lines over the stream's life; the skip of a
+    * replayed batch repairs a missing night marker exactly like a
+    * rerun night. Consumers read the accumulating corpus with
+    * [[graft.operators.Corpus.readCommitted]] and bound the file count
+    * with its `compactNights`.
+    *
+    * The trade vs [[StoreBridge.foldBatch]]: no in-stream state — every
+    * batch pays the full verdict core against the live index (|delta| +
+    * |index|, the bootstrap-free posture), plus the shard write. Right
+    * for a corpus ingest on a long trigger interval; wrong for a
+    * high-frequency admission filter (use the axis's `ingest` there).
+    * Empty batches are skipped unrecorded — the hwm of a later batch
+    * covers them, and an unrecorded empty replay just re-skips. */
+  protected def nightBatchOf(s: SparkSession, indexDir: String,
+      corpusRoot: String, batch: DataFrame, streamId: String,
+      batchId: Long): Boolean = {
+    require(streamId.matches("[A-Za-z0-9._-]+"),
+      s"streamId '$streamId' must be directory-safe ([A-Za-z0-9._-]+) " +
+        "— it prefixes the night partitions this stream writes")
+    val replay = StoreBridge.replayed(IndexGenerations.records(s, indexDir,
+      StoreBridge.NightRecordName), streamId, batchId)
+    if (!replay && batch.isEmpty) false
+    else try axis.nightRecorded(s, indexDir, batch, s"$streamId.$batchId",
+      Some(corpusRoot), StoreBridge.NightRecordName, s"$streamId:$batchId",
+      alreadyDone = replay).isDefined
+    finally graft.Pinned.releaseAll(s)
+  }
 }
 
 object StoreBridge {
@@ -220,7 +262,7 @@ object StoreBridge {
     * ([[graft.operators.IndexGenerations.HwmSuffix]]). */
   private[streaming] val RecordName = "stream_batch_hwm"
 
-  /** The micro-night ledger ([[nightBatch]]) — `_hwm`-suffixed like
+  /** The micro-night ledger ([[StoreBridge.nightBatchOf]]) — `_hwm`-suffixed like
     * [[RecordName]] and for the same reason: an always-on corpus-
     * writing ingest commits one night per micro-batch forever, and a
     * membership ledger would grow a line per batch. */
@@ -283,41 +325,4 @@ object StoreBridge {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch(f)
       .start()
-
-  /** One micro-batch as a FULL production night — the corpus-writing
-    * face of the always-on ingest, shared by the text and media axes.
-    * [[StoreBridge.foldBatch]] maintains the index alone; a deployment
-    * whose stream IS the corpus source also needs each batch's admitted
-    * rows written as training shards, and that is exactly the axis's
-    * recorded night (`night(nightId, record, alreadyDone)`): verdicts
-    * vs the live index, intra-batch dedup, the shard write under a
-    * `night=<streamId>.<batchId>` partition, and the index fold — one
-    * delta scan, exactly-once per batch. The ledger is `_hwm`-compacted
-    * ([[NightRecordName]], `streamId:batchId`, monotonic-skip), so it
-    * stays O(#streams) lines over the stream's life; the skip of a
-    * replayed batch repairs a missing night marker exactly like a
-    * rerun night. Consumers read the accumulating corpus with
-    * [[graft.operators.Corpus.readCommitted]] and bound the file count
-    * with its `compactNights`.
-    *
-    * The trade vs [[StoreBridge.foldBatch]]: no in-stream state — every
-    * batch pays the full verdict core against the live index (|delta| +
-    * |index|, the bootstrap-free posture), plus the shard write. Right
-    * for a corpus ingest on a long trigger interval; wrong for a
-    * high-frequency admission filter (use the axis's `ingest` there).
-    * Empty batches are skipped unrecorded — the hwm of a later batch
-    * covers them, and an unrecorded empty replay just re-skips. */
-  private[streaming] def nightBatch(s: SparkSession, indexDir: String,
-      isEmpty: => Boolean, streamId: String, batchId: Long)(
-      night: (String, String, Boolean) => Option[_]): Boolean = {
-    require(streamId.matches("[A-Za-z0-9._-]+"),
-      s"streamId '$streamId' must be directory-safe ([A-Za-z0-9._-]+) " +
-        "— it prefixes the night partitions this stream writes")
-    val replay = replayed(IndexGenerations.records(s, indexDir,
-      NightRecordName), streamId, batchId)
-    if (!replay && isEmpty) false
-    else try night(s"$streamId.$batchId", s"$streamId:$batchId", replay)
-      .isDefined
-    finally graft.Pinned.releaseAll(s)
-  }
 }

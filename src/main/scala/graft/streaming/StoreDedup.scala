@@ -7,15 +7,15 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.functions.{MinHashAgg, TextFns}
-import graft.queries.TextDedupOps
+import graft.queries.{DeltaAxis, TextDedupOps}
 
 /** The text axis of the [[StoreBridge]] — the junction between the
   * always-on document ingest ([[IncrementalDedup]]'s world) and the
-  * nightly d24 loop (`TextDedupOps.d24Advance` over the
-  * [[graft.operators.IndexGenerations]] generation store): a fresh
+  * nightly d24 loop ([[graft.queries.DeltaAxis.Text]]'s advance over
+  * the [[graft.operators.IndexGenerations]] generation store): a fresh
   * deployment bootstraps its band-bucket state from the d24 index, and
   * each micro-batch's doc-level admitted uniques fold back under the
-  * recorded exactly-once discipline, so the next nightly `d24Advance`
+  * recorded exactly-once discipline, so the next nightly advance
   * judges a copy of any stream-admitted doc `exact` — the contract
   * StoreDedupSpec pins.
   *
@@ -23,10 +23,10 @@ import graft.queries.TextDedupOps
   * are `TextDedupOps.d24Sig` / d24's band constants — one definition,
   * so stream state buckets and the nightly band joins agree by
   * construction. State per bucket is the admitted (id, hash, signature)
-  * entries — ~40 B/doc like the index itself, never text. The
-  * bootstrap-free verdict core is `TextDedupOps.deltaVerdicts` (exact +
-  * near band join), the intra-batch rule `TextDedupOps.intraUniqueSigs`,
-  * and `indexCheck` anti-joins on the content hash. */
+  * entries — ~40 B/doc like the index itself, never text. The id
+  * column, bootstrap-free verdict core (exact + near band join) and
+  * intra-batch rule are [[graft.queries.DeltaAxis.Text]]'s; `indexCheck`
+  * anti-joins on the content hash. */
 object StoreDedup extends StoreBridge {
 
   case class IngestDoc(doc_id: Long, source: String, text: String)
@@ -50,13 +50,9 @@ object StoreDedup extends StoreBridge {
   protected val bandedTag: TypeTag[BandedDoc] = typeTag[BandedDoc]
   protected val stateTag: TypeTag[Entry] = typeTag[Entry]
   protected val outTag: TypeTag[Admission] = typeTag[Admission]
-  protected val idCol = "doc_id"
+  protected def axis = DeltaAxis.Text
   protected val foldCols = Seq("doc_id", "source", "content_hash", "sig")
   protected val indexKeys = Seq("content_hash")
-  protected def verdicts(index: DataFrame, delta: DataFrame): DataFrame =
-    TextDedupOps.deltaVerdicts(index, delta)
-  protected def intraUnique(uniques: DataFrame): DataFrame =
-    TextDedupOps.intraUniqueSigs(uniques)
 
   /** d24's signature + banding over an ingest frame: one row per (LSH
     * band, doc) for signature-bearing docs, plus one EXACT-arm row per
@@ -127,7 +123,7 @@ object StoreDedup extends StoreBridge {
     * bootstrap state from the d24 index → admit → fold each batch's
     * uniques back ([[StoreBridge.ingestBanded]]). State lives forever.
     * The index must have a committed base generation (build it with
-    * `TextDedupOps.d24Build` first). */
+    * [[graft.queries.DeltaAxis.build]] on the text axis first). */
   def ingest(docs: Dataset[IngestDoc], indexDir: String,
       checkpointDir: String): StreamingQuery =
     ingestBanded(bandDocs(docs), indexDir, checkpointDir, None)
@@ -140,25 +136,20 @@ object StoreDedup extends StoreBridge {
       checkpointDir, Some(ttlMs))
 
   /** One micro-batch as a full production night
-    * ([[StoreBridge.nightBatch]]) whose night is
-    * [[graft.queries.TextDedupOps.p04Night]]: verdicts vs the live
-    * index, intra-batch dedup, quality gate, packing, a
-    * `night=<streamId>.<batchId>` shard partition under `corpusRoot`,
-    * and the index fold. */
+    * ([[StoreBridge.nightBatchOf]]) whose night is the text axis's:
+    * verdicts vs the live index, intra-batch dedup, quality gate,
+    * packing, a `night=<streamId>.<batchId>` shard partition under
+    * `corpusRoot`, and the index fold. */
   def nightBatch(s: SparkSession, indexDir: String,
       corpusRoot: String, docs: DataFrame, streamId: String,
       batchId: Long): Boolean =
-    StoreBridge.nightBatch(s, indexDir, docs.isEmpty, streamId, batchId) {
-      (nightId, record, replay) =>
-        TextDedupOps.p04NightRecorded(s, indexDir, docs, corpusRoot, nightId,
-          StoreBridge.NightRecordName, record, alreadyDone = replay)
-    }
+    nightBatchOf(s, indexDir, corpusRoot, docs, streamId, batchId)
 
   /** Assemble and start the corpus-writing ingest: each micro-batch
     * runs as one [[nightBatch]] production night against `indexDir`,
     * its admitted docs landing under `corpusRoot/night=<streamId>.<n>`.
     * The index must have a committed base generation
-    * (`TextDedupOps.d24Build`). */
+    * ([[graft.queries.DeltaAxis.build]]). */
   def ingestNights(docs: Dataset[IngestDoc], indexDir: String,
       corpusRoot: String, checkpointDir: String, streamId: String)
       : StreamingQuery =

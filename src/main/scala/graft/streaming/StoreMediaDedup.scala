@@ -7,13 +7,13 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.multimodal.Media
-import graft.queries.MultimodalOps
+import graft.queries.DeltaAxis
 import IncrementalDedup.TimedMediaRecord
 
 /** The media axis of the [[StoreBridge]] — the junction between the
   * media ingest stream ([[IncrementalDedup.detectFpDups]]' world) and
-  * the nightly m12 loop (`MultimodalOps.m12Advance` over the generation
-  * store). Same architecture as [[StoreDedup]], media fingerprints
+  * the nightly m12 loop ([[graft.queries.DeltaAxis.Media]]'s advance
+  * over the generation store). Same architecture as [[StoreDedup]], media fingerprints
   * instead of signatures:
   *
   *  1. BOOTSTRAP — a fresh deployment seeds bucket state from the m12
@@ -21,7 +21,7 @@ import IncrementalDedup.TimedMediaRecord
   *     aHash60, ~50 B/asset — payloads never enter state);
   *  2. FOLD — each micro-batch's asset-level admitted uniques advance
   *     the store under the same recorded exactly-once discipline, so
-  *     tonight's `m12Advance` judges a re-upload of any
+  *     tonight's advance judges a re-upload of any
   *     stream-admitted asset `exact`.
   *
   * Fingerprint math is batch m12's own: [[Media.checksumOf]] (the m06
@@ -29,11 +29,10 @@ import IncrementalDedup.TimedMediaRecord
   * aHash60), computed in one `mapPartitions` decode — payloads never
   * shuffle. Banding: m07's 5×12 pigeonhole buckets over the phash
   * (exact for hamming ≤ 4) plus an exact-arm bucket on
-  * `(kind, checksum)`, mirroring [[StoreDedup]]'s `h:` arm. The
-  * bootstrap-free verdict core is `MultimodalOps.mediaDeltaVerdicts`
-  * (exact + perceptual), the intra-batch rule
-  * `MultimodalOps.intraUniqueFps`, and `indexCheck` anti-joins on
-  * kind + checksum. */
+  * `(kind, checksum)`, mirroring [[StoreDedup]]'s `h:` arm. The id
+  * column, bootstrap-free verdict core (exact + perceptual) and
+  * intra-batch rule are [[graft.queries.DeltaAxis.Media]]'s;
+  * `indexCheck` anti-joins on kind + checksum. */
 object StoreMediaDedup extends StoreBridge {
 
   case class Fp(media_id: Long, kind: String, checksum: String, phash: Long)
@@ -53,13 +52,9 @@ object StoreMediaDedup extends StoreBridge {
   protected val bandedTag: TypeTag[BandedFp] = typeTag[BandedFp]
   protected val stateTag: TypeTag[Entry] = typeTag[Entry]
   protected val outTag: TypeTag[FpAdmission] = typeTag[FpAdmission]
-  protected val idCol = "media_id"
+  protected def axis = DeltaAxis.Media
   protected val foldCols = Seq("media_id", "kind", "checksum", "phash")
   protected val indexKeys = Seq("kind", "checksum")
-  protected def verdicts(index: DataFrame, delta: DataFrame): DataFrame =
-    MultimodalOps.mediaDeltaVerdicts(index, delta)
-  protected def intraUnique(uniques: DataFrame): DataFrame =
-    MultimodalOps.intraUniqueFps(uniques)
 
   private val MaxHamming = 4L
 
@@ -145,7 +140,7 @@ object StoreMediaDedup extends StoreBridge {
   /** Assemble and start the store-backed media ingest: decode → band →
     * bootstrap from the m12 index → admit → fold each batch's uniques
     * back. The index must have a committed base generation
-    * (`MultimodalOps.m12Build`). */
+    * ([[graft.queries.DeltaAxis.build]] on the media axis). */
   def ingest(media: Dataset[Media.MediaRecord], indexDir: String,
       checkpointDir: String): StreamingQuery =
     ingestBanded(bandFps(fingerprints(media)), indexDir, checkpointDir, None)
@@ -160,7 +155,7 @@ object StoreMediaDedup extends StoreBridge {
       checkpointDir, Some(ttlMs))
 
   /** One micro-batch as a FULL media production night
-    * ([[StoreBridge.nightBatch]]) whose night is m12's recorded night:
+    * ([[StoreBridge.nightBatchOf]]) whose night is the media axis's:
     * verdicts vs the live m12 index, intra-batch dedup, a
     * `night=<streamId>.<batchId>` PAYLOAD partition under `corpusRoot`
     * (media_id-sharded), and the fingerprint fold — one decode pass.
@@ -169,12 +164,7 @@ object StoreMediaDedup extends StoreBridge {
   def nightBatch(s: SparkSession, indexDir: String, corpusRoot: String,
       media: Dataset[Media.MediaRecord], streamId: String,
       batchId: Long): Boolean =
-    StoreBridge.nightBatch(s, indexDir, media.isEmpty, streamId, batchId) {
-      (nightId, record, replay) =>
-        MultimodalOps.m12NightRecorded(s, indexDir, media, nightId,
-          Some(corpusRoot), StoreBridge.NightRecordName, record,
-          alreadyDone = replay)
-    }
+    nightBatchOf(s, indexDir, corpusRoot, media.toDF(), streamId, batchId)
 
   /** Assemble and start the corpus-writing media ingest: each
     * micro-batch runs as one [[nightBatch]] production night, its

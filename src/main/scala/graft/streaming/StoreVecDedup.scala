@@ -6,19 +6,20 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.queries.SimilarityOps
+import graft.queries.{DeltaAxis, SimilarityOps}
 
 /** The embedding axis of the [[StoreBridge]] — the junction between a
   * vector ingest stream ([[IncrementalDedup.detectVecDups]]' world) and
-  * the nightly s24 loop (`SimilarityOps.s24Advance` over the generation
-  * store). Completes the store-bridge triad (text / media / vector):
+  * the nightly s24 loop ([[graft.queries.DeltaAxis.Vec]]'s advance over
+  * the generation store). Completes the store-bridge triad (text /
+  * media / vector):
   *
   *  1. BOOTSTRAP — a fresh deployment seeds bucket state from the s24
   *     index's live generation (vec_id + quantized vector + norm,
   *     never raw floats);
   *  2. FOLD — each micro-batch's vec-level admitted uniques advance
   *     the store under the recorded exactly-once discipline, so
-  *     tonight's `s24Advance` judges a re-embedding of any
+  *     tonight's advance judges a re-embedding of any
   *     stream-admitted vector `near`.
   *
   * Banding and the verify are batch s24's own: one bucket per
@@ -26,9 +27,9 @@ import graft.queries.SimilarityOps
   * the s11 tables — and admission is the exact quantized-grid cosine
   * ≥ `SimilarityOps.VecDupCos` against the bucket's admitted entries,
   * min-id winner. No exact arm: a byte-identical embedding has cosine
-  * 1.0 and collides in every table. The bootstrap-free verdict core is
-  * `SimilarityOps.vecDeltaVerdicts`, the intra-batch rule
-  * `SimilarityOps.intraUniqueQvs`, and `indexCheck` anti-joins on
+  * 1.0 and collides in every table. The id column, bootstrap-free
+  * verdict core and intra-batch rule are
+  * [[graft.queries.DeltaAxis.Vec]]'s; `indexCheck` anti-joins on
   * quantized-vector equality. */
 object StoreVecDedup extends StoreBridge {
 
@@ -50,13 +51,9 @@ object StoreVecDedup extends StoreBridge {
   protected val bandedTag: TypeTag[BandedVec] = typeTag[BandedVec]
   protected val stateTag: TypeTag[Entry] = typeTag[Entry]
   protected val outTag: TypeTag[VecAdmission] = typeTag[VecAdmission]
-  protected val idCol = "vec_id"
+  protected def axis = DeltaAxis.Vec
   protected val foldCols = Seq("vec_id", "qv", "n2")
   protected val indexKeys = Seq("qv")
-  protected def verdicts(index: DataFrame, delta: DataFrame): DataFrame =
-    SimilarityOps.vecDeltaVerdicts(index, delta)
-  protected def intraUnique(uniques: DataFrame): DataFrame =
-    SimilarityOps.intraUniqueQvs(uniques)
 
   /** One row per (LSH table, vec) with qv/n2 carried through — the
     * per-row explode a streaming plan needs (the batch verdicts use
@@ -123,7 +120,8 @@ object StoreVecDedup extends StoreBridge {
   }
 
   /** Assemble and start the store-backed vector ingest. The index must
-    * have a committed base generation (`SimilarityOps.s24Build`). */
+    * have a committed base generation ([[graft.queries.DeltaAxis.build]]
+    * on the vec axis). */
   def ingest(vecs: Dataset[VecRecord], indexDir: String,
       checkpointDir: String): StreamingQuery =
     ingestBanded(bandVecs(vecs), indexDir, checkpointDir, None)

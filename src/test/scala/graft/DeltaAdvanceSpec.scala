@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import graft.helium.SparkSuite
 import graft.multimodal.Media
 import graft.operators.IndexGenerations
-import graft.queries.{MultimodalOps, TextDedupOps}
+import graft.queries.{DeltaAxis, TextDedupOps}
 
 /** The nightly index-advance contract for the delta-dedup family: night 1
   * builds the base index, night 2 runs the delta AND folds its admitted
@@ -61,7 +61,7 @@ class DeltaAdvanceSpec extends SparkSuite {
   private def d24ThreeNightsBody(lsm: Boolean): Unit = {
     val idx = Files.createTempDirectory("d24adv").toString
     val base = docs((0L to 9L).map(i => i -> freshText(s"b${i}w")): _*)
-    TextDedupOps.d24Build(spark, idx, base)
+    DeltaAxis.Text.build(spark, idx, base)
     assert(IndexGenerations.currentGen(spark, idx).contains(0L))
     val s0 = fileState(idx)
 
@@ -70,7 +70,7 @@ class DeltaAdvanceSpec extends SparkSuite {
     val u1 = freshText("u1w")
     val u2 = freshText("u2w")
     val nearOf5 = freshText("b5w").split(" ").updated(7, "EDITED").mkString(" ")
-    val v2 = TextDedupOps.d24Advance(spark, idx,
+    val v2 = DeltaAxis.Text.advance(spark, idx,
         docs(100L -> freshText("b3w"), 101L -> u1,
           102L -> nearOf5, 103L -> u2))
       .select("doc_id", "verdict", "winner")
@@ -96,7 +96,7 @@ class DeltaAdvanceSpec extends SparkSuite {
     // caught; the night-2 NEAR doc's text was not folded, so a copy of
     // it still resolves near against its base-5 root, not doc 102
     val nearOfU2 = u2.split(" ").updated(11, "EDITED").mkString(" ")
-    val v3 = TextDedupOps.d24Advance(spark, idx,
+    val v3 = DeltaAxis.Text.advance(spark, idx,
         docs(200L -> u1, 201L -> nearOfU2,
           202L -> nearOf5, 203L -> freshText("u3w")))
       .select("doc_id", "verdict", "winner")
@@ -133,11 +133,11 @@ class DeltaAdvanceSpec extends SparkSuite {
       Media.mediaFromDocuments(docs(rows: _*))
     // ids congruent mod 3 share the media kind (mediaFromDocuments'
     // kind = f(id % 3)), so a payload copy at id+3k is an EXACT hit
-    MultimodalOps.m12Build(spark, idx,
+    DeltaAxis.Media.build(spark, idx,
       media((0L to 8L).map(i => i -> freshText(s"m${i}w")): _*))
     val s0 = fileState(idx)
     val t1 = freshText("mu1w")
-    val v2 = MultimodalOps.m12Advance(spark, idx,
+    val v2 = DeltaAxis.Media.advance(spark, idx,
         media(99L -> freshText("m3w"), 100L -> t1))
       .select("media_id", "verdict", "winner")
       .as[(Long, String, Long)].collect()
@@ -152,7 +152,7 @@ class DeltaAdvanceSpec extends SparkSuite {
     // textually: a same-shape token family ("mu2w…" vs "mu1w…") renders
     // to a near-identical byte raster and lands within the phash near
     // threshold — use a different length and alphabet entirely
-    val v3 = MultimodalOps.m12Advance(spark, idx,
+    val v3 = DeltaAxis.Media.advance(spark, idx,
         media(202L -> t1,
           203L -> (0 until 9).map(i => s"ZZZZZZZ$i QQ").mkString(" | ")))
       .select("media_id", "verdict", "winner")
@@ -198,12 +198,12 @@ class DeltaAdvanceSpec extends SparkSuite {
   test("an empty crawl night advances cleanly: no verdicts, contents " +
     "unchanged, generation still bumps (the audit trail of a ran night)") {
     val idx = Files.createTempDirectory("emptynight").toString
-    TextDedupOps.d24Build(spark, idx,
+    DeltaAxis.Text.build(spark, idx,
       docs((0L to 3L).map(i => i -> freshText(s"e${i}v")): _*))
     def contents = IndexGenerations.readCurrent(spark, idx)
       .select("doc_id").as[Long].collect().sorted.toSeq
     val before = contents
-    val v = TextDedupOps.d24Advance(spark, idx,
+    val v = DeltaAxis.Text.advance(spark, idx,
       docs().selectExpr("doc_id", "text", "source"))
     assert(v.count() == 0L)
     Pinned.releaseAll(spark)
@@ -214,10 +214,10 @@ class DeltaAdvanceSpec extends SparkSuite {
   test("advance rerun is content-idempotent: replaying a night after a " +
     "post-marker crash folds nothing new") {
     val idx = Files.createTempDirectory("replay").toString
-    TextDedupOps.d24Build(spark, idx,
+    DeltaAxis.Text.build(spark, idx,
       docs((0L to 4L).map(i => i -> freshText(s"r${i}y")): _*))
     val night = docs(50L -> freshText("ru1y"), 51L -> freshText("ru2y"))
-    TextDedupOps.d24Advance(spark, idx, night)
+    DeltaAxis.Text.advance(spark, idx, night)
     Pinned.releaseAll(spark)
     def contents = IndexGenerations.readCurrent(spark, idx)
       .select("doc_id", "content_hash").as[(Long, String)]
@@ -227,7 +227,7 @@ class DeltaAdvanceSpec extends SparkSuite {
     // last, so a crash BEFORE it makes the rerun a clean first attempt;
     // a crash AFTER it means the rerun's docs now match THEMSELVES in
     // the index — verdict exact, nothing admitted, contents unchanged
-    val v2 = TextDedupOps.d24Advance(spark, idx, night)
+    val v2 = DeltaAxis.Text.advance(spark, idx, night)
       .select("doc_id", "verdict", "winner")
       .as[(Long, String, Long)].collect()
     Pinned.releaseAll(spark)
@@ -247,7 +247,7 @@ class DeltaAdvanceSpec extends SparkSuite {
         val rnd = new scala.util.Random(99)
         val texts = scala.collection.mutable.Map[Long, String]()
         (0L to 7L).foreach(i => texts(i) = freshText(s"n${i}z"))
-        TextDedupOps.d24Build(spark, idx,
+        DeltaAxis.Text.build(spark, idx,
           docs(texts.toSeq.sortBy(_._1): _*))
         val expected = scala.collection.mutable.Set[Long]() ++= texts.keys
         var nextId = 100L
@@ -262,7 +262,7 @@ class DeltaAdvanceSpec extends SparkSuite {
           }
           val nightDocs = (nextId, texts(dup)) +: fresh
           nextId += 1
-          val v = TextDedupOps.d24Advance(spark, idx,
+          val v = DeltaAxis.Text.advance(spark, idx,
               docs(nightDocs: _*))
             .select("doc_id", "verdict").as[(Long, String)].collect().toMap
           Pinned.releaseAll(spark)
@@ -385,7 +385,7 @@ class DeltaAdvanceSpec extends SparkSuite {
     "copies contributes one signature per distinct content, and later " +
     "nights resolve against the min-id survivor") {
     val idx = Files.createTempDirectory("intranight").toString
-    TextDedupOps.d24Build(spark, idx,
+    DeltaAxis.Text.build(spark, idx,
       docs((0L to 3L).map(i => i -> freshText(s"in${i}p")): _*))
     val u1 = freshText("iw1p")
     val u1near = u1.split(" ").updated(9, "EDITED").mkString(" ")
@@ -393,7 +393,7 @@ class DeltaAdvanceSpec extends SparkSuite {
     // 11 is a 1-token edit of both) — ALL judged unique vs the index
     // (intra-delta verdicts stay d02/d03's job), but only min-id 10
     // may fold
-    val v = TextDedupOps.d24Advance(spark, idx,
+    val v = DeltaAxis.Text.advance(spark, idx,
         docs(10L -> u1, 11L -> u1near, 12L -> u1))
       .select("doc_id", "verdict").as[(Long, String)].collect().toMap
     Pinned.releaseAll(spark)
@@ -404,7 +404,7 @@ class DeltaAdvanceSpec extends SparkSuite {
       s"intra-night dups leaked into the index: $folded")
     // next night: copies of the kept AND the dropped variants both
     // resolve against the one surviving signature
-    val v2 = TextDedupOps.d24Advance(spark, idx,
+    val v2 = DeltaAxis.Text.advance(spark, idx,
         docs(20L -> u1, 21L -> u1near))
       .select("doc_id", "verdict", "winner")
       .as[(Long, String, Long)].collect()
@@ -420,12 +420,12 @@ class DeltaAdvanceSpec extends SparkSuite {
     val idx = Files.createTempDirectory("m12intra").toString
     def media(rows: (Long, String)*) =
       Media.mediaFromDocuments(docs(rows: _*))
-    MultimodalOps.m12Build(spark, idx,
+    DeltaAxis.Media.build(spark, idx,
       media((0L to 5L).map(i => i -> freshText(s"mi${i}w")): _*))
     // ids congruent mod 3 share the media kind, so 100 and 103 carry the
     // SAME payload under the same kind — an intra-night exact pair
     val t = freshText("miu1w")
-    val v = MultimodalOps.m12Advance(spark, idx,
+    val v = DeltaAxis.Media.advance(spark, idx,
         media(100L -> t, 103L -> t))
       .select("media_id", "verdict").as[(Long, String)].collect().toMap
     Pinned.releaseAll(spark)
@@ -434,7 +434,7 @@ class DeltaAdvanceSpec extends SparkSuite {
       .select("media_id").as[Long].collect().toSet
     assert(folded == Set(0L, 1L, 2L, 3L, 4L, 5L, 100L),
       s"m12 intra-night dup leaked into the index: $folded")
-    val v2 = MultimodalOps.m12Advance(spark, idx, media(106L -> t))
+    val v2 = DeltaAxis.Media.advance(spark, idx, media(106L -> t))
       .select("media_id", "verdict", "winner")
       .as[(Long, String, Long)].collect()
       .map(r => r._1 -> ((r._2, r._3))).toMap
@@ -625,7 +625,7 @@ class DeltaAdvanceSpec extends SparkSuite {
     "survive, history stays pinned until prune") {
     val root = Files.createTempDirectory("retract_idx").toString
     val u1 = freshText("rtu1w")
-    TextDedupOps.d24Build(spark, root,
+    DeltaAxis.Text.build(spark, root,
       docs(0L -> freshText("rtb0w")))
     // night 1 admits 10; a recorded fold stamps replay evidence
     IndexGenerations.advanceByConfRecorded(spark, root,
@@ -650,7 +650,7 @@ class DeltaAdvanceSpec extends SparkSuite {
 
     // the content is re-admittable: tonight's advance judges the SAME
     // text unique and folds it under its new id
-    val v = TextDedupOps.d24Advance(spark, root, docs(20L -> u1))
+    val v = DeltaAxis.Text.advance(spark, root, docs(20L -> u1))
       .select("verdict").as[String].collect().toSeq
     Pinned.releaseAll(spark)
     assert(v == Seq("unique"),

@@ -104,7 +104,7 @@ class IndexReuseSpec extends SparkSuite {
         .select("text").as[String].head()
       val night = Seq((900000L, victimText, "src0"))
         .toDF("doc_id", "text", "source")
-      graft.queries.TextDedupOps.d24Advance(spark, idx, night)
+      graft.queries.DeltaAxis.Text.advance(spark, idx, night)
       Pinned.releaseAll(spark)
       spark.conf.set("spark.graft.d24.buildIndex", "false")
       // the pinned serve reproduces the pre-advance world verbatim…

@@ -214,10 +214,10 @@ class NightlySpec extends SparkSuite {
     assert(!JFiles.exists(
       Paths.get(shards, "night=c1", "_NIGHT_COMMITTED")),
       "a torn night must not look committed")
-    val healed = graft.queries.TextDedupOps.p04Night(spark, idx, deltaDf,
-      shards, "c1")
+    val healed = graft.queries.DeltaAxis.Text.night(spark, idx, deltaDf,
+      "c1", Some(shards))
     assert(healed.isDefined, "rerun of an UNcommitted night must run")
-    healed.foreach { case (receipt, _) => receipt.count() }
+    healed.foreach(_.receipt.foreach(_.count()))
     Pinned.releaseAll(spark)
     assert(spark.read.parquet(s"$shards/night=c1")
       .select("doc_id").as[Long].collect().toSet == Set(100L, 101L),
@@ -236,8 +236,8 @@ class NightlySpec extends SparkSuite {
       .map(p => p.toString -> JFiles.getLastModifiedTime(p).toMillis)
       .toMap
     val frozen = state(shards)
-    assert(graft.queries.TextDedupOps.p04Night(spark, idx, deltaDf,
-      shards, "c1").isEmpty, "a committed night must skip")
+    assert(graft.queries.DeltaAxis.Text.night(spark, idx, deltaDf,
+      "c1", Some(shards)).isEmpty, "a committed night must skip")
     assert(JFiles.exists(
       Paths.get(shards, "night=c1", "_NIGHT_COMMITTED")),
       "the skipped rerun must repair the missing marker")
@@ -393,6 +393,14 @@ class NightlySpec extends SparkSuite {
         "--id", "m2", "--prune"))
     assert(out2.contains("\"exact\":1"), out2)
     assert(gens(idx) == Seq(2L), s"prune left ${gens(idx)}")
+    // retract keys on the media axis's id column: asset 100 leaves the
+    // live index and its payload becomes re-admittable
+    val ret = Nightly.run(spark, Seq("media", "retract", idx, "--ids", "100"))
+    assert(ret.contains("\"removed_ids\":1,") &&
+      ret.contains("\"removed_rows\":1,"), ret)
+    val again = Nightly.run(spark,
+      Seq("media", "judge", idx, writeDocs(106L -> t)))
+    assert(again.contains("\"unique\":1"), again)
   }
 
   test("--clean-lines scrubs boilerplate lines at ingest — the stored " +
@@ -452,6 +460,13 @@ class NightlySpec extends SparkSuite {
     assert(out2.contains("\"near\":1"),
       s"vec night-2 missed night-1's admitted direction: $out2")
     assert(gens(idx) == Seq(2L), s"prune left ${gens(idx)}")
+    // retract keys on the vec axis's id column: vec 11 leaves the live
+    // index and its direction becomes re-admittable
+    val ret = Nightly.run(spark, Seq("vec", "retract", idx, "--ids", "11"))
+    assert(ret.contains("\"removed_ids\":1,") &&
+      ret.contains("\"removed_rows\":1,"), ret)
+    val again = Nightly.run(spark, Seq("vec", "judge", idx, embDir(21L -> 30)))
+    assert(again.contains("\"unique\":1"), again)
   }
 
   test("status reports generations, tags, the live set, the night " +

@@ -30,7 +30,7 @@ class ProductionLoopSpec extends SparkSuite {
 
     // day 0: the index is built from the existing base corpus
     val u0 = freshText("plb0w")
-    queries.TextDedupOps.d24Build(spark, idx,
+    queries.DeltaAxis.Text.build(spark, idx,
       Seq((0L, "s0", u0), (1L, "s0", freshText("plb1w")))
         .toDF("doc_id", "source", "text"))
 

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import graft.helium.SparkSuite
 import graft.operators.IndexGenerations
-import graft.queries.SimilarityOps
+import graft.queries.DeltaAxis
 
 /** The nightly index-advance contract on the EMBEDDING axis — s24, the
   * d24/m12 lifecycle over quantized vectors: night 1 builds the base
@@ -39,13 +39,13 @@ class VecAdvanceSpec extends SparkSuite {
     "live index, uniques fold, a later night catches a re-embedding " +
     "of an earlier night's unique") {
     val idx = Files.createTempDirectory("s24_idx").toString
-    SimilarityOps.s24Build(spark, idx,
+    DeltaAxis.Vec.build(spark, idx,
       emb((0L to 4L).map(i => i -> oneHot(i.toInt)): _*))
     assert(indexIds(idx) == Set(0L, 1L, 2L, 3L, 4L))
 
     // night 2: a copy of base vec 2 (scaled — same direction), a near
     // perturbation of base 3, and one genuinely new direction
-    val v1 = SimilarityOps.s24Advance(spark, idx, emb(
+    val v1 = DeltaAxis.Vec.advance(spark, idx, emb(
         10L -> oneHot(2, scale = 2f),
         11L -> nearOf(3, noiseAt = 40),
         12L -> oneHot(9)))
@@ -61,7 +61,7 @@ class VecAdvanceSpec extends SparkSuite {
 
     // night 3: a re-embedding of night-2's admitted unique — the
     // contract the read-only query face cannot deliver alone
-    val v2 = SimilarityOps.s24Advance(spark, idx,
+    val v2 = DeltaAxis.Vec.advance(spark, idx,
         emb(20L -> nearOf(9, noiseAt = 50), 21L -> oneHot(13)))
       .select("vec_id", "verdict", "winner")
       .as[(Long, String, Long)].collect()
@@ -75,11 +75,11 @@ class VecAdvanceSpec extends SparkSuite {
   test("intra-night vector duplicates fold ONCE: min-id survivor, " +
     "verdicts unaffected, later nights resolve against the survivor") {
     val idx = Files.createTempDirectory("s24_intra").toString
-    SimilarityOps.s24Build(spark, idx,
+    DeltaAxis.Vec.build(spark, idx,
       emb((0L to 2L).map(i => i -> oneHot(i.toInt)): _*))
     // three internal copies of one new direction — all judged unique
     // vs the index, but only min-id 30 folds
-    val v = SimilarityOps.s24Advance(spark, idx, emb(
+    val v = DeltaAxis.Vec.advance(spark, idx, emb(
         30L -> oneHot(20), 31L -> nearOf(20, noiseAt = 41),
         32L -> oneHot(20, scale = 3f)))
       .select("vec_id", "verdict").as[(Long, String)].collect().toMap
@@ -88,7 +88,7 @@ class VecAdvanceSpec extends SparkSuite {
     assert(indexIds(idx) == Set(0L, 1L, 2L, 30L),
       "intra-night vector dups leaked into the index")
     // copies of both kept and dropped variants hit the one survivor
-    val v2 = SimilarityOps.s24Advance(spark, idx,
+    val v2 = DeltaAxis.Vec.advance(spark, idx,
         emb(40L -> oneHot(20), 41L -> nearOf(20, noiseAt = 41)))
       .select("vec_id", "verdict", "winner")
       .as[(Long, String, Long)].collect()
@@ -101,15 +101,15 @@ class VecAdvanceSpec extends SparkSuite {
   test("s24Night is exactly-once per id on the shared night ledger; " +
     "a rerun of a committed night is a no-op") {
     val idx = Files.createTempDirectory("s24_night").toString
-    SimilarityOps.s24Build(spark, idx, emb(0L -> oneHot(0)))
+    DeltaAxis.Vec.build(spark, idx, emb(0L -> oneHot(0)))
     val d = emb(10L -> oneHot(30))
-    val first = SimilarityOps.s24Night(spark, idx, d, "v1")
+    val first = DeltaAxis.Vec.night(spark, idx, d, "v1")
     assert(first.isDefined)
-    first.foreach(_.count())
+    first.foreach(_.verdicts.count())
     Pinned.releaseAll(spark)
     assert(indexIds(idx) == Set(0L, 10L))
     val gens = IndexGenerations.committed(spark, idx)
-    assert(SimilarityOps.s24Night(spark, idx, d, "v1").isEmpty,
+    assert(DeltaAxis.Vec.night(spark, idx, d, "v1").isEmpty,
       "rerun of a committed vec night must skip")
     assert(IndexGenerations.committed(spark, idx) == gens)
   }

@@ -5,11 +5,11 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 import graft.helium.SparkSuite
-import graft.queries.TextDedupOps
+import graft.queries.DeltaAxis
 
 /** The corpus root's consumer contract: committed-only reads,
   * compaction with recorded absorption, lazy prune. Nights are written
-  * by the real p04Night (against a real index) so the spec pins the
+  * by the real text night (against a real index) so the spec pins the
   * producer/consumer pair, not a fixture of the layout. */
 class CorpusSpec extends SparkSuite {
   import spark.implicits._
@@ -23,7 +23,7 @@ class CorpusSpec extends SparkSuite {
 
   private def night(idx: String, root: String, id: String,
       rows: (Long, String)*): Unit = {
-    assert(TextDedupOps.p04Night(spark, idx, docsDf(rows: _*), root, id)
+    assert(DeltaAxis.Text.night(spark, idx, docsDf(rows: _*), id, Some(root))
       .isDefined, s"night $id unexpectedly skipped")
     graft.Pinned.releaseAll(spark)
   }
@@ -45,7 +45,7 @@ class CorpusSpec extends SparkSuite {
     "night's partial dir (files, no marker) is invisible") {
     val idx = Files.createTempDirectory("cs_idx").toString
     val root = Files.createTempDirectory("cs_root").toString
-    TextDedupOps.d24Build(spark, idx,
+    DeltaAxis.Text.build(spark, idx,
       docsDf((0L to 2L).map(i => i -> freshText(s"cb${i}w")): _*))
     night(idx, root, "n1",
       10L -> freshText("cu1w"), 11L -> freshText("cu2w"))
@@ -67,7 +67,7 @@ class CorpusSpec extends SparkSuite {
     "chains resolve") {
     val idx = Files.createTempDirectory("cc_idx").toString
     val root = Files.createTempDirectory("cc_root").toString
-    TextDedupOps.d24Build(spark, idx, docsDf(0L -> freshText("kb0w")))
+    DeltaAxis.Text.build(spark, idx, docsDf(0L -> freshText("kb0w")))
     night(idx, root, "n1", 10L -> freshText("ku1w"))
     night(idx, root, "n2", 20L -> freshText("ku2w"))
 
@@ -103,7 +103,7 @@ class CorpusSpec extends SparkSuite {
     "count — the small-files answer for the always-on corpus ingest") {
     val idx = Files.createTempDirectory("cm_idx").toString
     val root = Files.createTempDirectory("cm_root").toString
-    TextDedupOps.d24Build(spark, idx, docsDf(0L -> freshText("mb0w")))
+    DeltaAxis.Text.build(spark, idx, docsDf(0L -> freshText("mb0w")))
     // 8 micro-batches of 5 fresh docs each, as the stream would land them
     (0 until 8).foreach { b =>
       val docs = docsDf((0 until 5).map(i =>
@@ -132,7 +132,7 @@ class CorpusSpec extends SparkSuite {
     "digit-only night ids, where type inference would break pruning") {
     val idx = Files.createTempDirectory("cp_idx").toString
     val root = Files.createTempDirectory("cp_root").toString
-    TextDedupOps.d24Build(spark, idx, docsDf(0L -> freshText("pb0w")))
+    DeltaAxis.Text.build(spark, idx, docsDf(0L -> freshText("pb0w")))
     // the scheduler's natural ids are dates — all digits
     night(idx, root, "20260814", 10L -> freshText("pu1w"))
     night(idx, root, "20260815", 20L -> freshText("pu2w"))
@@ -163,7 +163,7 @@ class CorpusSpec extends SparkSuite {
     val rnd = new scala.util.Random(4242)
     val idx = Files.createTempDirectory("cmp_idx").toString
     val root = Files.createTempDirectory("cmp_root").toString
-    TextDedupOps.d24Build(spark, idx, docsDf(0L -> freshText("qb0w")))
+    DeltaAxis.Text.build(spark, idx, docsDf(0L -> freshText("qb0w")))
     // model: the live night ids and the doc ids each contributes;
     // markers mirrors every committed marker ON DISK (live + absorbed-
     // but-unpruned) with its absorbs lines — the source of the retired
@@ -213,13 +213,13 @@ class CorpusSpec extends SparkSuite {
         case 5 =>
           // rerun of a random committed night: recorded no-op. Only
           // REAL night ids qualify — a delete replacement ("n3-d<tag>")
-          // is corpus-side only, and p04Night correctly REFUSES its id
+          // is corpus-side only, and the night correctly REFUSES its id
           // (the collision guard), which is its own pinned test below
           model.keys.toSeq.sorted.headOption
             .filter(id => id.startsWith("n") && !id.contains("-d"))
             .foreach { id =>
-              assert(TextDedupOps.p04Night(spark, idx,
-                docsDf(freshRows(1): _*), root, id).isEmpty,
+              assert(DeltaAxis.Text.night(spark, idx,
+                docsDf(freshRows(1): _*), id, Some(root)).isEmpty,
                 s"step $step: a committed night re-ran")
             }
         case 6 =>
@@ -296,7 +296,7 @@ class CorpusSpec extends SparkSuite {
     "a torn delete (no marker) serves the OLD night intact") {
     val idx = Files.createTempDirectory("cd_idx").toString
     val root = Files.createTempDirectory("cd_root").toString
-    TextDedupOps.d24Build(spark, idx, docsDf(0L -> freshText("db0w")))
+    DeltaAxis.Text.build(spark, idx, docsDf(0L -> freshText("db0w")))
     night(idx, root, "n1",
       10L -> freshText("du1w"), 11L -> freshText("du2w"))
     night(idx, root, "n2", 20L -> freshText("du3w"))
@@ -319,7 +319,7 @@ class CorpusSpec extends SparkSuite {
     assert(walk(root) == frozenAll, "an idempotent rerun wrote")
     // the index keeps the signature: a re-crawl of the deleted content
     // is still judged a dup and cannot re-enter the corpus
-    val v = TextDedupOps.d24Advance(spark, idx,
+    val v = DeltaAxis.Text.advance(spark, idx,
         docsDf(500L -> freshText("du1w")))
       .select("verdict").as[String].collect().toSeq
     graft.Pinned.releaseAll(spark)
@@ -343,7 +343,7 @@ class CorpusSpec extends SparkSuite {
     "self-consistency audit for a root of unknown provenance") {
     val idx = Files.createTempDirectory("ca_idx").toString
     val root = Files.createTempDirectory("ca_root").toString
-    TextDedupOps.d24Build(spark, idx, docsDf(0L -> freshText("ab0w")))
+    DeltaAxis.Text.build(spark, idx, docsDf(0L -> freshText("ab0w")))
     val t = freshText("au1w")
     night(idx, root, "n1", 10L -> t, 11L -> freshText("au2w"))
     assert(Corpus.exactDupGroups(spark, root).count() == 0L,
@@ -371,18 +371,26 @@ class CorpusSpec extends SparkSuite {
     "would overwrite-destroy the compacted corpus") {
     val idx = Files.createTempDirectory("cx_idx").toString
     val root = Files.createTempDirectory("cx_root").toString
-    TextDedupOps.d24Build(spark, idx, docsDf(0L -> freshText("xb0w")))
+    DeltaAxis.Text.build(spark, idx, docsDf(0L -> freshText("xb0w")))
     night(idx, root, "n1", 10L -> freshText("xu1w"))
     assert(Corpus.compactNights(spark, root, "20260815"))
     assert(Corpus.pruneNights(spark, root) == Seq("n1"))
     val frozen = walk(root)
-    val e = intercept[IllegalStateException] {
-      TextDedupOps.p04Night(spark, idx,
-        docsDf(20L -> freshText("xu2w")), root, "20260815")
+    // the guard is the shared night's: a media night (--shards) into
+    // the same root is refused the same way
+    val midx = Files.createTempDirectory("cx_midx").toString
+    DeltaAxis.Media.build(spark, midx,
+      DeltaAxis.Media.fromDocs(docsDf(0L -> freshText("xb0w"))))
+    Seq(DeltaAxis.Text -> idx, DeltaAxis.Media -> midx).foreach {
+      case (ax, ix) =>
+        val e = intercept[IllegalStateException] {
+          ax.night(spark, ix, ax.fromDocs(docsDf(20L -> freshText("xu2w"))),
+            "20260815", Some(root))
+        }
+        assert(e.getMessage.contains("collides"), s"${ax.name}: $e")
+        assert(walk(root) == frozen,
+          s"the refused ${ax.name} night touched the corpus root")
     }
-    assert(e.getMessage.contains("collides"), e.getMessage)
-    assert(walk(root) == frozen,
-      "the refused night touched the corpus root")
     assert(servedIds(root) == Set(10L))
   }
 
@@ -392,7 +400,7 @@ class CorpusSpec extends SparkSuite {
     "it) — while an id whose own absorber was pruned is free again") {
     val idx = Files.createTempDirectory("ret_idx").toString
     val root = Files.createTempDirectory("ret_root").toString
-    TextDedupOps.d24Build(spark, idx, docsDf(0L -> freshText("rb0w")))
+    DeltaAxis.Text.build(spark, idx, docsDf(0L -> freshText("rb0w")))
     night(idx, root, "n1", 10L -> freshText("ru1w"))
     assert(Corpus.compactNights(spark, root, "c1")) // c1 absorbs n1
     assert(Corpus.compactNights(spark, root, "c2")) // c2 absorbs c1
@@ -406,8 +414,8 @@ class CorpusSpec extends SparkSuite {
     }
     assert(e1.getMessage.contains("retired"), e1.getMessage)
     val e2 = intercept[IllegalStateException] {
-      TextDedupOps.p04Night(spark, idx,
-        docsDf(20L -> freshText("ru2w")), root, "c1")
+      DeltaAxis.Text.night(spark, idx,
+        docsDf(20L -> freshText("ru2w")), "c1", Some(root))
     }
     assert(e2.getMessage.contains("retired"), e2.getMessage)
     // a root from before the _RETIRED cache existed (or whose cache
@@ -417,8 +425,8 @@ class CorpusSpec extends SparkSuite {
     java.nio.file.Files.deleteIfExists(
       Paths.get(root, "." + Corpus.Retired + ".crc"))
     val e3 = intercept[IllegalStateException] {
-      TextDedupOps.p04Night(spark, idx,
-        docsDf(21L -> freshText("ru4w")), root, "c1")
+      DeltaAxis.Text.night(spark, idx,
+        docsDf(21L -> freshText("ru4w")), "c1", Some(root))
     }
     assert(e3.getMessage.contains("retired"),
       s"cache-less fallback failed: ${e3.getMessage}")
@@ -444,7 +452,7 @@ class CorpusSpec extends SparkSuite {
     "derived-shard filters stay correct on any-shard-count corpora") {
     val idx = Files.createTempDirectory("sh4_idx").toString
     val root = Files.createTempDirectory("sh4_root").toString
-    TextDedupOps.d24Build(spark, idx, docsDf(0L -> freshText("sb0w")))
+    DeltaAxis.Text.build(spark, idx, docsDf(0L -> freshText("sb0w")))
     night(idx, root, "s1",
       (10L to 17L).map(i => i -> freshText(s"su${i}w")): _*)
     assert(Corpus.compactNights(spark, root, "sc1", nShards = 4))
@@ -470,7 +478,7 @@ class CorpusSpec extends SparkSuite {
     "reclamation deletes it") {
     val idx = Files.createTempDirectory("snap_idx").toString
     val root = Files.createTempDirectory("snap_root").toString
-    TextDedupOps.d24Build(spark, idx, docsDf(0L -> freshText("pb0w")))
+    DeltaAxis.Text.build(spark, idx, docsDf(0L -> freshText("pb0w")))
     night(idx, root, "p1", 10L -> freshText("pu1w"))
     night(idx, root, "p2", 20L -> freshText("pu2w"))
     // the consumer starts: record the live set, remember the rows
@@ -514,7 +522,7 @@ class CorpusSpec extends SparkSuite {
     "check until the next prune rewrites the cache") {
     val idx = Files.createTempDirectory("stale_idx").toString
     val root = Files.createTempDirectory("stale_root").toString
-    TextDedupOps.d24Build(spark, idx, docsDf(0L -> freshText("tb0w")))
+    DeltaAxis.Text.build(spark, idx, docsDf(0L -> freshText("tb0w")))
     night(idx, root, "t1", 10L -> freshText("tu1w"))
     // simulate the crash window: compact commits its marker but the
     // cache write never lands (blank it back to the pre-compact state)
@@ -528,29 +536,39 @@ class CorpusSpec extends SparkSuite {
     // index's own night ledger would skip t1 as a recorded rerun long
     // before either corpus guard, which is the healthy path.)
     val idx2 = Files.createTempDirectory("stale_idx2").toString
-    TextDedupOps.d24Build(spark, idx2, docsDf(0L -> freshText("tb2w")))
+    DeltaAxis.Text.build(spark, idx2, docsDf(0L -> freshText("tb2w")))
+    // a media lineage (a media night given --shards) meets the same
+    // guards in the same root
+    val midx2 = Files.createTempDirectory("stale_midx2").toString
+    DeltaAxis.Media.build(spark, midx2,
+      DeltaAxis.Media.fromDocs(docsDf(0L -> freshText("tb2w"))))
+    val lineages = Seq(DeltaAxis.Text -> idx2, DeltaAxis.Media -> midx2)
     assert(!Corpus.compactNights(spark, root, "t1"),
       "reusing a marker-bearing id must read as a committed no-op")
-    val e = intercept[IllegalStateException] {
-      TextDedupOps.p04Night(spark, idx2,
-        docsDf(20L -> freshText("tu2w")), root, "t1")
+    lineages.foreach { case (ax, ix) =>
+      val e = intercept[IllegalStateException] {
+        ax.night(spark, ix, ax.fromDocs(docsDf(20L -> freshText("tu2w"))),
+          "t1", Some(root))
+      }
+      assert(e.getMessage.contains("collides"), s"${ax.name}: $e")
     }
-    assert(e.getMessage.contains("collides"), e.getMessage)
     // the next prune heals the cache: t1's dir goes, and the guard
     // alone now carries the refusal
     assert(Corpus.pruneNights(spark, root) == Seq("t1"))
-    val e2 = intercept[IllegalStateException] {
-      TextDedupOps.p04Night(spark, idx2,
-        docsDf(21L -> freshText("tu3w")), root, "t1")
+    lineages.foreach { case (ax, ix) =>
+      val e2 = intercept[IllegalStateException] {
+        ax.night(spark, ix, ax.fromDocs(docsDf(21L -> freshText("tu3w"))),
+          "t1", Some(root))
+      }
+      assert(e2.getMessage.contains("retired"), s"${ax.name}: $e2")
     }
-    assert(e2.getMessage.contains("retired"), e2.getMessage)
   }
 
   test("a replayed EMPTY stream batch mints no phantom night: the " +
     "marker repair only fires for a dir that exists") {
     val idx = Files.createTempDirectory("cph_idx").toString
     val root = Files.createTempDirectory("cph_root").toString
-    TextDedupOps.d24Build(spark, idx, docsDf(0L -> freshText("hb0w")))
+    DeltaAxis.Text.build(spark, idx, docsDf(0L -> freshText("hb0w")))
     // batch 3 recorded; a replay of EMPTY batch 2 is hwm-covered
     assert(graft.streaming.StoreDedup.nightBatch(spark, idx, root,
       docsDf(10L -> freshText("hu1w")).toDF(), "ph", 3L))
@@ -565,7 +583,7 @@ class CorpusSpec extends SparkSuite {
     "live night marker-only after delete + prune") {
     val idx = Files.createTempDirectory("ct_idx").toString
     val root = Files.createTempDirectory("ct_root").toString
-    TextDedupOps.d24Build(spark, idx, docsDf(0L -> freshText("tb0w")))
+    DeltaAxis.Text.build(spark, idx, docsDf(0L -> freshText("tb0w")))
     night(idx, root, "n1", 10L -> freshText("tu1w"))
     Corpus.deleteDocs(spark, root, Seq(10L))
     Corpus.pruneNights(spark, root)
@@ -586,10 +604,10 @@ class CorpusSpec extends SparkSuite {
     "silently dropped") {
     val idx = Files.createTempDirectory("ce2_idx").toString
     val root = Files.createTempDirectory("ce2_root").toString
-    TextDedupOps.d24Build(spark, idx, docsDf(0L -> freshText("eb0w")))
+    DeltaAxis.Text.build(spark, idx, docsDf(0L -> freshText("eb0w")))
     night(idx, root, "n1", 10L -> freshText("eu1w"))
     // a v2-pipeline night carries an extra column, written by hand
-    // through ShardWriter with its marker (the real p04Night would do
+    // through ShardWriter with its marker (the real text night would do
     // this the day the pipeline adds the column)
     ShardWriter.writeDocs(
       Seq((20L, "s0", freshText("eu2w"), "fr"))

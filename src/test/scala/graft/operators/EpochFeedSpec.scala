@@ -6,7 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.helium.SparkSuite
-import graft.queries.TextDedupOps
+import graft.queries.{DeltaAxis, TextDedupOps}
 
 /** The training feed's contracts: the tied multi-value prefix sum is
   * bit-identical to the naive (ord, tie) window; epoch positions are a
@@ -164,11 +164,11 @@ class EpochFeedSpec extends SparkSuite {
     def df(ids: Range, p: String) =
       ids.map(i => (i.toLong, "s" + (i % 2), text(s"$p$i")))
         .toDF("doc_id", "source", "text")
-    TextDedupOps.d24Build(spark, idx, df(0 until 6, "base"))
-    assert(TextDedupOps.p04Night(spark, idx, df(100 until 140, "na"),
-      root, "na").isDefined)
-    assert(TextDedupOps.p04Night(spark, idx, df(200 until 240, "nb"),
-      root, "nb").isDefined)
+    DeltaAxis.Text.build(spark, idx, df(0 until 6, "base"))
+    assert(DeltaAxis.Text.night(spark, idx, df(100 until 140, "na"),
+      "na", Some(root)).isDefined)
+    assert(DeltaAxis.Text.night(spark, idx, df(200 until 240, "nb"),
+      "nb", Some(root)).isDefined)
     graft.Pinned.releaseAll(spark)
 
     val served = Corpus.readCommitted(spark, root)
@@ -186,8 +186,8 @@ class EpochFeedSpec extends SparkSuite {
     val naOnly = Corpus.epochFeed(spark, root, 1, 4, Some(Seq("na")))
       .select("doc_id", "pos").as[(Long, Long)].collect().toMap
     assert(naOnly.keySet == (100L until 140L).toSet)
-    assert(TextDedupOps.p04Night(spark, idx, df(300 until 320, "nc"),
-      root, "nc").isDefined)
+    assert(DeltaAxis.Text.night(spark, idx, df(300 until 320, "nc"),
+      "nc", Some(root)).isDefined)
     graft.Pinned.releaseAll(spark)
     assert(Corpus.epochFeed(spark, root, 1, 4, Some(Seq("na")))
       .select("doc_id", "pos").as[(Long, Long)].collect().toMap == naOnly,
@@ -283,9 +283,9 @@ class EpochFeedSpec extends SparkSuite {
     def df(ids: Range, p: String) =
       ids.map(i => (i.toLong, "s" + (i % 2), text(s"$p$i")))
         .toDF("doc_id", "source", "text")
-    TextDedupOps.d24Build(spark, idx, df(0 until 4, "sb"))
-    assert(TextDedupOps.p04Night(spark, idx, df(500 until 700, "sn"),
-      root, "n1").isDefined)
+    DeltaAxis.Text.build(spark, idx, df(0 until 4, "sb"))
+    assert(DeltaAxis.Text.night(spark, idx, df(500 until 700, "sn"),
+      "n1", Some(root)).isDefined)
     graft.Pinned.releaseAll(spark)
     def rowsOf(split: String): Long = {
       val line = graft.Nightly.run(spark, Seq("text", "feed", root,
@@ -376,5 +376,42 @@ class EpochFeedSpec extends SparkSuite {
     val maxBytes = feed.map(_._4).max
     assert(perRank.values.max - perRank.values.min <= 2 * maxBytes + 1,
       s"media rank byte skew: $perRank")
+  }
+
+  test("a feed is refused while another writer holds the --out lease, " +
+    "and leaves the previous epoch artifact and its marker byte-identical") {
+    val idx = Files.createTempDirectory("ef_lidx").toString
+    val root = Files.createTempDirectory("ef_lroot").toString
+    val out = Files.createTempDirectory("ef_lout").toString
+    def text(p: String) = (0 until 40).map(i => s"$p$i").mkString(" ")
+    DeltaAxis.Text.build(spark, idx, (0 until 4).map(i =>
+      (i.toLong, "s0", text(s"lb$i"))).toDF("doc_id", "source", "text"))
+    assert(DeltaAxis.Text.night(spark, idx, (100 until 130).map(i =>
+      (i.toLong, "s" + (i % 2), text(s"ln$i"))).toDF("doc_id", "source",
+      "text"), "l1", Some(root)).isDefined)
+    graft.Pinned.releaseAll(spark)
+    def feed(readers: String) = graft.Nightly.run(spark, Seq("text", "feed",
+      root, "--epoch", "1", "--readers", readers, "--out", out))
+    feed("2")
+    import scala.jdk.CollectionConverters._
+    def state(): Map[String, Seq[Byte]] = {
+      val st = Files.walk(java.nio.file.Paths.get(s"$out/epoch=1"))
+      try st.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(p => p.toString -> Files.readAllBytes(p).toSeq).toMap
+      finally st.close()
+    }
+    val before = state()
+    assert(before.keys.exists(_.endsWith("_FEED_COMMITTED")))
+    // another writer holds a fresh lease on the --out root for the
+    // whole attempt: the feed must refuse before touching the epoch
+    val e = intercept[IllegalStateException] {
+      IndexGenerations.withLease(spark, out)(feed("3"))
+    }
+    assert(e.getMessage.contains("lease"), e.getMessage)
+    assert(state() == before, "a refused feed touched the epoch artifact")
+    // once the other writer is gone the same feed rewrites the epoch
+    assert(feed("3").contains("\"written\":true"))
+    assert(new String(Files.readAllBytes(java.nio.file.Paths.get(
+      s"$out/epoch=1/_FEED_COMMITTED")), "UTF-8").contains("readers=3"))
   }
 }

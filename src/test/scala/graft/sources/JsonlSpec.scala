@@ -69,7 +69,7 @@ class JsonlSpec extends SparkSuite {
     "fold, re-crawls of the base are kept out, broken lines filtered") {
     val idx = Files.createTempDirectory("jst_idx").toString
     val u0 = freshText("jsb0w")
-    graft.queries.TextDedupOps.d24Build(spark, idx,
+    graft.queries.DeltaAxis.Text.build(spark, idx,
       Seq((0L, "s0", u0), (1L, "s0", freshText("jsb1w")))
         .toDF("doc_id", "source", "text"))
     val drop = Files.createTempDirectory("jst_drop").toString

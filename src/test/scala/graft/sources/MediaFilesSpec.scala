@@ -42,7 +42,7 @@ class MediaFilesSpec extends SparkSuite {
     "a new name is judged exact and kept out") {
     val idx = Files.createTempDirectory("mf_idx").toString
     val u0 = freshText("mfb0w")
-    graft.queries.MultimodalOps.m12Build(spark, idx,
+    graft.queries.DeltaAxis.Media.build(spark, idx,
       Media.mediaFromDocuments(
         Seq((0L, u0, "en", "s0", u0.length.toLong),
           (3L, freshText("mfb1w"), "en", "s0", 40L))

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions.col
 import graft.Pinned
 import graft.helium.SparkSuite
 import graft.operators.IndexGenerations
-import graft.queries.TextDedupOps
+import graft.queries.DeltaAxis
 import StoreDedup._
 
 /** The stream↔store junction contract: the always-on ingest and the
@@ -34,7 +34,7 @@ class StoreDedupSpec extends SparkSuite {
     implicit val sqlCtx = spark.sqlContext
     val idx = Files.createTempDirectory("sd_idx").toString
     val ckpt = Files.createTempDirectory("sd_ckpt").toString
-    TextDedupOps.d24Build(spark, idx,
+    DeltaAxis.Text.build(spark, idx,
       docsDf((0L to 4L).map(i => i -> freshText(s"sb${i}w")): _*))
 
     val input = MemoryStream[IngestDoc]
@@ -59,7 +59,7 @@ class StoreDedupSpec extends SparkSuite {
 
     // the junction contract: tonight's batch loop judges a copy of the
     // stream-admitted doc EXACT against the advanced store
-    val v = TextDedupOps.d24Advance(spark, idx,
+    val v = DeltaAxis.Text.advance(spark, idx,
         docsDf(300L -> freshText("su1w"), 301L -> freshText("su3w")))
       .select("doc_id", "verdict", "winner")
       .as[(Long, String, Long)].collect()
@@ -74,7 +74,7 @@ class StoreDedupSpec extends SparkSuite {
     "previous deployment admitted, via the store bootstrap") {
     implicit val sqlCtx = spark.sqlContext
     val idx = Files.createTempDirectory("sd2_idx").toString
-    TextDedupOps.d24Build(spark, idx,
+    DeltaAxis.Text.build(spark, idx,
       docsDf((0L to 2L).map(i => i -> freshText(s"rb${i}q")): _*))
     val uX = freshText("ruXq")
 
@@ -107,7 +107,7 @@ class StoreDedupSpec extends SparkSuite {
     "a post-horizon re-arrival folds no duplicate index row") {
     implicit val sqlCtx = spark.sqlContext
     val idx = Files.createTempDirectory("sd3_idx").toString
-    TextDedupOps.d24Build(spark, idx, docsDf(0L -> freshText("tb0j")))
+    DeltaAxis.Text.build(spark, idx, docsDf(0L -> freshText("tb0j")))
     spark.conf.set("spark.graft.stream.indexCheck", "true")
     val in = MemoryStream[TimedIngestDoc]
     val q = ingestTimed(in.toDS(), idx,
@@ -143,7 +143,7 @@ class StoreDedupSpec extends SparkSuite {
   test("foldBatch is exactly-once: a replayed (streamId, batchId) is " +
     "skipped; a new deployment's batch 0 is not fooled by old records") {
     val idx = Files.createTempDirectory("sd4_idx").toString
-    TextDedupOps.d24Build(spark, idx, docsDf(0L -> freshText("xb0k")))
+    DeltaAxis.Text.build(spark, idx, docsDf(0L -> freshText("xb0k")))
     def admissionsOf(id: Long, p: String) =
       bandDocs(Seq(IngestDoc(id, "s", freshText(p))).toDS()).toDF()
         .withColumn("verdict", org.apache.spark.sql.functions.lit("unique"))
@@ -166,7 +166,7 @@ class StoreDedupSpec extends SparkSuite {
     "written under the pre-hwm name are read by the fold's replay " +
     "check, so the rename cannot double-fold a checkpoint replay") {
     val idx = Files.createTempDirectory("sd_leg_idx").toString
-    TextDedupOps.d24Build(spark, idx, docsDf(0L -> freshText("lb0k")))
+    DeltaAxis.Text.build(spark, idx, docsDf(0L -> freshText("lb0k")))
     def admissionsOf(id: Long, p: String) =
       bandDocs(Seq(IngestDoc(id, "s", freshText(p))).toDS()).toDF()
         .withColumn("verdict", org.apache.spark.sql.functions.lit("unique"))
@@ -196,7 +196,7 @@ class StoreDedupSpec extends SparkSuite {
     spark.conf.set("spark.graft.index.advanceMode", "delta")
     try {
       val idx = Files.createTempDirectory("sd7_idx").toString
-      TextDedupOps.d24Build(spark, idx, docsDf(0L -> freshText("cb0r")))
+      DeltaAxis.Text.build(spark, idx, docsDf(0L -> freshText("cb0r")))
       def admissionsOf(id: Long, p: String) =
         bandDocs(Seq(IngestDoc(id, "s", freshText(p))).toDS()).toDF()
           .withColumn("verdict", org.apache.spark.sql.functions.lit("unique"))
@@ -230,7 +230,7 @@ class StoreDedupSpec extends SparkSuite {
     spark.conf.set("spark.graft.index.maxDeltaChain", "2")
     try {
       val idx = Files.createTempDirectory("sd6_idx").toString
-      TextDedupOps.d24Build(spark, idx, docsDf(0L -> freshText("lb0n")))
+      DeltaAxis.Text.build(spark, idx, docsDf(0L -> freshText("lb0n")))
       val in = MemoryStream[IngestDoc]
       val q = ingest(in.toDS(), idx,
         Files.createTempDirectory("sd6_c").toString)
@@ -262,7 +262,7 @@ class StoreDedupSpec extends SparkSuite {
         "RocksDBStateStoreProvider")
     try {
       val idx = Files.createTempDirectory("sdr_idx").toString
-      TextDedupOps.d24Build(spark, idx,
+      DeltaAxis.Text.build(spark, idx,
         docsDf((0L to 2L).map(i => i -> freshText(s"rk${i}t")): _*))
       val uR = freshText("rkuRt")
       val in = MemoryStream[IngestDoc]
@@ -293,7 +293,7 @@ class StoreDedupSpec extends SparkSuite {
     try {
       val idx = Files.createTempDirectory("sd9_idx").toString
       val ckpt = Files.createTempDirectory("sd9_c").toString
-      TextDedupOps.d24Build(spark, idx, docsDf(0L -> freshText("ab0s")))
+      DeltaAxis.Text.build(spark, idx, docsDf(0L -> freshText("ab0s")))
       val in = MemoryStream[IngestDoc]
       val q = ingest(in.toDS(), idx, ckpt)
       try {
@@ -329,7 +329,7 @@ class StoreDedupSpec extends SparkSuite {
     "the per-batch verdict join leaks no pins") {
     implicit val sqlCtx = spark.sqlContext
     val idx = Files.createTempDirectory("sd8_idx").toString
-    TextDedupOps.d24Build(spark, idx,
+    DeltaAxis.Text.build(spark, idx,
       docsDf((0L to 2L).map(i => i -> freshText(s"bf${i}w")): _*))
     val uX = freshText("bfuXw")
     // a hydrated deployment folds uX, establishing the reference state
@@ -373,7 +373,7 @@ class StoreDedupSpec extends SparkSuite {
     "the nightly intra-delta rule applied at stream cadence") {
     implicit val sqlCtx = spark.sqlContext
     val idx = Files.createTempDirectory("sd5_idx").toString
-    TextDedupOps.d24Build(spark, idx, docsDf(0L -> freshText("ib0m")))
+    DeltaAxis.Text.build(spark, idx, docsDf(0L -> freshText("ib0m")))
     val in = MemoryStream[IngestDoc]
     val q = ingest(in.toDS(), idx,
       Files.createTempDirectory("sd5_c").toString)
@@ -396,7 +396,7 @@ class StoreDedupSpec extends SparkSuite {
     implicit val sqlCtx = spark.sqlContext
     val idx = Files.createTempDirectory("sn_idx").toString
     val corpus = Files.createTempDirectory("sn_corpus").toString
-    TextDedupOps.d24Build(spark, idx,
+    DeltaAxis.Text.build(spark, idx,
       docsDf((0L to 2L).map(i => i -> freshText(s"nb${i}v")): _*))
 
     val in = MemoryStream[IngestDoc]

@@ -8,11 +8,11 @@ import graft.Pinned
 import graft.helium.SparkSuite
 import graft.multimodal.Media
 import graft.operators.IndexGenerations
-import graft.queries.MultimodalOps
+import graft.queries.DeltaAxis
 
 /** The media stream↔store junction ([[StoreMediaDedup]]): ingest-time
   * admissions against the m12 fingerprint index, stream uniques folded
-  * so the nightly m12Advance catches their re-uploads. Fixtures follow
+  * so the nightly media advance catches their re-uploads. Fixtures follow
   * the m12 perceptual-distinctness discipline: visually distinct
   * payload families (different letters, lengths, shapes), because
   * same-shape token families render within the phash near threshold. */
@@ -37,7 +37,7 @@ class StoreMediaDedupSpec extends SparkSuite {
     "nightly advance judges a re-upload exact; index dups fold nothing") {
     implicit val sqlCtx = spark.sqlContext
     val idx = Files.createTempDirectory("smd_idx").toString
-    MultimodalOps.m12Build(spark, idx,
+    DeltaAxis.Media.build(spark, idx,
       mediaOf((0L to 5L).map(i => i -> freshText(s"smb${i}w")): _*))
 
     val uniquePayload = (0 until 9).map(i => s"QQQQQQQ$i RR").mkString(" | ")
@@ -65,7 +65,7 @@ class StoreMediaDedupSpec extends SparkSuite {
 
     // tonight's batch loop: a re-upload of the stream-admitted asset is
     // exact against the advanced store
-    val v = MultimodalOps.m12Advance(spark, idx,
+    val v = DeltaAxis.Media.advance(spark, idx,
         mediaOf(106L -> uniquePayload))
       .select("media_id", "verdict", "winner")
       .as[(Long, String, Long)].collect()
@@ -79,7 +79,7 @@ class StoreMediaDedupSpec extends SparkSuite {
     "fingerprint; replayed batches are skipped") {
     implicit val sqlCtx = spark.sqlContext
     val idx = Files.createTempDirectory("smd2_idx").toString
-    MultimodalOps.m12Build(spark, idx,
+    DeltaAxis.Media.build(spark, idx,
       mediaOf(0L -> freshText("smc0k")))
     val t = (0 until 11).map(i => s"TTTTTTT$i SS").mkString(" | ")
     val in = MemoryStream[Media.MediaRecord]
@@ -109,7 +109,7 @@ class StoreMediaDedupSpec extends SparkSuite {
     "fingerprint row") {
     implicit val sqlCtx = spark.sqlContext
     val idx = Files.createTempDirectory("smd3_idx").toString
-    MultimodalOps.m12Build(spark, idx, mediaOf(0L -> freshText("smt0j")))
+    DeltaAxis.Media.build(spark, idx, mediaOf(0L -> freshText("smt0j")))
     spark.conf.set("spark.graft.stream.indexCheck", "true")
     // keep event times well above epoch 0: the initial watermark IS 0,
     // and a first-batch row at exactly the watermark is dropped late
@@ -158,7 +158,7 @@ class StoreMediaDedupSpec extends SparkSuite {
     implicit val sqlCtx = spark.sqlContext
     val idx = Files.createTempDirectory("smn_idx").toString
     val corpus = Files.createTempDirectory("smn_corpus").toString
-    MultimodalOps.m12Build(spark, idx,
+    DeltaAxis.Media.build(spark, idx,
       mediaOf((0L to 5L).map(i => i -> freshText(s"snb${i}w")): _*))
 
     // distinct SHAPES, not just distinct letters — same-shape families

@@ -7,12 +7,12 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.Pinned
 import graft.helium.SparkSuite
 import graft.operators.IndexGenerations
-import graft.queries.SimilarityOps
+import graft.queries.DeltaAxis
 import StoreVecDedup._
 
 /** The vector stream↔store junction ([[StoreVecDedup]]) — the third
   * axis of the bridge triad: ingest-time semantic dedup against the s24
-  * index, stream uniques folded so the nightly s24Advance catches their
+  * index, stream uniques folded so the nightly vec advance catches their
   * re-embeddings. Fixtures: 64-dim one-hots (pairwise cosine 0), dups
   * as copies/perturbations (cosine ≈ 1). */
 class StoreVecDedupSpec extends SparkSuite {
@@ -40,7 +40,7 @@ class StoreVecDedupSpec extends SparkSuite {
     "advance judges a re-embedding near") {
     implicit val sqlCtx = spark.sqlContext
     val idx = Files.createTempDirectory("svd_idx").toString
-    SimilarityOps.s24Build(spark, idx,
+    DeltaAxis.Vec.build(spark, idx,
       emb((0L to 3L).map(i => i -> oneHot(i.toInt)): _*))
     val in = MemoryStream[VecRecord]
     val q = ingest(in.toDS(), idx,
@@ -61,7 +61,7 @@ class StoreVecDedupSpec extends SparkSuite {
         "a within-stream vector dup must not fold")
     } finally q.stop()
     // the junction contract on this axis
-    val v = SimilarityOps.s24Advance(spark, idx,
+    val v = DeltaAxis.Vec.advance(spark, idx,
         emb(100L -> oneHot(30), 101L -> oneHot(40)))
       .select("vec_id", "verdict", "winner")
       .as[(Long, String, Long)].collect()
@@ -76,7 +76,7 @@ class StoreVecDedupSpec extends SparkSuite {
     "survivor only; replayed (streamId, batchId) folds are skipped") {
     implicit val sqlCtx = spark.sqlContext
     val idx = Files.createTempDirectory("svd2_idx").toString
-    SimilarityOps.s24Build(spark, idx, emb(0L -> oneHot(0)))
+    DeltaAxis.Vec.build(spark, idx, emb(0L -> oneHot(0)))
     val in = MemoryStream[VecRecord]
     val q = ingest(in.toDS(), idx,
       Files.createTempDirectory("svd2_c").toString)
@@ -103,7 +103,7 @@ class StoreVecDedupSpec extends SparkSuite {
     "directions still fold") {
     implicit val sqlCtx = spark.sqlContext
     val idx = Files.createTempDirectory("svd3_idx").toString
-    SimilarityOps.s24Build(spark, idx,
+    DeltaAxis.Vec.build(spark, idx,
       emb((0L to 2L).map(i => i -> oneHot(i.toInt)): _*))
     spark.conf.set("spark.graft.stream.bootstrap", "false")
     try {
@@ -128,7 +128,7 @@ class StoreVecDedupSpec extends SparkSuite {
     "bootstrap re-catch survives a redeploy") {
     implicit val sqlCtx = spark.sqlContext
     val idx = Files.createTempDirectory("svd4_idx").toString
-    SimilarityOps.s24Build(spark, idx, emb(0L -> oneHot(0)))
+    DeltaAxis.Vec.build(spark, idx, emb(0L -> oneHot(0)))
     def ts(sec: Long) = new java.sql.Timestamp((100000L + sec) * 1000L)
     val in = MemoryStream[TimedVecRecord]
     val q = ingestTimed(in.toDS(), idx,
@@ -149,7 +149,7 @@ class StoreVecDedupSpec extends SparkSuite {
       // min-id verdict discipline keeps the duplicate row harmless
       in.addData(TimedVecRecord(13L, oneHot(22), ts(602)))
       q.processAllAvailable()
-      val v = SimilarityOps.s24Advance(spark, idx, emb(99L -> oneHot(22)))
+      val v = DeltaAxis.Vec.advance(spark, idx, emb(99L -> oneHot(22)))
         .select("vec_id", "verdict", "winner")
         .as[(Long, String, Long)].collect().head
       Pinned.releaseAll(spark)

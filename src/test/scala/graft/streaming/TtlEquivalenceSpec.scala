@@ -9,7 +9,7 @@ import org.apache.spark.sql.streaming.OutputMode
 import graft.helium.SparkSuite
 import graft.multimodal.Media.MediaRecord
 import graft.operators.IndexGenerations
-import graft.queries.SimilarityOps
+import graft.queries.DeltaAxis
 import IncrementalDedup._
 
 /** TTL is a parameter of one state kernel, not a second detector: on an
@@ -147,7 +147,7 @@ class TtlEquivalenceSpec extends SparkSuite {
     def folded(timed: Boolean): Set[Long] = {
       implicit val sqlCtx = spark.sqlContext
       val idx = Files.createTempDirectory("eq_store_idx").toString
-      SimilarityOps.s24Build(spark, idx, (0L to 3L)
+      DeltaAxis.Vec.build(spark, idx, (0L to 3L)
         .map(i => (i, oneHot(i.toInt), i % 7)).toDF("vec_id", "embedding", "label"))
       val ckpt = Files.createTempDirectory("eq_store_c").toString
       def run[T](in: MemoryStream[T], q: org.apache.spark.sql.streaming.StreamingQuery,
