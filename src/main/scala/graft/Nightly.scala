@@ -101,6 +101,15 @@ object Nightly {
     * write — instead of erroring. */
   private val BoolFlags = Set("--prune", "--materialize", "--clean-lines")
 
+  /** `v`, the value of numeric flag `flag`, parsed by `parse`; a value
+    * that does not parse fails naming the flag and the value, instead of
+    * a bare NumberFormatException that names neither. */
+  private def numFlag[T](flag: String, v: String)(parse: String => T): T =
+    try parse(v.trim)
+    catch { case _: NumberFormatException =>
+      throw new IllegalArgumentException(
+        s"$flag: '$v' is not a valid whole number\n$Usage") }
+
   /** Execute one command; returns the JSON summary line (also the
     * spec-assertable result). */
   def run(s: SparkSession, args: Seq[String]): String = {
@@ -331,7 +340,7 @@ object Nightly {
         val ids = rest.sliding(2)
           .collectFirst { case Seq("--ids", v) => v }
           .getOrElse(sys.error("retract requires --ids <id,...>\n" + Usage))
-          .split(",").map(_.trim.toLong).toSeq
+          .split(",").map(numFlag("--ids", _)(_.toLong)).toSeq
         val idCol = ax.idCol
         val colId = org.apache.spark.sql.functions.col(idCol)
         val liveIdx = IndexGenerations.readCurrent(s, indexDir)
@@ -423,7 +432,7 @@ object Nightly {
         // no join-back. Without --out it is a dry-run balance report.
         val idc = corpusCols._1
         def intFlag(name: String): Int = rest.sliding(2)
-          .collectFirst { case Seq(`name`, v) => v.toInt }
+          .collectFirst { case Seq(`name`, v) => numFlag(name, v)(_.toInt) }
           .getOrElse(sys.error(s"feed requires $name <n>\n$Usage"))
         val epoch = intFlag("--epoch")
         val readers = intFlag("--readers")
@@ -432,13 +441,18 @@ object Nightly {
           .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
         val outFlag = rest.sliding(2)
           .collectFirst { case Seq("--out", v) => v }
-        val rates = rest.sliding(2)
-          .collectFirst { case Seq("--rates", v) => v }
-          .map(_.split(",").map(_.trim).filter(_.nonEmpty).map { kv =>
-            val i = kv.lastIndexOf('=')
-            require(i > 0, s"bad --rates entry '$kv' (want source=pm)")
-            kv.take(i) -> kv.drop(i + 1).toLong
-          }.toMap)
+        // --rates src=pm,... and --budgets src=n,... (below): per-source
+        // whole numbers, both validated here before anything is read
+        def perSource(name: String, unit: String): Option[Map[String, Long]] =
+          rest.sliding(2)
+            .collectFirst { case Seq(`name`, v) => v }
+            .map(_.split(",").map(_.trim).filter(_.nonEmpty).map { kv =>
+              val i = kv.lastIndexOf('=')
+              require(i > 0, s"bad $name entry '$kv' (want source=$unit)")
+              kv.take(i) -> numFlag(name, kv.drop(i + 1))(_.toLong)
+            }.toMap)
+        val rates = perSource("--rates", "pm")
+        val budgets = perSource("--budgets", "n")
         val materialize = rest.contains("--materialize")
         require(!materialize || outFlag.isDefined,
           "--materialize requires --out\n" + Usage)
@@ -484,13 +498,6 @@ object Nightly {
         // narrow (id, source, weight) projection and rejoins as an
         // id-only semi-join, the same payload-free discipline as the
         // rank computation below.
-        val budgets = rest.sliding(2)
-          .collectFirst { case Seq("--budgets", v) => v }
-          .map(_.split(",").map(_.trim).filter(_.nonEmpty).map { kv =>
-            val i = kv.lastIndexOf('=')
-            require(i > 0, s"bad --budgets entry '$kv' (want source=n)")
-            kv.take(i) -> kv.drop(i + 1).toLong
-          }.toMap)
         val withTok = budgets.fold(withTok0) { bm =>
           val budgetCol = bm.foldLeft(lit(Long.MaxValue)) {
             case (acc, (src, n)) =>
@@ -579,7 +586,7 @@ object Nightly {
           .collectFirst { case Seq("--ids", v) => v }
           .getOrElse(sys.error(
             "delete-docs requires --ids <id,id,...>\n" + Usage))
-          .split(",").map(_.trim.toLong).toSeq
+          .split(",").map(numFlag("--ids", _)(_.toLong)).toSeq
         val replaced = operators.Corpus.deleteDocs(s, indexDir, ids,
           idCol = idc)
         line("metric" -> "\"shards_delete\"",

@@ -137,8 +137,10 @@ class ExactlyOnceSink(spark: SparkSession, root: String) extends Serializable {
     * transactions by (block, hash(type)) (the h03/h06 envelope queries
     * slice exactly by block window and type). Off-switch
     * `spark.graft.sink.zorder=false` for latency-critical micro-batches
-    * (the layout costs one 2-number agg + one range exchange per
-    * commit). Pruning asserted on real sink output in ZorderSinkSpec. */
+    * (the layout costs one fold over the batch's rows per table, plus a
+    * range sample and exchange once a table's batch exceeds
+    * [[graft.operators.Zorder.RowsPerRangePartition]] rows). Pruning
+    * asserted on real sink output in ZorderSinkSpec. */
   private def zorderOn: Boolean =
     graft.Conf.flag(spark, "spark.graft.sink.zorder", true)
 
@@ -149,25 +151,30 @@ class ExactlyOnceSink(spark: SparkSession, root: String) extends Serializable {
   private[helium] def writeBatch(df: DataFrame, table: String,
       key: Long): Unit = {
     val zkeys = if (zorderOn) ZorderKeys.get(table) else None
-    // The layout's min/max agg, its range sample and the parquet write
-    // each consume the batch plan; this persist makes them share one
-    // evaluation of THIS table's plan. It is per table, so it never
-    // covered work two tables share: the follower's payload fetch feeds
-    // both rewards and transactions, and Follower.start persists those
-    // payloads once per batch for that reason.
+    // The layout's fold, its range sample (large batches only) and the
+    // parquet write each consume the batch plan; this persist makes them
+    // share one evaluation of THIS table's plan, and the fold is the job
+    // that fills it. It is per table, so it never covered work two
+    // tables share: the follower's payload fetch feeds both rewards and
+    // transactions, and Follower.start persists those payloads once per
+    // batch for that reason.
     zkeys.foreach(_ => df.persist())
     try {
       val laid = zkeys match {
         case Some((a, b)) =>
           graft.operators.Zorder.layoutByRangeAndHash(df, a, b)
-        case None => df
+        case None => Some(df)
       }
-      laid.withColumn("batch_id", lit(key))
+      // an empty table batch (a tip batch carries no rewards) runs no
+      // write job: sweepStale already cleared its key, a dynamic
+      // overwrite of nothing would touch nothing, and markCommitted
+      // still makes its marker-only dir
+      laid.foreach(_.withColumn("batch_id", lit(key))
         .write
         .mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("batch_id")
-        .parquet(s"$root/$table")
+        .parquet(s"$root/$table"))
     } finally zkeys.foreach(_ => df.unpersist())
   }
 
@@ -212,7 +219,14 @@ class ExactlyOnceSink(spark: SparkSession, root: String) extends Serializable {
   /** Commit one batch: rewards (+ transactions in Full mode) then cursor.
     * `maxHeight` is the highest block height contained in the batch — both
     * the partition key and the cursor value after commit, exactly like
-    * `follower_info.height` after the reference's per-block txn. */
+    * `follower_info.height` after the reference's per-block txn.
+    *
+    * In Full mode the two tables' writes overlap
+    * ([[graft.operators.Overlap.both]]): they write disjoint directories
+    * and only read the batch's cached blocks and payloads. The markers
+    * still follow BOTH writes — `both` returns only once each leg has —
+    * so a failure in either leg leaves no marker and no cursor advance,
+    * and the batch replays in full. */
   def commit(out: Pipeline.Output, maxHeight: Long,
       firstBlock: Long): Unit = {
     // Cursor-loss guard: if the StateStore files are lost while data
@@ -248,8 +262,12 @@ class ExactlyOnceSink(spark: SparkSession, root: String) extends Serializable {
     val participants =
       Seq("rewards") ++ out.transactions.map(_ => "transactions")
     sweepStale(prev, maxHeight, participants)
-    writeBatch(out.rewards, "rewards", maxHeight)
-    out.transactions.foreach(writeBatch(_, "transactions", maxHeight))
+    out.transactions match {
+      case Some(txns) => graft.operators.Overlap.both(spark,
+        writeBatch(out.rewards, "rewards", maxHeight),
+        writeBatch(txns, "transactions", maxHeight))
+      case None => writeBatch(out.rewards, "rewards", maxHeight)
+    }
     // Batch-level commit record: stamped only once ALL tables' data for
     // this batch is on disk, then the cursor. A crash before the first
     // stamp replays the whole batch; a crash between stamps is benign —

@@ -1,9 +1,12 @@
 package graft.operators
 
-import java.util.concurrent.Executors
+import java.util.concurrent.{ExecutionException, ExecutorService, Executors,
+  TimeUnit}
 
 import scala.concurrent.duration._
-import scala.concurrent.{Await, ExecutionContext, Future}
+
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.SQLExecution
 
 /** Concurrent-action helper for composed pipelines — the "overlap
   * independent jobs" move: Spark's scheduler happily runs several jobs
@@ -23,12 +26,12 @@ import scala.concurrent.{Await, ExecutionContext, Future}
   */
 object Overlap {
 
-  private lazy val pool: ExecutionContext =
-    ExecutionContext.fromExecutor(Executors.newCachedThreadPool(r => {
+  private lazy val pool: ExecutorService =
+    Executors.newCachedThreadPool(r => {
       val t = new Thread(r, "graft-overlap")
       t.setDaemon(true)
       t
-    }))
+    })
 
   /** How long a failed foreground leg waits for the background leg. */
   private val DrainBound = 5.minutes
@@ -39,11 +42,28 @@ object Overlap {
     * `spark.graft.overlap=false` degrades to sequential evaluation
     * (a then b) for A/B measurement and contention triage. If `b` fails,
     * its exception is rethrown once `a` has finished, or after
-    * `drainBound` if `a` has not. */
-  def both[A, B](s: org.apache.spark.sql.SparkSession, a: => A, b: => B,
+    * `drainBound` if `a` has not; if only `a` fails, its exception is
+    * rethrown once `b` has finished.
+    *
+    * `a` runs with the caller's Spark thread-locals as they are at the
+    * call: its local properties (job group, job description, the
+    * streaming batch id, scheduler pool) and its active session. A
+    * pooled thread otherwise keeps whatever it inherited when it was
+    * created, so a stopped streaming query's job-group cancel would miss
+    * the background leg and its jobs would carry a stale description. */
+  def both[A, B](s: SparkSession, a: => A, b: => B,
       drainBound: Duration = DrainBound): (A, B) = {
     if (graft.Conf.flag(s, "spark.graft.overlap", true)) {
-      val fa = Future(a)(pool)
+      val caller = SparkSession.getActiveSession.getOrElse(s)
+      val fa = SQLExecution.withThreadLocalCaptured(
+        caller.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+        pool)(a)
+      def await(bound: Duration): A =
+        try
+          if (bound.isFinite) fa.get(bound.toNanos, TimeUnit.NANOSECONDS)
+          else fa.get()
+        catch { case e: ExecutionException if e.getCause != null =>
+          throw e.getCause }
       val rb =
         try b
         catch {
@@ -56,11 +76,11 @@ object Overlap {
             // something the failed leg was to produce) must not turn the
             // failure into a deadlock, so after `drainBound` the original
             // exception is rethrown anyway
-            try Await.result(fa, drainBound)
+            try await(drainBound)
             catch { case _: Throwable => () }
             throw t
         }
-      (Await.result(fa, Duration.Inf), rb)
+      (await(Duration.Inf), rb)
     } else (a, b)
   }
 }

@@ -18,11 +18,12 @@ import org.apache.spark.sql.functions._
   *
   * Built from plain Column bit-ops (codegen'd, no UDF): each key is
   * rank-normalized to `bits` via its value's position between the column
-  * min/max (a cheap driver-collected 2-number statistic), then bits are
+  * min/max (a driver-collected 2-number statistic), then bits are
   * interleaved. At 100 TB the same expression feeds
   * `df.repartitionByRange(col("zorder")).sortWithinPartitions("zorder")`
   * before the write — layout cost O(data log data), amortized over every
-  * subsequent pruned scan.
+  * subsequent pruned scan. A batch too small to need a split is sorted
+  * in one partition instead (see [[RowsPerRangePartition]]).
   */
 object Zorder {
 
@@ -55,6 +56,25 @@ object Zorder {
       lit(0L)), lit(maxV))
   }
 
+  /** Rows per range partition of [[layoutByRangeAndHash]]: a batch of
+    * n rows is split into min(partitions, ceil(n / 256)) z-ranges, so a
+    * tip-sized batch (tens of rows) is one coalesced, locally sorted
+    * partition — one file, no range-sample job, no exchange — while a
+    * large one still gets `partitions` files. Each z-range becomes one
+    * parquet file and, at these sizes, one row group, and block-window
+    * pruning needs several row groups per partition: a 1600-row batch
+    * must keep at least 4 (at most 400 rows per range). 256 is the
+    * largest power of two under that bound; the margin absorbs the range
+    * sample's imbalance, and 1600 rows split into 7 ranges. */
+  val RowsPerRangePartition = 256
+
+  /** The Morton code of (`keyA` normalized over [lo, hi], `keyB` hashed)
+    * that [[layoutByRangeAndHash]] orders rows by. */
+  private[graft] def rangeHashCode(keyA: String, lo: Long, hi: Long,
+      keyB: String, bits: Int = 12): Column =
+    morton(bits, normalize(col(keyA), lo, hi, bits),
+      pmod(xxhash64(col(keyB)), lit(1L << bits)))
+
   /** Re-layout (no write): range-partition + locally sort by the Morton
     * code of (rank-normalized long `keyA`, hashed `keyB`). `keyB` may be
     * any type — xxhash64 maps it uniformly onto the grid, so same-VALUE
@@ -62,19 +82,36 @@ object Zorder {
     * predicates on keyB cannot prune (hashing destroys order). This is
     * the rewards-sink layout: block is the range key (h04-style
     * block-window scans), gateway the hash key (per-gateway audits).
-    * Cost per write: one 2-number agg + one range exchange — amortized
-    * over every subsequent pruned scan of the table. */
+    *
+    * Everything the layout needs — the row count and `keyA`'s min/max —
+    * comes from one no-shuffle fold over `df`; persist `df` first, so
+    * that fold is also the job that fills the cache the write reads.
+    * None for an empty `df`: there is nothing to write. The split is
+    * sized by the row count ([[RowsPerRangePartition]]): one range means
+    * `coalesce(1)` + a local sort (no sample job, no exchange), more
+    * means one range sample + one range exchange. Amortized over every
+    * subsequent pruned scan of the table. */
   def layoutByRangeAndHash(df: DataFrame, keyA: String, keyB: String,
-      bits: Int = 12, partitions: Int = 8): DataFrame = {
-    val r = df.agg(min(col(keyA)), max(col(keyA))).head()
-    if (r.isNullAt(0)) return df // empty batch: nothing to order
-    val z = morton(bits,
-      normalize(col(keyA), r.getLong(0), r.getLong(1), bits),
-      pmod(xxhash64(col(keyB)), lit(1L << bits)))
-    df.withColumn("__z", z)
-      .repartitionByRange(partitions, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z")
+      bits: Int = 12, partitions: Int = 8): Option[DataFrame] = {
+    val (n, lo, hi) = df.select(col(keyA)).rdd
+      .map { r =>
+        if (r.isNullAt(0)) (1L, Long.MaxValue, Long.MinValue)
+        else { val v = r.getLong(0); (1L, v, v) }
+      }
+      .fold((0L, Long.MaxValue, Long.MinValue)) { (a, b) =>
+        (a._1 + b._1, math.min(a._2, b._2), math.max(a._3, b._3))
+      }
+    if (n == 0) None
+    else if (lo > hi) Some(df) // every key null: nothing to order by
+    else {
+      val ranges = math.min(partitions,
+        math.ceil(n.toDouble / RowsPerRangePartition).toInt)
+      val z = df.withColumn("__z", rangeHashCode(keyA, lo, hi, keyB, bits))
+      val split =
+        if (ranges <= 1) z.coalesce(1)
+        else z.repartitionByRange(ranges, col("__z"))
+      Some(split.sortWithinPartitions("__z").drop("__z"))
+    }
   }
 
   /** Write `df` z-ordered by two long-typed key columns: collect each

@@ -116,7 +116,8 @@ sealed abstract class DeltaAxis(
   /** The COMPLETE production night over one delta scan, exactly-once
     * per `nightId` on the night-id ledger ([[DeltaAxis.NightRecord]],
     * one namespace across all axes). With a corpus root (`shards`; the
-    * text axis requires one, vec has no corpus) the night's admitted
+    * text axis requires one, vec has no corpus and refuses one with an
+    * IllegalArgumentException) the night's admitted
     * rows also land as the `<shards>/night=<nightId>` partition — each
     * night its OWN partition, so a scheduler passing one constant root
     * every night ACCUMULATES increments; the partition and the index
@@ -166,8 +167,12 @@ sealed abstract class DeltaAxis(
         "namespace across all axes")
     require(shards.isDefined || !shardsRequired,
       s"a $name night requires --shards <dir>")
-    val nightDir = shards.filter(_ => corpusCols.isDefined)
-      .map(out => s"$out/night=$nightId")
+    // a root the axis cannot write to is refused, not dropped: the
+    // operator would otherwise get a night with no partition, silently
+    require(shards.isEmpty || corpusCols.isDefined,
+      s"the $name axis has no shard corpus: a $name night takes no " +
+        "--shards <dir>")
+    val nightDir = shards.map(out => s"$out/night=$nightId")
     def exists(p: Path): Boolean =
       p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)
     if (alreadyDone) {

@@ -347,6 +347,37 @@ class NightlySpec extends SparkSuite {
     assert(e.getMessage.contains("requires a value"), e.getMessage)
   }
 
+  /** A numeric flag given `bad` fails before anything is read, naming
+    * the flag and the value (no data exists under these roots). */
+  private def badNumber(flag: String, bad: String, args: String*): Unit = {
+    val e = intercept[IllegalArgumentException](Nightly.run(spark, args))
+    assert(e.getMessage.contains(flag) && e.getMessage.contains(s"'$bad'"),
+      e.getMessage)
+  }
+
+  test("feed's --epoch and --readers fail naming the flag and the value") {
+    val root = Files.createTempDirectory("nl_num_feed").toString
+    badNumber("--epoch", "one",
+      "text", "feed", root, "--epoch", "one", "--readers", "2")
+    badNumber("--readers", "2x",
+      "text", "feed", root, "--epoch", "1", "--readers", "2x")
+  }
+
+  test("--ids fails naming the flag and the value, on retract and " +
+    "delete-docs") {
+    val root = Files.createTempDirectory("nl_num_ids").toString
+    badNumber("--ids", "7a", "text", "retract", root, "--ids", "3,7a")
+    badNumber("--ids", "x", "media", "delete-docs", root, "--ids", "x")
+  }
+
+  test("--rates and --budgets values fail naming the flag and the value") {
+    val root = Files.createTempDirectory("nl_num_mix").toString
+    badNumber("--rates", "half", "text", "feed", root, "--epoch", "1",
+      "--readers", "2", "--rates", "src0=500,src1=half")
+    badNumber("--budgets", "1e3", "text", "feed", root, "--epoch", "1",
+      "--readers", "2", "--budgets", "src0=1e3")
+  }
+
   test("media night: the recorded advance is exactly-once per id — " +
     "rerun of a committed night is a no-op, and a later night still " +
     "catches the re-upload") {
@@ -445,6 +476,14 @@ class NightlySpec extends SparkSuite {
     assert(out0.contains("\"index_rows\":4") && out0.contains("\"gen\":0"),
       out0)
     val delta = embDir(10L -> 2, 11L -> 30) // a copy of base dir 2 + new
+    // a corpus root on the corpus-less axis is refused, not dropped —
+    // and refused before anything is recorded: the night below still runs
+    val refused = intercept[IllegalArgumentException] {
+      Nightly.run(spark, Seq("vec", "night", idx, delta, "--id", "vn1",
+        "--shards", Files.createTempDirectory("nl_vec_sh").toString))
+    }
+    assert(refused.getMessage.contains("--shards") &&
+      refused.getMessage.contains("vec"), refused.getMessage)
     val vdir = Files.createTempDirectory("nl_vec_v").toString
     val out1 = Nightly.run(spark,
       Seq("vec", "night", idx, delta, "--id", "vn1", "--verdicts", vdir))

@@ -663,29 +663,64 @@ class FollowerStreamSpec extends SparkSuite {
   }
 
   test("a failed Full-mode batch releases its cached blocks and payloads") {
-    val fixDir = tmpDir("fixtbad")
-    val root = tmpDir("rootbad")
-    copyFixture(fixDir)
-    // a malformed rewards_v2 body trips strictRewardsPayload mid-commit,
-    // after both the blocks and the payloads have been cached
-    val txns = Paths.get(fixDir, "txns.jsonl")
-    val lines = Files.readAllLines(txns).asScala.map { l =>
-      if (l.contains("\"r102\""))
-        """{"hash": "r102", "type": "rewards_v2", "fields": "not json"}"""
-      else l
-    }
-    Files.write(txns, lines.asJava)
-    new StateStore(spark, root).advance(IngestState(99, 100))
-    graft.Pinned.releaseAll(spark)
-    spark.catalog.clearCache()
+    // each input breaks one leg of the overlapped commit, after both the
+    // blocks and the payloads have been cached: (file, the line to
+    // replace, its broken form, the error the batch must die with)
+    val breaks = Seq(
+      // a malformed rewards_v2 body trips strictRewardsPayload in the
+      // rewards leg
+      ("txns.jsonl", "\"r102\"",
+        """{"hash": "r102", "type": "rewards_v2", "fields": "not json"}""",
+        "Error getting rewards txn: 'r102'"),
+      // a stub type outside transactionTypes trips validateTxnType in
+      // the transactions leg only
+      ("blocks.jsonl", "\"bh104\"",
+        """{"height": 104, "time": 1600000340, "hash": "bh104", """ +
+          """"transactions": [{"hash": "s1", "type": "bogus_v1"}]}""",
+        "invalid input value for enum transaction_type: \"bogus_v1\""))
+    breaks.foreach { case (file, line, broken, error) =>
+      val fixDir = tmpDir("fixtbad")
+      val root = tmpDir("rootbad")
+      copyFixture(fixDir)
+      val path = Paths.get(fixDir, file)
+      val good = Files.readAllLines(path)
+      Files.write(path, good.asScala.map { l =>
+        if (l.contains(line)) broken else l
+      }.asJava)
+      new StateStore(spark, root).advance(IngestState(99, 100))
+      graft.Pinned.releaseAll(spark)
+      spark.catalog.clearCache()
 
-    val q = Follower.start(spark, fixDir, root, EtlMode.Full)
-    val e = try intercept[StreamingQueryException] { q.processAllAvailable() }
-      finally q.stop()
-    assert(e.getMessage.contains("Error getting rewards txn: 'r102'"))
-    val left = spark.sparkContext.getPersistentRDDs.values.map(_.toString)
-    assert(left.isEmpty, s"the failed batch left cached RDDs: $left")
-    assert(new StateStore(spark, root).load().get.height == 99)
+      val q = Follower.start(spark, fixDir, root, EtlMode.Full)
+      val e = try intercept[StreamingQueryException] { q.processAllAvailable() }
+        finally q.stop()
+      assert(e.getMessage.contains(error), e.getMessage)
+      val left = spark.sparkContext.getPersistentRDDs.values.map(_.toString)
+      assert(left.isEmpty, s"the failed batch left cached RDDs: $left")
+      assert(new StateStore(spark, root).load().get.height == 99)
+      // neither leg's table may carry a commit record for the batch
+      val fs = new org.apache.hadoop.fs.Path(root)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val marked = Seq("rewards", "transactions").flatMap { t =>
+        Option(fs.globStatus(
+          new org.apache.hadoop.fs.Path(s"$root/$t/batch_id=*/_COMMITTED")))
+          .toSeq.flatten
+          .map(st => t -> st.getPath.getParent.getName.stripPrefix("batch_id=").toLong)
+      }
+      assert(!marked.exists(_._2 > 99), s"the failed batch left markers: $marked")
+
+      // repaired, the rerun replays the batch: each row exactly once
+      Files.write(path, good)
+      val q2 = Follower.start(spark, fixDir, root, EtlMode.Full)
+      try q2.processAllAvailable() finally q2.stop()
+      val sink = new ExactlyOnceSink(spark, root)
+      val rewards = sink.rewardsTable().drop("batch_id")
+      val txns = sink.transactionsTable().drop("batch_id")
+      // fixture: 3 rewards in block 100 and 2 in 102; 7 stubs in 100..105
+      assert(rewards.count() == 5 && rewards.distinct().count() == 5)
+      assert(txns.count() == 7 && txns.select("hash").distinct().count() == 7)
+      assert(new StateStore(spark, root).load().get.height == 105)
+    }
   }
 
   test("cursor is monotonic — backwards advance is refused") {

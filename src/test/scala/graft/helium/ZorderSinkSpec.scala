@@ -24,6 +24,25 @@ class ZorderSinkSpec extends SparkSuite {
     new scala.util.Random(42).shuffle(rows).toDF()
   }
 
+  private def dataFiles(dir: String): Seq[java.io.File] =
+    Option(new java.io.File(dir).listFiles()).toSeq.flatten
+      .filter(_.getName.endsWith(".parquet"))
+
+  /** A batch of fewer than [[Zorder.RowsPerRangePartition]] rows lands as
+    * exactly one data file, its rows in Morton order of (block,
+    * hash(`keyB`)) over the batch's own block range. */
+  private def assertOneZSortedFile(root: String, table: String,
+      keyB: String, key: Long, rows: Long): Unit = {
+    val files = dataFiles(s"$root/$table/batch_id=$key")
+    assert(files.size == 1, s"$rows rows wrote ${files.size} data files")
+    val stored = spark.read.parquet(files.head.getPath)
+    val (lo, hi) = stored.agg(min("block"), max("block")).as[(Long, Long)].head()
+    val zs = stored
+      .select(Zorder.rangeHashCode("block", lo, hi, keyB)).as[Long].collect()
+    assert(zs.length == rows && zs.toSeq == zs.sorted.toSeq,
+      s"the $table file is not in z order")
+  }
+
   private def survivors(groups: Seq[Map[String, (Long, Long)]],
       lo: Long, hi: Long): Int =
     groups.count { g => val (mn, mx) = g("block"); mx >= lo && mn <= hi }
@@ -59,6 +78,11 @@ class ZorderSinkSpec extends SparkSuite {
     val a = spark.read.parquet(s"$zRoot/rewards").drop("batch_id")
     val b = spark.read.parquet(s"$linRoot/rewards").drop("batch_id")
     assert(a.count() == 10000 && a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
+
+    // a tip-sized batch (blocks 0..3: 200 rows) is too small to split
+    val tip = syntheticRewards().filter(col("block") < 4).repartition(4)
+    new ExactlyOnceSink(spark, zRoot).writeBatch(tip, "rewards", 8L)
+    assertOneZSortedFile(zRoot, "rewards", "gateway", 8L, 200L)
   }
 
   // 200 blocks x 8 of the 34 txn types, deterministically shuffled —
@@ -114,5 +138,19 @@ class ZorderSinkSpec extends SparkSuite {
     val a = spark.read.parquet(s"$zRoot/transactions").drop("batch_id")
     val b = spark.read.parquet(s"$linRoot/transactions").drop("batch_id")
     assert(a.count() == 1600 && a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
+
+    // a committed tip-sized batch (blocks 0..9: 80 rows) beside an empty
+    // rewards batch: one z-sorted transactions file, and no rewards data
+    // file — the rewards partition is marker-only and reads as 0 rows
+    val tipRoot = tmpDir("ztip")
+    val sink = new ExactlyOnceSink(spark, tipRoot)
+    val noRewards = syntheticRewards().limit(0)
+    val tipTxns = syntheticTxns().filter(col("block") < 10).repartition(4)
+    sink.commit(Pipeline.Output(noRewards, Some(tipTxns)), 9L, 0L)
+    assertOneZSortedFile(tipRoot, "transactions", "type", 9L, 80L)
+    assert(dataFiles(s"$tipRoot/rewards/batch_id=9").isEmpty)
+    assert(new java.io.File(s"$tipRoot/rewards/batch_id=9/_COMMITTED").exists())
+    assert(sink.rewardsTable().filter(col("batch_id") === 9L).count() == 0L)
+    assert(sink.transactionsTable().count() == 80L)
   }
 }
